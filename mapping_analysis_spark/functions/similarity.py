@@ -30,11 +30,14 @@ prefix scale 0.1, max prefix 4).
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .local_sim import round_half_up
 from .text import padded_trigrams, simplify
 
 # ---------------------------------------------------------------------------
@@ -78,8 +81,6 @@ def cosine_hashed_sets(left_sorted: Column, right_sorted: Column) -> Column:
     same kernel the local merge re-check uses."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
-
-    from .local_sim import round_half_up
 
     @pandas_udf(T.DoubleType())
     def _cos(ls: pd.Series, rs: pd.Series) -> pd.Series:
@@ -383,10 +384,6 @@ def _round6_half_up(x: float) -> float:
     midpoint ON the ≥ 0.5 filter boundary would flip the pair set too. Same
     kernel as the block scorer's ``round_half_up_vec6`` fast path, with the
     Decimal fallback near the .5 tie."""
-    import math
-
-    from .local_sim import round_half_up
-
     y = x * 1e6
     if abs(y - math.floor(y) - 0.5) < 1e-6:
         return round_half_up(x, 6)

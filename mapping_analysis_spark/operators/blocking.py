@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.audio import N_MFCC
+
 # ---------------------------------------------------------------------------
 # Standard blocking
 # ---------------------------------------------------------------------------
@@ -276,27 +278,22 @@ def pair_intersection_counts(toks, lens, lo, hi):
 
 
 def fp_matrix(values, n: int):
-    """(n, dim) float64 fingerprint matrix + per-row norms from an iterable
-    of array<float> values (None / empty → zero row, norm 0 = invalid).
-    Shared by the block-local scorer and the LSH-extras pair UDF so both
-    paths compute BIT-IDENTICAL sims (same float64 cast, same einsum
-    reduction order) — required for the deterministic dropDuplicates over
-    their union. Returns (None, None) when no row is valid."""
-    import numpy as np
-
-    rows = []
-    idx = []
+    """(n, N_MFCC) float64 fingerprint matrix + per-row norms from an
+    iterable of array<float> values (None / empty / any length other than
+    the fixed MFCC dim → zero row, norm 0 = invalid). Shared by the
+    block-local scorer and the LSH-extras pair UDF so both paths compute
+    BIT-IDENTICAL sims (same float64 cast, same einsum reduction order,
+    same rows classified invalid whatever batch they arrive in) — required
+    for the deterministic dropDuplicates over their union. Returns
+    (None, None) when no row is valid."""
+    fpm = np.zeros((n, N_MFCC), dtype=np.float64)
+    valid = False
     for i, f in enumerate(values):
-        if f is not None and len(f):
-            idx.append(i)
-            rows.append(np.asarray(f, dtype=np.float64))
-    if not idx:
+        if f is not None and len(f) == N_MFCC:
+            fpm[i] = np.asarray(f, dtype=np.float64)
+            valid = True
+    if not valid:
         return None, None
-    dim = len(rows[0])
-    fpm = np.zeros((n, dim), dtype=np.float64)
-    for i, r in zip(idx, rows):
-        if len(r) == dim:
-            fpm[i] = r
     norms = np.sqrt(np.einsum("ij,ij->i", fpm, fpm))
     return fpm, norms
 

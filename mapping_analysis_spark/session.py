@@ -13,6 +13,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _ram_share(fraction: float, cap_gb: int) -> str:
+    """``fraction`` of the host's physical RAM as a JVM size, at most
+    ``cap_gb``."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(cap_gb * 1024, int(ram * fraction) >> 20)}m"
+
+
 def get_spark(
     app_name: str = "mapping_analysis_spark",
     cpus: int | None = None,
@@ -42,13 +49,15 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # AQE's coalescePartitions.parallelismFirst floors the coalesced
-        # partition count at default parallelism = the task-slot count, so
-        # post-shuffle stages ran as ~1.2 waves (19 tasks on 16 slots: one
-        # full wave + a 3-task tail that idles 13 cores). 4× slots keeps
-        # every coalesced stage at ≥3-4 balanced waves — same knob a real
-        # cluster turns for wave packing.
-        .config("spark.default.parallelism", str(4 * int(cpus)))
+        # spark.default.parallelism stays at Spark's own default: the slot
+        # count in local[N], total executor cores on a cluster. It floors
+        # ``util.parallel_grouped`` and AQE's coalesced partition count, and
+        # sets the file-scan split floor, so every Python-UDF stage (block
+        # scorer, per-component merge, MFCC fingerprint) runs as one wave on
+        # the slots. Each Python task carries a fixed ~0.35 s start-up
+        # charge (README "Python task floor"), so 4× slots cost 4× that
+        # charge per stage for no gain on small inputs. Runs that want a
+        # finer fan-out pass ``shuffle_partitions``.
         # AQE coalescing is size-based, but grouped-map pandas stages are
         # COMPUTE-heavy per byte: the per-component merge shuffle is ~4 MB
         # for tens of thousands of O(n²) local solves, and the default 1 MB
@@ -69,11 +78,14 @@ def get_spark(
         # narrow-row UDF stages
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         # local mode = ONE JVM hosting every task slot: the heap must be
-        # sized for cpus × per-task buffers. 16g with 32 binary-payload scan
-        # tasks GC-thrashed the whole stage (measured 6× slower than
-        # local[8]); 64g gives 32 slots ~2 GB each, matching a real
-        # executor's per-core budget
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
+        # sized for cpus × per-task buffers (16g with 32 binary-payload scan
+        # tasks GC-thrashed the whole stage), yet fit the host: a fixed 64g
+        # heap plus 32g off-heap let a 15 GB host's JVM grow until it ran
+        # out of RAM. A quarter of physical RAM, capped at 64g.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _ram_share(1 / 4, 64)),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # binary-payload scans (audio `bytes` ~0.1-0.6 MB/row) allocate
@@ -84,7 +96,11 @@ def get_spark(
         # batch; 1024 rows bounds in-flight memory to ~150 MB/task
         .config("spark.sql.columnVector.offheap.enabled", "true")
         .config("spark.memory.offHeap.enabled", "true")
-        .config("spark.memory.offHeap.size", os.environ.get("SPARK_OFFHEAP", "32g"))
+        # an eighth of physical RAM, capped at 32g
+        .config(
+            "spark.memory.offHeap.size",
+            os.environ.get("SPARK_OFFHEAP", _ram_share(1 / 8, 32)),
+        )
         .config("spark.sql.parquet.columnarReaderBatchSize", "1024")
     )
     for k, v in (extra_conf or {}).items():

@@ -239,24 +239,32 @@ class StreamingERJob:
         return self.spark.read.parquet(path)
 
     def _write_delta(
-        self, rows: DataFrame, tombstone_ids: DataFrame, batch_id: int
-    ) -> tuple[DataFrame, DataFrame]:
-        """Write this batch's state delta (uncommitted) and return the
-        (rows, removed) read-backs — the write doubles as the lineage cut
-        over the clustering plan, so downstream consumers (output sink,
-        counts, compaction) never re-execute it."""
+        self, rows: DataFrame, removed: DataFrame, batch_id: int
+    ) -> tuple[DataFrame, int, int]:
+        """Write this batch's delta rows (uncommitted) next to its
+        tombstones ``removed`` (the read-back of ``d=<batch_id>/removed``,
+        written before clustering) and return the rows read-back with the
+        delta's row and tombstone counts. The write doubles as the lineage
+        cut over the clustering plan, so downstream consumers (output sink,
+        compaction) never re-execute it. Counts come from the parquet
+        FOOTERS (driver-side metadata read, no Spark job) when the state dir
+        is driver-local; remote/URI state falls back to two tiny count
+        jobs."""
         droot = self.fs.join(self.cfg.state_dir, f"d={batch_id}")
-        self.fs.rmtree(droot)  # replay: half-written delta is discarded
-        removed = self._write_checked(
-            tombstone_ids, self.fs.join(droot, "removed")
-        )
-        return self._write_checked(rows, self.fs.join(droot, "rows")), removed
+        new_rows = self._write_checked(rows, self.fs.join(droot, "rows"))
+        n_new = _parquet_footer_rows(self.fs.join(droot, "rows"))
+        n_removed = _parquet_footer_rows(self.fs.join(droot, "removed"))
+        if n_new is None:
+            n_new = new_rows.count()
+        if n_removed is None:
+            n_removed = removed.count()
+        return new_rows, n_new, n_removed
 
     def _write_full(self, state: DataFrame, batch_id: int) -> None:
         """Compaction: write the fully reconstructed state (uncommitted)."""
         path = self.fs.join(self.cfg.state_dir, f"v={batch_id}")
         self.fs.rmtree(path)
-        state.write.mode("overwrite").parquet(path)
+        self._write_checked(state, path)
 
     def _verify_success_markers(self, batch_id: int, compacted: bool) -> None:
         """Fail LOUDLY at commit time if the data ``_SUCCESS`` markers that
@@ -478,6 +486,12 @@ class StreamingERJob:
                 )
                 state = state.withColumn("band_keys", band_expr)
                 index_rebuilt = True
+        # The affected ids are this delta's tombstones. Writing them once,
+        # as ``removed/``, runs the state reconstruct, both semi-joins and
+        # the arrivals' band-key UDF a single time; the working set then
+        # semi-joins the state against that small read-back.
+        droot = self.fs.join(self.cfg.state_dir, f"d={batch_id}")
+        self.fs.rmtree(droot)  # replay: half-written delta is discarded
         if state is not None:
             arr_keys = arrivals.select("blocking_key").distinct()
             arr_bands = (
@@ -490,44 +504,31 @@ class StreamingERJob:
                 .select("id")
             )
             touched_ids = by_key.unionByName(by_band).distinct()
-            touched = state.join(touched_ids, "id", "left_semi").drop("band_keys")
-            working = touched.unionByName(arrivals, allowMissingColumns=True)
         else:
-            touched_ids = None
-            working = arrivals
+            touched_ids = arrivals.select("id").limit(0)
+        removed = self._write_checked(touched_ids, self.fs.join(droot, "removed"))
+        working = arrivals
+        if state is not None:
+            touched = state.join(removed, "id", "left_semi").drop("band_keys")
+            working = touched.unionByName(arrivals, allowMissingColumns=True)
 
         # ---- cluster the working set: same decomposition + reciprocal-
         # best rounds as batch mode (cluster_rounds), so streaming output
         # converges to the batch result for the same input
         from ..operators.clustering import cluster_rounds
 
-        _phase("state-join-plan")
+        _phase("state-lookup+tombstone-write")
         clusters = cluster_rounds(working, rcfg)
         _phase("cluster-rounds(decomposition)")
         clusters_with_bands = clusters.withColumn("band_keys", band_expr)
-        # ---- delta state write: only this batch's updated clusters plus
-        # the tombstones of the state rows pulled into the working set —
-        # per-batch state I/O scales with the batch, never the corpus. The
-        # write doubles as the lineage cut over the clustering plan.
-        tomb = (
-            touched_ids
-            if touched_ids is not None
-            else arrivals.select("id").limit(0)
+        # ---- delta state write: only this batch's updated clusters next
+        # to the tombstones above — per-batch state writes scale with the
+        # batch. Cluster-count bookkeeping rides the commit markers:
+        # total' = total − |tombstones| + |new rows|.
+        new_rows, n_new, n_removed = self._write_delta(
+            clusters_with_bands, removed, batch_id
         )
-        new_rows, removed = self._write_delta(clusters_with_bands, tomb, batch_id)
         _phase("merge+delta-write")
-        # cluster-count bookkeeping rides the commit markers: total' =
-        # total − |tombstones| + |new rows|. Counts come from the
-        # just-written parquet FOOTERS (driver-side metadata read, no
-        # Spark job) when the state dir is driver-local; remote/URI state
-        # falls back to the two tiny count jobs.
-        droot = self.fs.join(self.cfg.state_dir, f"d={batch_id}")
-        n_new = _parquet_footer_rows(self.fs.join(droot, "rows"))
-        n_removed = _parquet_footer_rows(self.fs.join(droot, "removed"))
-        if n_new is None:
-            n_new = new_rows.count()
-        if n_removed is None:
-            n_removed = removed.count()
         prev_entries = [
             (b, k) for b, k in self._state_entries() if b < batch_id
         ]

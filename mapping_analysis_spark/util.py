@@ -81,10 +81,12 @@ def parallel_grouped(df: DataFrame, *keys: str, factor: int = 1) -> DataFrame:
     ClusteredDistribution requirement, so the planner inserts no second
     exchange — same shuffle count, restored parallelism.
 
-    ``n`` follows ``spark.sql.shuffle.partitions`` (the jobs set it to
-    4× cores, AQE-coalescible elsewhere), floored at the session's default
-    parallelism so a test session with few shuffle partitions still fans a
-    CPU-bound Python stage across all cores.
+    ``n`` is ``max(spark.sql.shuffle.partitions, defaultParallelism)``.
+    ``get_spark`` leaves default parallelism at the slot count, so by
+    default the stage runs as one wave of Python tasks on the slots (each
+    Python task has a fixed start-up charge, so more waves cost more on
+    small inputs); the scale jobs pass ``shuffle_partitions`` = 4× cores
+    for finer partitions under skew.
     """
     spark = df.sparkSession
     # ``factor`` > 1 is for NARROW, compute-heavy grouped stages with

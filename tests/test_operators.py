@@ -1017,6 +1017,109 @@ def test_parallel_grouped_factor(spark):
     assert a == sorted((i % 7, i) for i in range(100))
 
 
+def test_python_stages_run_one_wave_on_the_slots(spark):
+    """Python-UDF stages fan out to the task slots, not a multiple of them:
+    every Python task carries a fixed start-up charge, so on the test
+    session (4 slots, 4 shuffle partitions) the block scorer's and the
+    per-component merge's grouped maps each run as exactly 4 tasks."""
+    from mapping_analysis_spark.functions.similarity import trigram_set
+    from mapping_analysis_spark.operators.blocking import salted_block_pair_scores
+    from mapping_analysis_spark.operators.clustering import (
+        ClusterRoundConfig,
+        merge_components,
+    )
+
+    assert spark.sparkContext.defaultParallelism == 4
+    clusters = spark.createDataFrame(
+        [
+            (i, [i], 1 << (i % 4), f"sample text number {i // 5}", f"k{i % 6}", 1)
+            for i in range(60)
+        ],
+        "id long, members array<long>, sources_mask long, label string, "
+        "blocking_key string, n_members int",
+    )
+    scored = salted_block_pair_scores(
+        clusters.withColumn(
+            "_tg",
+            F.array_sort(
+                F.transform(trigram_set(F.col("label")), lambda t: F.xxhash64(t))
+            ),
+        ),
+        max_block_rows=16,
+    )
+    merged = merge_components(clusters, ClusterRoundConfig(use_audio=False))
+    assert scored.rdd.getNumPartitions() == 4
+    assert merged.rdd.getNumPartitions() == 4
+
+
+def test_mixed_length_fingerprints_score_identically_on_both_audio_paths(spark):
+    """A fingerprint whose length is not the MFCC dim is invalid (no vote)
+    on BOTH audio paths, whichever row a group or an Arrow batch happens
+    to start with: the in-group channel (``fp_col``) and the pair UDF
+    (``fp_pair_cosine``) give bit-identical ``sim_audio`` for every pair,
+    which the deterministic dropDuplicates over blocked ∪ LSH requires."""
+    import math
+
+    import numpy as np
+
+    from mapping_analysis_spark.functions.audio import N_MFCC
+    from mapping_analysis_spark.functions.similarity import trigram_set
+    from mapping_analysis_spark.operators.blocking import (
+        fp_pair_cosine,
+        salted_block_pair_scores,
+        salted_block_pairs,
+    )
+
+    rng = np.random.default_rng(5)
+    rows = []
+    for i in range(60):
+        dim = (N_MFCC - 1, N_MFCC + 1)[i % 2] if i % 3 == 0 else N_MFCC
+        fp = [float(np.float32(x)) for x in rng.normal(0, 1, dim)]
+        rows.append((i, f"k{i % 2}", 1 << (i % 4), f"sample text {i // 6}", fp))
+    df = spark.createDataFrame(
+        rows,
+        "id long, blocking_key string, sources_mask long, text string, "
+        "fp array<float>",
+    ).withColumn(
+        "_tg",
+        F.array_sort(F.transform(trigram_set(F.col("text")), lambda t: F.xxhash64(t))),
+    )
+
+    def norm(v):
+        return None if v is None or (isinstance(v, float) and math.isnan(v)) else v
+
+    got = {
+        (r.src, r.dst): norm(r.sim_audio)
+        for r in salted_block_pair_scores(
+            df, max_block_rows=64, max_sources=3, emit_min=None, fp_col="fp"
+        ).collect()
+    }
+    restrict = (
+        (F.col("l.sources_mask").bitwiseAND(F.col("r.sources_mask")) == 0)
+        & (
+            F.bit_count(F.col("l.sources_mask")) + F.bit_count(F.col("r.sources_mask"))
+            <= 3
+        )
+    )
+    udf = {
+        (r.src, r.dst): norm(r.udf)
+        for r in salted_block_pairs(
+            df, max_block_rows=64, restrict=restrict, payload_cols=["sources_mask", "fp"]
+        )
+        .select(
+            "src",
+            "dst",
+            fp_pair_cosine(F.col("src_fp"), F.col("dst_fp")).alias("udf"),
+        )
+        .collect()
+    }
+    assert set(got) == set(udf) and len(got) > 100
+    for (a, b), v in got.items():
+        assert v == udf[(a, b)], ((a, b), v, udf[(a, b)])
+        valid = a % 3 != 0 and b % 3 != 0
+        assert (v is not None) == valid, ((a, b), v)
+
+
 def test_block_local_audio_channel_matches_column_path(spark):
     """The in-group audio channel (``fp_col``) and the LSH-extras pair UDF
     (``fp_pair_cosine``) must both reproduce the ``fingerprint_cosine``

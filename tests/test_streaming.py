@@ -719,6 +719,52 @@ def test_truncated_snapshot_with_marker_is_recovered(spark, corpus, tmp_path):
     assert state_after == state_expected
 
 
+def test_empty_delta_plan_reads_back(spark, tmp_path, monkeypatch):
+    """A delta whose rows and tombstone plans are both empty must still
+    leave a schema-bearing part file in each dir — ``_write_checked``'s
+    empty-plan guard — or the committed chain cannot be reconstructed.
+    Spark 4.1's writer keeps an empty file for partition 0, but other
+    writers and committers leave only ``_SUCCESS`` for an empty plan; the
+    first write to each path here drops its empty part files to model
+    that, while a later write (the guard's single-task rewrite) lands
+    as written."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    written = set()
+    orig = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        orig(self, path, *args, **kwargs)
+        if path in written:
+            return
+        written.add(path)
+        for fn in os.listdir(path):
+            f = os.path.join(path, fn)
+            if fn.endswith(".parquet") and not pq.ParquetFile(f).metadata.num_rows:
+                os.remove(f)
+
+    work = str(tmp_path / "w")
+    job = StreamingERJob(
+        spark, StreamingERConfig(source_dir=str(tmp_path / "src"), work_dir=work)
+    )
+    snap_path = str(tmp_path / "snap")
+    spark.createDataFrame(
+        [(i, f"k{i % 2}") for i in range(6)], "id long, blocking_key string"
+    ).write.parquet(snap_path)
+    snap = spark.read.parquet(snap_path)
+    job._write_full(snap, 0)
+    job._commit_state(0, True, 6)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    empty = snap.filter(F.col("id") < 0).distinct()
+    droot = os.path.join(work, "state", "d=1")
+    job._write_checked(empty.select("id"), os.path.join(droot, "removed"))
+    job._write_checked(empty, os.path.join(droot, "rows"))
+    job._commit_state(1, False, 6)
+    assert job._state_entries() == [(0, "full"), (1, "delta")]
+    assert sorted(r.id for r in job._load_state(2).collect()) == list(range(6))
+
+
 def test_state_fs_copytree_contract(spark, tmp_path):
     """StateFS.copytree must publish a directory byte-identically on both
     implementations (POSIX hardlink path + Hadoop FileUtil.copy path)."""
