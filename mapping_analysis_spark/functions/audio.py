@@ -209,19 +209,6 @@ def mfcc_fingerprint(data: pd.Series, codec: pd.Series, sr: pd.Series) -> pd.Ser
     return pd.Series(out)
 
 
-@F.pandas_udf(T.IntegerType())
-def decoded_sample_count(data: pd.Series, codec: pd.Series) -> pd.Series:
-    """Cheap decode validation channel (used by lineage metrics/tests)."""
-    out = []
-    for b, c in zip(data, codec):
-        try:
-            pcm = decode_pcm_py(b, c)
-            out.append(len(pcm) if pcm is not None else None)
-        except (ValueError, NotImplementedError):
-            out.append(None)
-    return pd.Series(out, dtype="Int32")
-
-
 def fingerprint_cosine(left: Column, right: Column, scale: int = 6) -> Column:
     """Cosine similarity of two fingerprint array<float> columns — native
     Columns (zip_with dot product + aggregate norms), no Python."""

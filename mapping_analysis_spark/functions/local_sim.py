@@ -7,6 +7,7 @@ locally agree bit-for-bit."""
 
 from __future__ import annotations
 
+import math
 import re
 
 _PUNCT_RE = re.compile(r"[!-/:-@\[-`{-~]")  # Java \p{Punct} = ASCII punct
@@ -27,10 +28,39 @@ def trigram_set_local(s: str) -> frozenset[str]:
     return frozenset(padded[i : i + 3] for i in range(len(padded) - 2))
 
 
-def round_half_up(x: float, scale: int) -> float:
+def _round6_decimal(x: float) -> float:
     from decimal import ROUND_HALF_UP, Decimal
 
-    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale), ROUND_HALF_UP))
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+
+def round6(x: float) -> float:
+    """HALF_UP at 6dp, value-identical to ``F.round(_, 6)`` and DuckDB's
+    ``round``: the fast path is floor(x·1e6 + 0.5); within 1e-6 of the .5
+    tie the Decimal(repr(x)) kernel decides. Python's ``round`` is
+    half-to-even, so it would flip 6dp midpoints (and a midpoint on a
+    ≥ threshold filter flips the pair set). NaN passes through (a null
+    coordinate read through pandas arrives as NaN)."""
+    if x != x:
+        return x
+    y = x * 1e6
+    if abs(y - math.floor(y) - 0.5) < 1e-6:
+        return _round6_decimal(x)
+    return math.floor(y + 0.5) / 1e6
+
+
+def round6_vec(x):
+    """``round6`` over a float64 array; NaNs pass through."""
+    import numpy as np
+
+    with np.errstate(invalid="ignore"):
+        y = x * 1e6
+        out = np.floor(y + 0.5) / 1e6
+        near = np.abs(y - np.floor(y) - 0.5) < 1e-6
+    near &= ~np.isnan(x)
+    for t in np.flatnonzero(near):
+        out[t] = _round6_decimal(float(x[t]))
+    return np.where(np.isnan(x), np.nan, out)
 
 
 def cosine_trigram_local(a: str | None, b: str | None) -> float | None:
@@ -44,17 +74,12 @@ def cosine_trigram_local(a: str | None, b: str | None) -> float | None:
         return 1.0
     if not sa or not sb:
         return 0.0
-    inter = len(sa & sb)
-    import math
-
-    return round_half_up(inter / math.sqrt(len(sa) * len(sb)), 6)
+    return round6(len(sa & sb) / math.sqrt(len(sa) * len(sb)))
 
 
 def cosine_vec_local(a, b) -> float | None:
     """Cosine over two numeric vectors (fingerprints); None if either
     missing/zero."""
-    import math
-
     if a is None or b is None:
         return None
     dot = sum(x * y for x, y in zip(a, b))
@@ -62,7 +87,7 @@ def cosine_vec_local(a, b) -> float | None:
     nb = math.sqrt(sum(x * x for x in b))
     if na == 0 or nb == 0:
         return None
-    return round_half_up(dot / (na * nb), 6)
+    return round6(dot / (na * nb))
 
 
 def haversine_m_local(
@@ -70,8 +95,6 @@ def haversine_m_local(
 ) -> float:
     """Haversine meters, R = 6371 km — same formula shape as
     functions.similarity.haversine_m (GeoDistance.java:20-46)."""
-    import math
-
     dlat = math.radians(lat2 - lat1)
     dlon = math.radians(lon2 - lon1)
     a = math.sin(dlat / 2) * math.sin(dlat / 2) + math.cos(
@@ -97,7 +120,7 @@ def geo_sim_local(
     d = haversine_m_local(lat1, lon1, lat2, lon2)
     if d >= 150000.0:
         return 0.0
-    return round_half_up(1.0 - d / 150000.0, 6)
+    return round6(1.0 - d / 150000.0)
 
 
 def type_sim_local(a: set | frozenset | None, b: set | frozenset | None) -> float | None:
@@ -118,9 +141,10 @@ def type_sim_local(a: set | frozenset | None, b: set | frozenset | None) -> floa
     return 0.0
 
 
-def mean_agg_local(*sims: float | None, scale: int = 10) -> float | None:
-    """Mean over non-null channels (MeanAggregationFunction.java:26-49)."""
+def mean_agg_local(*sims: float | None) -> float | None:
+    """Mean over non-null channels, 6dp HALF_UP
+    (MeanAggregationFunction.java:26-49)."""
     present = [s for s in sims if s is not None]
     if not present:
         return None
-    return round_half_up(sum(present) / len(present), scale)
+    return round6(sum(present) / len(present))

@@ -15,7 +15,6 @@ SinglePropertySimilarity.java`` and ``SimCompUtils.java``:
 
 * year/length: diff 0 → 1.0, ±1 → 0.5, else 0.0 (SinglePropertySimilarity.java:124-164)
 * number: exact-equal → 1 else no vote; NC char repair s→5,l→1,z→2,o→0,q→4,g→9
-* language: equal → 1; both known-but-different → 0; unknown → no vote
 * geo: haversine (R=6371 km, GeoDistance.java:20-46), sim = 1 − d/150 km,
   0 beyond 150 km, 6dp HALF_UP (Utils.java:443-459)
 
@@ -30,14 +29,12 @@ prefix scale 0.1, max prefix 4).
 
 from __future__ import annotations
 
-import math
-
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .local_sim import round_half_up
+from .local_sim import round6
 from .text import padded_trigrams, simplify
 
 # ---------------------------------------------------------------------------
@@ -63,60 +60,6 @@ def cosine_trigram_from_sets(left_set: Column, right_set: Column) -> Column:
         F.when(denom == 0, F.lit(0.0)).otherwise(inter.cast("double") / denom)
     )
     return F.round(raw, 6)
-
-
-def cosine_hashed_sets(left_sorted: Column, right_sorted: Column) -> Column:
-    """Set-cosine over pre-SORTED hashed trigram arrays (array<long>),
-    Arrow-batched — the pair-scoring hot path.
-
-    Value-identical to ``cosine_trigram_from_sets`` on the same sets: the
-    JVM expression allocates a boxed hash set per pair (ArrayIntersect has
-    no codegen; measured ~110 µs/pair — 810 s of a 1165 s 16-core batch
-    run), while this computes the intersection by vectorized binary search
-    over per-record sorted arrays (~2-3 µs/pair) with near-zero allocation,
-    which is also what lets the stage scale past the shared-heap GC wall.
-    Rounding matches F.round's HALF_UP-on-shortest-repr exactly: the fast
-    path uses floor(x·1e6 + 0.5) and rows within 1e-6 of the .5 tie fall
-    back to the Decimal(repr(x)) kernel (local_sim.round_half_up), the
-    same kernel the local merge re-check uses."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.DoubleType())
-    def _cos(ls: pd.Series, rs: pd.Series) -> pd.Series:
-        out = np.empty(len(ls), dtype=np.float64)
-        mask_null = np.zeros(len(ls), dtype=bool)
-        for i, (a, b) in enumerate(zip(ls, rs)):
-            if a is None or b is None:
-                mask_null[i] = True
-                out[i] = 0.0
-                continue
-            na, nb = len(a), len(b)
-            if na == 0 and nb == 0:
-                out[i] = 1.0
-                continue
-            if na == 0 or nb == 0:
-                out[i] = 0.0
-                continue
-            ia = np.asarray(a, dtype=np.int64)
-            ib = np.asarray(b, dtype=np.int64)
-            if nb < na:
-                ia, ib = ib, ia
-            idx = np.searchsorted(ia, ib)
-            idx[idx == len(ia)] = 0
-            inter = int(np.count_nonzero(ia[idx] == ib))
-            x = inter / float(np.sqrt(na * nb))
-            y = x * 1e6
-            frac = y - np.floor(y)
-            if abs(frac - 0.5) < 1e-6:
-                out[i] = round_half_up(x, 6)
-            else:
-                out[i] = np.floor(y + 0.5) / 1e6
-        res = pd.Series(out)
-        res[mask_null] = None
-        return res
-
-    return _cos(left_sorted, right_sorted)
 
 
 def hashed_trigram_tokens(col: Column) -> Column:
@@ -205,19 +148,6 @@ def number_sim(left: Column, right: Column, nc_repair: bool = False) -> Column:
     )
 
 
-def language_sim(left: Column, right: Column) -> Column:
-    """equal→1; both known-but-different→0; any unknown → no vote
-    (SinglePropertySimilarity.java:216-237)."""
-    unknown = ("unknown", "no_or_minor_lang", "multiple")
-    known_l = left.isNotNull() & ~left.isin(*unknown)
-    known_r = right.isNotNull() & ~right.isin(*unknown)
-    return (
-        F.when(~(known_l & known_r), F.lit(None).cast("double"))
-        .when(left == right, 1.0)
-        .otherwise(0.0)
-    )
-
-
 def levenshtein_sim(left: Column, right: Column, max_len: int | None = None) -> Column:
     """Normalized Levenshtein similarity ``1 − dist / max(len_l, len_r)``,
     6dp HALF_UP; null when either side is null; 1.0 for two empty strings.
@@ -291,23 +221,6 @@ def mean_agg_sim(*sims: Column, scale: int = 10) -> Column:
     return F.when(n > 0, F.round(total / n, scale))
 
 
-def weighted_agg_sim(
-    sim_label: Column, sim_type: Column, sim_geo: Column
-) -> Column:
-    """Legacy weighted aggregation 0.45 label / 0.25 type / 0.3 geo with
-    weight renormalization over present channels
-    (SimilarityComputation.java:121-145)."""
-    weights = [(sim_label, 0.45), (sim_type, 0.25), (sim_geo, 0.3)]
-    num = None
-    den = None
-    for col, w in weights:
-        term = F.when(col.isNotNull(), col * w).otherwise(0.0)
-        wterm = F.when(col.isNotNull(), F.lit(w)).otherwise(0.0)
-        num = term if num is None else num + term
-        den = wterm if den is None else den + wterm
-    return F.when(den > 0, F.round(num / den, 10))
-
-
 # ---------------------------------------------------------------------------
 # Jaro-Winkler — Arrow pandas UDF (pure python core, vectorized transfer)
 # ---------------------------------------------------------------------------
@@ -376,26 +289,12 @@ def jaro_winkler_py(
     return jaro + prefix * prefix_scale * (1 - jaro)
 
 
-def _round6_half_up(x: float) -> float:
-    """Tie-guarded HALF_UP at 6dp. Python ``round`` is half-to-EVEN while
-    both Spark's ``F.round`` and DuckDB's ``round`` are half-up (half away
-    from zero; all sims here are ≥ 0), so a value landing on a 6dp midpoint
-    would round differently on the two sides of the oracle compare — and a
-    midpoint ON the ≥ 0.5 filter boundary would flip the pair set too. Same
-    kernel as the block scorer's ``round_half_up_vec6`` fast path, with the
-    Decimal fallback near the .5 tie."""
-    y = x * 1e6
-    if abs(y - math.floor(y) - 0.5) < 1e-6:
-        return round_half_up(x, 6)
-    return math.floor(y + 0.5) / 1e6
-
-
 @F.pandas_udf(T.DoubleType())
 def jaro_winkler(left: pd.Series, right: pd.Series) -> pd.Series:
     out = [
         None
         if pd.isna(a) or pd.isna(b)
-        else _round6_half_up(jaro_winkler_py(a, b))
+        else round6(jaro_winkler_py(a, b))
         for a, b in zip(left, right)
     ]
     return pd.Series(out, dtype="float64")

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.audio import N_MFCC
+from ..functions.local_sim import round6_vec
 
 # ---------------------------------------------------------------------------
 # Standard blocking
@@ -314,7 +315,7 @@ def fp_cosine_grid(fpm, norms, li, ri):
     denom = norms[li] * norms[ri]
     with np.errstate(invalid="ignore", divide="ignore"):
         sim = np.where(denom > 0, dot / denom, np.nan)
-    return round_half_up_vec6(sim)
+    return round6_vec(sim)
 
 
 def fp_pair_cosine(left: Column, right: Column) -> Column:
@@ -338,27 +339,6 @@ def fp_pair_cosine(left: Column, right: Column) -> Column:
         return pd.Series(fp_cosine_grid(fpm, norms, idx, idx + n))
 
     return _cos(left, right)
-
-
-def round_half_up_vec6(x):
-    """HALF_UP at 6dp, vectorized — matches ``F.round(_, 6)`` exactly: the
-    fast path uses floor(x·1e6 + 0.5); rows within 1e-6 of the .5 tie fall
-    back to the Decimal(repr(x)) kernel (``local_sim.round_half_up``), the
-    same kernel the local merge re-check uses. NaNs pass through."""
-    import numpy as np
-
-    from ..functions.local_sim import round_half_up
-
-    with np.errstate(invalid="ignore"):
-        y = x * 1e6
-        out = np.floor(y + 0.5) / 1e6
-        near = np.abs(y - np.floor(y) - 0.5) < 1e-6
-    near &= ~np.isnan(x)
-    if near.any():
-        for t in np.flatnonzero(near):
-            out[t] = round_half_up(float(x[t]), 6)
-    out = np.where(np.isnan(x), np.nan, out)
-    return out
 
 
 def minhash_signature(
@@ -598,7 +578,7 @@ def salted_block_pair_scores(
             with np.errstate(divide="ignore", invalid="ignore"):
                 x = np.where(denom > 0, inter / denom, 0.0)
             x = np.where((na == 0) & (nb == 0), 1.0, x)
-            sim = round_half_up_vec6(x)
+            sim = round6_vec(x)
         if emit is not None:
             keep = sim >= emit
             li, ri, sim = li[keep], ri[keep], sim[keep]

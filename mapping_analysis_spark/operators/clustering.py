@@ -1,36 +1,25 @@
-"""Iterative MAX_BOTH clustering — the engine's distributed clustering core.
+"""Batch clustering core: candidate components, then a per-component
+greedy merge.
 
-Re-creates the reference's agglomerative clustering semantics (the delta-
-iteration merge, merge/MergeExecution.java:139-297, and the incremental
-MAX_BOTH path, clusterstrategies/SourceAdditionClustering.java:62-191) as a
-driver loop of fully distributed DataFrame rounds:
+Re-creates the reference's agglomerative clustering (the delta-iteration
+merge, merge/MergeExecution.java:139-297, with DeltaIterateMergeMusicStep
+Function.java:45-163's music similarity and fusion) in two stages:
 
-  round: candidate pairs between current clusters (blocked, salted,
-         source-overlap + max-source restrictions
-         — CheckRestrictionsFilterFunction.java:27-50)
-       → pair similarity (trigram cosine + optional MFCC cosine, mean-agg)
-       → threshold ≥ min_sim
-       → MAX_BOTH reciprocal-best selection (MaxBothSelection.java:27-82)
-       → merge each matched pair: min id survives, union members, OR source
-         masks, keep the longer label, member-weighted mean fingerprint
-         (DualMergeMusicMapper.java:22-129)
-       → repeat until no pair survives.
+  1. decomposition (``candidate_components``): blocked pairs ∪ LSH pairs,
+     scored block-locally (trigram cosine + optional MFCC cosine,
+     mean-agg), source-overlap + max-source restrictions
+     (CheckRestrictionsFilterFunction.java:27-50), threshold ≥ min_sim,
+     the BasicLinkFilter best-link selection, then connected components;
+  2. merge (``merge_components``): per component (size-capped at
+     ``max_component_rows``, larger ones sub-grouped by blocking key), the
+     exact greedy fixpoint of ``merge.greedy_merge`` — max-sim pair first,
+     ties min small id / min big id, min id survives, union members, OR
+     source masks, keep the longer label, member-weighted mean fingerprint
+     (DualMergeMusicMapper.java:22-129).
 
-A cluster of k duplicates converges in ≤ ⌈log2 k⌉ + slack rounds (each
-round halves the cluster count along reciprocal-best chains); k ≤ #sources
-(duplicate-free sources), so ~3-4 rounds at 5 sources. Every round is a
-constant number of shuffles — no per-key Python fixpoint, so a hot blocking
-key never serializes onto one core (contrast: merge.merge_execution runs
-the exact greedy order per block for parity testing; this operator is the
-scale path).
-
-Difference vs the reference's greedy order: the reference merges ONE best
-pair per blocking key per superstep (DeltaIterateMergeMusicStepFunction
-.java:104-131); MAX_BOTH merges every reciprocal-best pair concurrently.
-Reciprocal-best pairs are exactly the pairs the greedy order would pick
-first within their neighborhoods, so results differ only on ties across
-overlapping neighborhoods — the reference itself ships MAX_BOTH as its
-recommended incremental selection (published F1 0.9336 baseline uses it).
+The reference confines every superstep of its delta iteration to one
+blocking key; with bounded groups the local fixpoint gives the same greedy
+order and costs one shuffle instead of #supersteps × 4.
 """
 
 from __future__ import annotations
@@ -45,8 +34,6 @@ from ..functions.similarity import (
     mean_agg_sim,
     trigram_set,
 )
-from .blocking import salted_block_pairs
-from .incremental import max_both_selection
 
 
 @dataclass
@@ -55,7 +42,6 @@ class ClusterRoundConfig:
     max_sources: int = 5
     max_block_rows: int = 256
     use_audio: bool = True
-    max_rounds: int = 8
     # round-0 LSH candidate union: catches pairs whose prefix blocking keys
     # diverged (typo in the first chars, dropped first token — the recall
     # gap of pure prefix blocking; the reference offers LSH_BLOCKING as an
@@ -85,7 +71,7 @@ class ClusterRoundConfig:
 
 def _cluster_state(prepared: DataFrame, use_audio: bool) -> DataFrame:
     """Singleton cluster per record: (id, members, sources_mask, label,
-    blocking_key, trigram_set[, fingerprint, n_members])."""
+    blocking_key, trigram_set, n_members[, fingerprint])."""
     cols = [
         F.col("id"),
         F.array(F.col("id")).alias("members"),
@@ -150,10 +136,6 @@ def _round_pairs(
     if use_audio:
         hashed_cols.append("fingerprint")
     hashed = clusters.select(*hashed_cols)
-    import os
-    import time
-
-    _t = time.time()
     # One block-local pass scores BOTH channels (round 5): the trigram
     # cosine is the cheap channel and bounds the reachable agg_sim — with
     # mean aggregation over two channels, a pair needs sim_text ≥
@@ -241,9 +223,6 @@ def _round_pairs(
             ["src", "dst"]
         )
     narrow = materialize(blocked_scored)
-    if os.environ.get("SPARK_GRAFT_DEBUG_BATCH"):
-        print(f"[rounds] score-pairs-narrow: {time.time() - _t:.1f}s", flush=True)
-    _t = time.time()
     if use_audio:
         # LSH extras skipped the emit_min bound — apply it here (blocked
         # rows already cleared it; null sim_text = no-vote passes through)
@@ -360,20 +339,7 @@ def candidate_components(state: DataFrame, cfg: ClusterRoundConfig) -> DataFrame
             rows_per_band=cfg.lsh_rows_per_band,
             seed=cfg.lsh_seed,
         )
-    import os
-    import time
-
-    _dbg = os.environ.get("SPARK_GRAFT_DEBUG_BATCH")
-    _t = time.time()
     pairs = _round_pairs(state, cfg, extra_pair_ids=extra)
-    if _dbg:
-        # attribution barrier only (debug runs): split the audio-scoring /
-        # payload-join cost of _round_pairs from the link filter + CC below
-        from ..util import materialize
-
-        pairs = materialize(pairs)
-        print(f"[rounds]   pairs-scored: {time.time() - _t:.1f}s", flush=True)
-        _t = time.time()
     if cfg.use_link_filter:
         # BasicLinkFilter (BasicLinkFilterFunction.java:46-79): an edge
         # survives only if it is the max-sim link of its src towards dst's
@@ -391,28 +357,19 @@ def candidate_components(state: DataFrame, cfg: ClusterRoundConfig) -> DataFrame
         )
     from .graph import connected_components
 
-    if _dbg:
-        pairs = materialize(pairs.select("src", "dst"))
-        _seg = "link-filter" if cfg.use_link_filter else "pairs-project"
-        print(f"[rounds]   {_seg}: {time.time() - _t:.1f}s", flush=True)
-        _t = time.time()
-    out = connected_components(
+    return connected_components(
         pairs.select("src", "dst"),
         vertices=state.select("id"),
         id_col="id",
         cc_col="cc",
     )
-    if _dbg:
-        out = materialize(out)
-        print(f"[rounds]   cc: {time.time() - _t:.1f}s", flush=True)
-    return out
 
 
 def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
-    """One-shot merge: per component group, run the exact local greedy
-    fixpoint (DeltaIterateMergeMusicStepFunction.java:45-163 semantics —
-    max-sim pair first, ties min small id / min big id, source-overlap and
-    max-source restrictions, attribute + fingerprint fusion).
+    """One-shot merge: per component group, run ``merge.greedy_merge``
+    with the music similarity and fusion (DeltaIterateMergeMusicStep
+    Function.java:45-163: trigram + MFCC cosine, longer label, member-
+    weighted mean fingerprint).
 
     The decomposition guardrail caps groups at max_component_rows, so the
     local O(n²) solve is bounded; the whole merge phase costs exactly ONE
@@ -426,13 +383,13 @@ def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
 
     from ..functions.local_sim import (
         _INSANE,
-        cosine_vec_local,
-        mean_agg_local,
-        round_half_up,
+        round6,
         simplify_local,
         trigram_set_local,
     )
     from pyspark.sql import types as T
+
+    from .merge import fuse_default, greedy_merge
 
     use_audio = cfg.use_audio and "fingerprint" in clusters.columns
     fields = [
@@ -453,16 +410,6 @@ def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
             return None
         return trigram_set_local(simplify_local(label))
 
-    def _round6(x: float) -> float:
-        # tie-guarded fast HALF_UP: floor(x·1e6 + 0.5) except within 1e-6
-        # of the .5 boundary, where the Decimal(repr(x)) kernel decides —
-        # value-identical to local_sim.round_half_up (same guard as the
-        # vectorized block scorer)
-        y = x * 1e6
-        if abs(y - math.floor(y) - 0.5) < 1e-6:
-            return round_half_up(x, 6)
-        return math.floor(y + 0.5) / 1e6
-
     audio_text_bound = 2.0 * threshold - 1.0 - 1e-6
 
     def sim_fn(a: dict, b: dict) -> float | None:
@@ -477,7 +424,7 @@ def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
             st = 0.0
         else:
             inter = len(sa_ & sb_)
-            st = _round6(inter / math.sqrt(len(sa_) * len(sb_)))
+            st = round6(inter / math.sqrt(len(sa_) * len(sb_)))
         if not use_audio:
             return st
         if st is not None and st < audio_text_bound:
@@ -492,18 +439,33 @@ def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
             for x_, y_ in zip(fa, fb):
                 dot += x_ * y_
             nrm = a["_fpn"] * b["_fpn"]
-            au = _round6(dot / nrm) if nrm > 0 else None
+            au = round6(dot / nrm) if nrm > 0 else None
         if st is None and au is None:
             return None
         if st is None:
             return au
         if au is None:
             return st
-        return _round6((st + au) / 2.0)
+        return round6((st + au) / 2.0)
+
+    def fuse_fn(keep: int, a: dict, b: dict) -> dict:
+        merged = fuse_default(keep, a, b)
+        la, lb = a.get("label") or "", b.get("label") or ""
+        merged["_tg"] = a["_tg"] if len(la) >= len(lb) else b["_tg"]
+        if use_audio:
+            na, nb = a["n_members"], b["n_members"]
+            fa, fb = a.get("fingerprint"), b.get("fingerprint")
+            if fa is None:
+                merged["fingerprint"], merged["_fpn"] = fb, b["_fpn"]
+            elif fb is not None:
+                fm = [(x * na + y * nb) / (na + nb) for x, y in zip(fa, fb)]
+                merged["fingerprint"] = fm
+                merged["_fpn"] = math.sqrt(sum(x_ * x_ for x_ in fm))
+        return merged
+
+    cols = [f.name for f in fields]
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        import heapq
-
         clusters_l: dict[int, dict] = {}
         for row in pdf.to_dict("records"):
             row["members"] = list(row["members"])
@@ -516,83 +478,15 @@ def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
                     row["_fpn"] = 0.0
             row["_tg"] = _tg(row.get("label"))
             clusters_l[row["id"]] = row
-
-        def valid(a: dict, b: dict) -> bool:
-            if a["sources_mask"] & b["sources_mask"]:
-                return False
-            return (
-                bin(a["sources_mask"]).count("1")
-                + bin(b["sources_mask"]).count("1")
-                <= max_sources
-            )
-
-        # lazy-deletion priority queue: entries are (-sim, a, b, ver_a,
-        # ver_b); heapq pops the smallest tuple = highest sim, then min a,
-        # then min b — the same total order as the previous max((sim, -a,
-        # -b)) scan, but O(log n) per op instead of a full dict rebuild
-        # per merge (which was O(pairs) × merges — the dominant cost on
-        # 512-row components).
-        ver: dict[int, int] = {i: 0 for i in clusters_l}
-        heap_l: list = []
-
-        def push(a: int, b: int, s: float) -> None:
-            heapq.heappush(heap_l, (-s, a, b, ver[a], ver[b]))
-
-        ids = sorted(clusters_l)
-        for i, a in enumerate(ids):
-            for b in ids[i + 1 :]:
-                if valid(clusters_l[a], clusters_l[b]):
-                    s = sim_fn(clusters_l[a], clusters_l[b])
-                    if s is not None and s >= threshold:
-                        push(a, b, s)
-        while heap_l:
-            negs, a, b, va, vb = heapq.heappop(heap_l)
-            if ver.get(a) != va or ver.get(b) != vb:
-                continue
-            ca, cb = clusters_l[a], clusters_l[b]
-            keep, drop = (a, b) if a < b else (b, a)
-            merged = dict(clusters_l[keep])
-            merged["members"] = sorted(ca["members"] + cb["members"])
-            merged["sources_mask"] = ca["sources_mask"] | cb["sources_mask"]
-            la, lb = ca.get("label") or "", cb.get("label") or ""
-            merged["label"] = la if len(la) >= len(lb) else lb
-            merged["_tg"] = ca["_tg"] if len(la) >= len(lb) else cb["_tg"]
-            na, nb = ca["n_members"], cb["n_members"]
-            merged["n_members"] = na + nb
-            if use_audio:
-                fa, fb = ca.get("fingerprint"), cb.get("fingerprint")
-                if fa is None:
-                    merged["fingerprint"] = fb
-                    merged["_fpn"] = cb["_fpn"]
-                elif fb is None:
-                    merged["fingerprint"] = fa
-                    merged["_fpn"] = ca["_fpn"]
-                else:
-                    fm = [(x * na + y * nb) / (na + nb) for x, y in zip(fa, fb)]
-                    merged["fingerprint"] = fm
-                    merged["_fpn"] = math.sqrt(sum(x_ * x_ for x_ in fm))
-            clusters_l[keep] = merged
-            del clusters_l[drop]
-            del ver[drop]
-            ver[keep] += 1
-            for other in clusters_l:
-                if other == keep:
-                    continue
-                if valid(merged, clusters_l[other]):
-                    s = sim_fn(merged, clusters_l[other])
-                    if s is not None and s >= threshold:
-                        push(min(keep, other), max(keep, other), s)
-        cols = [f.name for f in fields]
+        out = greedy_merge(clusters_l, threshold, max_sources, sim_fn, fuse_fn)
         return pd.DataFrame(
-            [{c: cl.get(c) for c in cols} for cl in clusters_l.values()],
-            columns=cols,
+            [{c: cl.get(c) for c in cols} for cl in out.values()], columns=cols
         )
 
-    keep_cols = [f.name for f in fields]
     from ..util import parallel_grouped
 
     return (
-        parallel_grouped(clusters.select(*keep_cols), "blocking_key")
+        parallel_grouped(clusters.select(*cols), "blocking_key")
         .groupBy("blocking_key")
         .applyInPandas(solve, schema=schema)
     )
@@ -611,21 +505,11 @@ def cluster_rounds(
     shuffle. The returned state's ``blocking_key`` is restored to the
     prefix key of the fused label (so streaming re-keying stays stable),
     and ``trigram_set`` is recomputed from the fused label."""
-    import os
-    import time
-
     from ..util import materialize
 
     cfg = cfg or ClusterRoundConfig()
-    _dbg = os.environ.get("SPARK_GRAFT_DEBUG_BATCH")
-    _t = time.time()
     clusters = materialize(state)
-    if _dbg:
-        print(f"[rounds] input-materialize: {time.time() - _t:.1f}s", flush=True)
-        _t = time.time()
     cc = candidate_components(clusters, cfg)
-    if _dbg:
-        print(f"[rounds] pairs+link-filter+cc: {time.time() - _t:.1f}s", flush=True)
     sizes = cc.groupBy("cc").agg(F.count(F.lit(1)).alias("_cc_n"))
     clusters = (
         clusters.join(cc, "id")
@@ -658,112 +542,9 @@ def cluster_rounds(
     ]
     singletons = clusters.filter(F.col("_cc_n") == 1).select(*keep_cols)
     multi = clusters.filter(F.col("_cc_n") > 1).drop("cc", "_cc_n")
-    if _dbg:
-        _t = time.time()
-        singletons = materialize(singletons)
-        multi = materialize(multi)
-        print(
-            f"[rounds] component-split: {time.time() - _t:.1f}s "
-            f"(multi {multi.count()}, single {singletons.count()})",
-            flush=True,
-        )
-        _t = time.time()
-    merged = merge_components(multi, cfg)
-    if _dbg:
-        merged = materialize(merged)
-        print(f"[rounds] merge-groups: {time.time() - _t:.1f}s", flush=True)
-        _t = time.time()
-    merged = merged.unionByName(singletons)
+    merged = merge_components(multi, cfg).unionByName(singletons)
     from ..functions.text import music_blocking_label
 
-    out = merged.withColumn(
+    return merged.withColumn(
         "blocking_key", music_blocking_label(F.col("label"), 4)
     ).withColumn("trigram_set", trigram_set(F.col("label")))
-    if _dbg:
-        # attribution barrier only: materialize the merged state so the
-        # merge phase's cost is visible separately from representatives
-        _t = time.time()
-        out = materialize(out)
-        print(f"[rounds] fuse-keys: {time.time() - _t:.1f}s", flush=True)
-    return out
-
-
-def distributed_merge_rounds(
-    state: DataFrame, cfg: ClusterRoundConfig | None = None
-) -> DataFrame:
-    """Alternative merge phase for UNCAPPED giant groups: iterative
-    reciprocal-best (MAX_BOTH) rounds, every round a fixed number of
-    shuffles (see module docstring). Used when merge groups can exceed
-    what a single task should hold; the default path (merge_components)
-    assumes the decomposition cap."""
-    from ..util import materialize
-
-    cfg = cfg or ClusterRoundConfig()
-    clusters = materialize(state)
-    # round 0 may union LSH candidates per the caller's config; rounds ≥ 1
-    # re-pair within blocking_key groups only (the workset), so the override
-    # below disables LSH there while `lsh_round0` keeps the caller's intent
-    lsh_round0 = cfg.use_lsh_round0
-    cfg = ClusterRoundConfig(**{**cfg.__dict__, "use_lsh_round0": False})
-    # Work-set pruning: any block holding a pair ≥ min_sim always yields at
-    # least one reciprocal-best match (the block's global max pair is
-    # reciprocal-best by definition), so a block with NO match this round
-    # can never match again — its clusters leave the iteration for good.
-    # This shrinks the per-round shuffles to the still-active blocks only
-    # (the delta-iteration workset semantics of MergeExecution.java:170-181).
-    finished: list = []
-    for rnd in range(cfg.max_rounds):
-        extra = None
-        if rnd == 0 and lsh_round0:
-            from .blocking import lsh_pairs
-
-            extra = lsh_pairs(
-                clusters,
-                trigram_col="trigram_set",
-                id_col="id",
-                bands=cfg.lsh_bands,
-                rows_per_band=cfg.lsh_rows_per_band,
-                seed=cfg.lsh_seed,
-            )
-        matches = materialize(
-            max_both_selection(
-                _round_pairs(clusters, cfg, extra_pair_ids=extra),
-                sim_col="agg_sim",
-            )
-        )
-        if matches.isEmpty():
-            break
-        # key set is usually small after round 1; AQE broadcasts it when so.
-        # A cluster leaves the workset iff its block is inactive AND it was
-        # not itself matched (an LSH cross-block match can pull a cluster
-        # out of an otherwise-inactive block).
-        active_keys = matches.select("blocking_key").distinct()
-        matched_ids = (
-            matches.select(F.col("src").alias("id"))
-            .unionByName(matches.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        inactive = clusters.join(active_keys, "blocking_key", "left_anti")
-        finished.append(inactive.join(matched_ids, "id", "left_anti"))
-        working = clusters.join(
-            active_keys, "blocking_key", "left_semi"
-        ).unionByName(inactive.join(matched_ids, "id", "left_semi"))
-        # fresh path per round: `finished` parts keep referencing earlier
-        # rounds' materialized state (rounds are bounded by max_rounds)
-        clusters = materialize(_merge_matches(working, matches, cfg))
-    for part in finished:
-        clusters = clusters.unionByName(part)
-    # restore a content-derived blocking key (component ids are run-local)
-    from ..functions.text import music_blocking_label
-
-    return clusters.withColumn(
-        "blocking_key", music_blocking_label(F.col("label"), 4)
-    )
-
-
-def iterative_max_both_clustering(
-    prepared: DataFrame, cfg: ClusterRoundConfig | None = None
-) -> DataFrame:
-    """Cluster prepared records end-to-end (see ``cluster_rounds``)."""
-    cfg = cfg or ClusterRoundConfig()
-    return cluster_rounds(_cluster_state(prepared, cfg.use_audio), cfg)

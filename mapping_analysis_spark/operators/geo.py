@@ -188,13 +188,10 @@ def geo_block_pair_scores(state: DataFrame, cfg: GeoConfig) -> DataFrame:
     (SHADING_TYPE_SIM == 1.0)."""
     import numpy as np
 
+    from ..functions.local_sim import round6_vec
     from ..functions.similarity import hashed_trigram_tokens
     from ..functions.types import NO_TYPE, _shaded, shading_generalize
-    from .blocking import (
-        cell_pair_grid,
-        pair_intersection_counts,
-        round_half_up_vec6,
-    )
+    from .blocking import cell_pair_grid, pair_intersection_counts
 
     def _hset(col):
         return F.array_sort(
@@ -305,7 +302,7 @@ def geo_block_pair_scores(state: DataFrame, cfg: GeoConfig) -> DataFrame:
         with np.errstate(divide="ignore", invalid="ignore"):
             x = np.where(denom > 0, inter / denom, 0.0)
         x = np.where((na == 0) & (nb == 0), 1.0, x)
-        sim_label = round_half_up_vec6(x)
+        sim_label = round6_vec(x)
         # channel 2: geo distance (haversine m, 150 km cut, NaN = no vote)
         lat = pdf["_lat"].to_numpy(dtype=np.float64, na_value=np.nan)
         lon = pdf["_lon"].to_numpy(dtype=np.float64, na_value=np.nan)
@@ -323,7 +320,7 @@ def geo_block_pair_scores(state: DataFrame, cfg: GeoConfig) -> DataFrame:
         ) * np.sin(dlon / 2) ** 2
         d = 6371.0 * 2 * np.arctan2(np.sqrt(h), np.sqrt(1 - h)) * 1000.0
         with np.errstate(invalid="ignore"):
-            g = np.where(d >= 150000.0, 0.0, round_half_up_vec6(1.0 - d / 150000.0))
+            g = np.where(d >= 150000.0, 0.0, round6_vec(1.0 - d / 150000.0))
         sim_geo = np.where(valid, g, np.nan)
         # channel 3: type sim (direct → 1.0; shaded → SHADING_TYPE_SIM=1.0;
         # typed non-overlapping → 0.0; untyped → no vote)
@@ -347,7 +344,7 @@ def geo_block_pair_scores(state: DataFrame, cfg: GeoConfig) -> DataFrame:
         with np.errstate(invalid="ignore"):
             total = np.nansum(chans, axis=0)
             agg = np.where(votes > 0, total / np.maximum(votes, 1), np.nan)
-        agg = round_half_up_vec6(agg)
+        agg = round6_vec(agg)
         with np.errstate(invalid="ignore"):
             keep = ~np.isnan(agg) & (agg >= min_sim)
         li, ri, agg = li[keep], ri[keep], agg[keep]
@@ -372,17 +369,17 @@ def geo_block_pair_scores(state: DataFrame, cfg: GeoConfig) -> DataFrame:
 
 
 def _merge_geo_block(pdf: pd.DataFrame, min_sim: float, max_sources: int) -> pd.DataFrame:
-    """Local greedy fixpoint for one component group — geo twin of
-    clustering.merge_components.solve (DeltaIterateGeographicMergeStep
-    semantics: max-sim pair first, ties min small id / min big id; fusion
-    per DualMergeGeographyMapper)."""
+    """``merge.greedy_merge`` over one component group with the geo
+    similarity and fusion (DeltaIterateGeographicMergeStep semantics;
+    fusion per DualMergeGeographyMapper)."""
     from ..functions.local_sim import (
-        _INSANE,
         cosine_trigram_local,
         geo_sim_local,
         mean_agg_local,
         type_sim_local,
     )
+    from ..functions.types import SHADING_GENERALIZATION
+    from .merge import fuse_default, greedy_merge
 
     clusters: dict[int, dict] = {}
     for row in pdf.to_dict("records"):
@@ -390,40 +387,22 @@ def _merge_geo_block(pdf: pd.DataFrame, min_sim: float, max_sources: int) -> pd.
         row["types"] = frozenset(row["types"]) if row.get("types") is not None else frozenset()
         clusters[row["id"]] = row
 
-    from ..functions.types import SHADING_GENERALIZATION
-
     def _gen(ts: frozenset) -> frozenset:
         return frozenset(SHADING_GENERALIZATION.get(t, t) for t in ts)
 
-    def valid(a: dict, b: dict) -> bool:
-        if a["sources_mask"] & b["sources_mask"]:
-            return False
-        if (
-            bin(a["sources_mask"]).count("1") + bin(b["sources_mask"]).count("1")
-            > max_sources
-        ):
-            return False
+    def sim(a: dict, b: dict) -> float | None:
+        # type-generalization restriction: two typed clusters whose
+        # generalized types are disjoint never pair
         ta, tb = a["types"], b["types"]
         untyped = not ta or not tb or "no_type" in ta or "no_type" in tb
-        return untyped or bool(_gen(ta) & _gen(tb))
-
-    def sim(a: dict, b: dict) -> float | None:
-        la, lb = a.get("label"), b.get("label")
-        sl = (
-            None
-            if la is None or lb is None or la in _INSANE or lb in _INSANE
-            else cosine_trigram_local(la, lb)
-        )
+        if not untyped and not _gen(ta) & _gen(tb):
+            return None
+        sl = cosine_trigram_local(a.get("label"), b.get("label"))
         sg = geo_sim_local(a.get("lat"), a.get("lon"), b.get("lat"), b.get("lon"))
-        st = type_sim_local(a["types"], b["types"])
-        return mean_agg_local(sl, sg, st, scale=6)
+        return mean_agg_local(sl, sg, type_sim_local(ta, tb))
 
     def fuse(keep: int, a: dict, b: dict) -> dict:
-        merged = dict(a if a["id"] == keep else b)
-        merged["members"] = sorted(a["members"] + b["members"])
-        merged["sources_mask"] = a["sources_mask"] | b["sources_mask"]
-        la, lb = a.get("label") or "", b.get("label") or ""
-        merged["label"] = la if len(la) >= len(lb) else lb
+        merged = fuse_default(keep, a, b)
         # coordinates: the one valid side wins; else the side holding the
         # lowest source bit (source-priority chain, DualMergeGeography
         # Mapper.java:68-79)
@@ -441,48 +420,9 @@ def _merge_geo_block(pdf: pd.DataFrame, min_sim: float, max_sources: int) -> pd.
         merged["types"] = (a["types"] | b["types"]) - {"no_type"} or frozenset(
             a["types"] | b["types"]
         )
-        merged["n_members"] = a["n_members"] + b["n_members"]
         return merged
 
-    # lazy-deletion priority queue (same pattern as the music merge,
-    # clustering.py solve): entries are (-sim, a, b, ver_a, ver_b); heapq
-    # pops the smallest tuple = highest sim, then min a, then min b — the
-    # identical total order to the previous max((sim, -a, -b)) dict scan,
-    # but O(log n) per op instead of an O(pairs) dict rebuild per merge
-    # (the dominant cost on 512-row components).
-    import heapq
-
-    ver: dict[int, int] = {i: 0 for i in clusters}
-    heap: list = []
-
-    def push(a: int, b: int, s: float) -> None:
-        heapq.heappush(heap, (-s, a, b, ver[a], ver[b]))
-
-    ids = sorted(clusters)
-    for i, x in enumerate(ids):
-        for y in ids[i + 1 :]:
-            if valid(clusters[x], clusters[y]):
-                s = sim(clusters[x], clusters[y])
-                if s is not None and s >= min_sim:
-                    push(x, y, s)
-    while heap:
-        _negs, x, y, vx, vy = heapq.heappop(heap)
-        if ver.get(x) != vx or ver.get(y) != vy:
-            continue
-        keep, drop = (x, y) if x < y else (y, x)
-        merged = fuse(keep, clusters[x], clusters[y])
-        merged["id"] = keep
-        clusters[keep] = merged
-        del clusters[drop]
-        del ver[drop]
-        ver[keep] += 1
-        for other in clusters:
-            if other == keep:
-                continue
-            if valid(merged, clusters[other]):
-                s = sim(merged, clusters[other])
-                if s is not None and s >= min_sim:
-                    push(min(keep, other), max(keep, other), s)
+    clusters = greedy_merge(clusters, min_sim, max_sources, sim, fuse)
     cols = [f.name for f in GEO_STATE_FIELDS]
     out = []
     for cl in clusters.values():

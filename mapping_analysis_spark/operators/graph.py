@@ -291,15 +291,6 @@ def connected_components(
     return labels
 
 
-def add_cc_ids(
-    vertices: DataFrame, edges: DataFrame, id_col: str = "id", cc_col: str = "cc_id"
-) -> DataFrame:
-    """ConnectedComponentIdAdder.java:33-43 — stamp ``cc_id`` onto every
-    vertex (isolated vertices become singletons)."""
-    cc = connected_components(edges, vertices, id_col=id_col, cc_col=cc_col)
-    return vertices.drop(cc_col).join(cc, id_col, "left")
-
-
 def intra_component_edges(
     vertices: DataFrame,
     key_col: str = "cc_id",
@@ -329,15 +320,3 @@ def intra_component_edges(
             & (F.col("src") < F.col("dst")),
         ).select("src", "dst")
     raise ValueError(f"unknown mode {mode!r}")
-
-
-def cluster_size_histogram(vertices: DataFrame, key_col: str = "cc_id") -> DataFrame:
-    """Cluster-size histogram (the reference tracks this with accumulators,
-    lsh/BlockReducer.java:28-36; Stats.java)."""
-    return (
-        vertices.groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("size"))
-        .groupBy("size")
-        .agg(F.count(F.lit(1)).alias("n_clusters"))
-        .orderBy("size")
-    )

@@ -22,15 +22,20 @@ pairs touching merged clusters whose source sets now overlap or whose
 combined source count exceeds the limit (CheckRestrictionsFilterFunction
 .java:27-50); recompute sims of surviving neighbor pairs against the merged
 cluster; repeat until no pair ≥ threshold remains.
+
+``greedy_merge`` is the engine's one copy of this fixpoint. The music
+merge (clustering.merge_components), the geo merge (geo._merge_geo_block)
+and the keyed-state stream (via ``greedy_merge_block``) plug in only their
+own similarity and fusion, as the reference's domains do.
 """
 
 from __future__ import annotations
 
+import heapq
 from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MERGE_RESULT_SCHEMA = T.StructType(
@@ -44,8 +49,76 @@ MERGE_RESULT_SCHEMA = T.StructType(
 )
 
 
-def _popcount(x: int) -> int:
-    return bin(x).count("1")
+def fuse_default(keep: int, a: dict, b: dict) -> dict:
+    """DualMergeMusicMapper.java:22-129 fusion of two clusters, ``a`` the
+    survivor (id ``keep``): union of members (sorted), OR of source masks,
+    the longer label (a tie goes to ``a``), summed ``n_members``."""
+    merged = dict(a)
+    merged["members"] = sorted(a["members"] + b["members"])
+    merged["sources_mask"] = a["sources_mask"] | b["sources_mask"]
+    la, lb = a.get("label") or "", b.get("label") or ""
+    merged["label"] = la if len(la) >= len(lb) else lb
+    merged["n_members"] = a["n_members"] + b["n_members"]
+    return merged
+
+
+def greedy_merge(
+    clusters: dict[int, dict],
+    threshold: float,
+    max_sources: int,
+    sim_fn: Callable[[dict, dict], float | None],
+    fuse_fn: Callable[[int, dict, dict], dict] = fuse_default,
+) -> dict[int, dict]:
+    """The greedy fixpoint over one group of clusters (id → cluster dict
+    with at least ``members``, ``sources_mask`` and ``n_members``, the
+    fields ``fuse_default`` reads), updated in place;
+    returns it with the surviving clusters in input order.
+
+    A pair is a candidate iff the source masks are disjoint, the combined
+    source count is ≤ ``max_sources`` and ``sim_fn`` returns a value
+    ≥ ``threshold`` (None = no vote, never merged). The highest-sim pair
+    merges first, ties to the smallest a, then the smallest b; the lower
+    id survives as ``fuse_fn(keep, a, b)`` (``a`` is the survivor), and
+    the merged cluster is re-paired against every remaining cluster.
+
+    Lazy-deletion heap: entries are (-sim, a, b, ver_a, ver_b), so heapq
+    pops exactly that order, and an entry whose versions are stale (a side
+    merged since the push) is skipped — O(log n) per merge instead of
+    rebuilding the pair set."""
+
+    def valid(a: dict, b: dict) -> bool:
+        ma, mb = a["sources_mask"], b["sources_mask"]
+        if ma & mb:
+            return False
+        return bin(ma).count("1") + bin(mb).count("1") <= max_sources
+
+    ver = {i: 0 for i in clusters}
+    heap: list = []
+
+    def push(a: int, b: int, ca: dict, cb: dict) -> None:
+        if valid(ca, cb):
+            s = sim_fn(ca, cb)
+            if s is not None and s >= threshold:
+                lo, hi = (a, b) if a < b else (b, a)
+                heapq.heappush(heap, (-s, lo, hi, ver[lo], ver[hi]))
+
+    ids = sorted(clusters)
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            push(a, b, clusters[a], clusters[b])
+    while heap:
+        _, a, b, va, vb = heapq.heappop(heap)
+        if ver.get(a) != va or ver.get(b) != vb:
+            continue
+        merged = fuse_fn(a, clusters[a], clusters[b])
+        merged["id"] = a
+        clusters[a] = merged
+        del clusters[b], ver[b]
+        ver[a] += 1
+        for other, co in clusters.items():
+            if other != a:
+                push(a, other, merged, co)
+    return clusters
 
 
 def greedy_merge_block(
@@ -54,78 +127,22 @@ def greedy_merge_block(
     max_sources: int,
     sim_fn: Callable[[dict, dict], float | None],
 ) -> pd.DataFrame:
-    """Local greedy fixpoint for one blocking key.
-
-    ``pdf`` columns: id, members (list[int]), sources_mask, label, and any
-    attribute columns ``sim_fn`` consumes; plus precomputed candidate pairs
-    are NOT passed — they are re-derived locally (block is small).
-
-    ``sim_fn(a, b)`` → similarity of two cluster dicts (None = no vote).
-    """
+    """``greedy_merge`` over one blocking key's rows (id, members,
+    sources_mask, label, blocking_key and any attribute columns ``sim_fn``
+    consumes) with the default fusion; candidate pairs are re-derived
+    locally (the block is small)."""
     clusters: dict[int, dict] = {}
     for row in pdf.to_dict("records"):
         row["members"] = list(row["members"])
+        row.setdefault("n_members", len(row["members"]))
         clusters[row["id"]] = row
-
-    def valid(a: dict, b: dict) -> bool:
-        if a["sources_mask"] & b["sources_mask"]:
-            return False
-        return (
-            _popcount(a["sources_mask"]) + _popcount(b["sources_mask"])
-            <= max_sources
-        )
-
-    # initial candidate pairs (i<j) with restrictions
-    ids = sorted(clusters)
-    heap: dict[tuple[int, int], float] = {}
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            if valid(clusters[a], clusters[b]):
-                s = sim_fn(clusters[a], clusters[b])
-                if s is not None and s >= threshold:
-                    heap[(a, b)] = s
-
-    while heap:
-        # max sim, tie → min small id, then min big id
-        (a, b), _s = max(heap.items(), key=lambda kv: (kv[1], -kv[0][0], -kv[0][1]))
-        ca, cb = clusters[a], clusters[b]
-        keep, drop = (a, b) if a < b else (b, a)
-        merged = dict(clusters[keep])
-        merged["members"] = sorted(ca["members"] + cb["members"])
-        merged["sources_mask"] = ca["sources_mask"] | cb["sources_mask"]
-        # attribute fusion: prefer the longer sane label
-        la, lb = ca.get("label") or "", cb.get("label") or ""
-        merged["label"] = la if len(la) >= len(lb) else lb
-        clusters[keep] = merged
-        del clusters[drop]
-        # remove pairs touching either merged id
-        heap = {
-            pair: s
-            for pair, s in heap.items()
-            if keep not in pair and drop not in pair
-        }
-        # re-pair the merged cluster against remaining clusters
-        for other in clusters:
-            if other == keep:
-                continue
-            if valid(merged, clusters[other]):
-                s = sim_fn(merged, clusters[other])
-                if s is not None and s >= threshold:
-                    pair = (min(keep, other), max(keep, other))
-                    heap[pair] = s
-
+    cols = ["id", "members", "sources_mask", "label", "blocking_key"]
     return pd.DataFrame(
         [
-            {
-                "id": c["id"],
-                "members": c["members"],
-                "sources_mask": c["sources_mask"],
-                "label": c.get("label"),
-                "blocking_key": c.get("blocking_key"),
-            }
-            for c in clusters.values()
+            {c: cl.get(c) for c in cols}
+            for cl in greedy_merge(clusters, threshold, max_sources, sim_fn).values()
         ],
-        columns=["id", "members", "sources_mask", "label", "blocking_key"],
+        columns=cols,
     )
 
 

@@ -6,8 +6,6 @@ Behavioral re-creations of the reference's DefaultPreprocessing chain
 * ``remove_intra_source_links``  — IntraSourceLinkRemover.java:43-87
 * ``remove_isolated_vertices``   — IsolatedVertexRemover.java:33-50
 * ``remove_isolated_edges``      — IsolatedEdgeRemover.java
-* ``edge_similarity``            — BasicEdgeSimilarityComputation.java:86-113
-  (per-edge triplet sim, mean aggregation, floor filter > 0.6)
 * ``best_link_per_source``       — BasicLinkFilter / LinkSelectionWithCcIdFunction
   (per component sorted by sim desc / id asc, greedily keep the best edge
   per (vertex, neighbor-source)); expressed as window row_number, which is
@@ -18,10 +16,8 @@ Graph model: vertices(id, source, …) + edges(src, dst, …) DataFrames.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-EDGE_SIM_FLOOR = 0.6  # BasicEdgeSimilarityComputation.java:110
 
 
 def remove_intra_source_links(
@@ -60,34 +56,6 @@ def remove_isolated_edges(edges: DataFrame, vertices: DataFrame, id_col: str = "
     return edges.join(
         ids.withColumnRenamed(id_col, "src"), "src", "left_semi"
     ).join(ids.withColumnRenamed(id_col, "dst"), "dst", "left_semi")
-
-
-def filter_min_sim(pairs: DataFrame, threshold: float, sim_col: str = "agg_sim") -> Column:
-    """MinThresholdFilterFunction.java:15-34 — sim >= threshold (the
-    reference applies >= for merge thresholds, > for the 0.6 floor)."""
-    return pairs.filter(F.col(sim_col) >= threshold)
-
-
-def filter_sim_floor(pairs: DataFrame, floor: float = EDGE_SIM_FLOOR, sim_col: str = "agg_sim") -> DataFrame:
-    """Post-preprocessing floor: keep edges with sim strictly above the
-    floor (BasicEdgeSimilarityComputation.java:110 ``> 0.6``)."""
-    return pairs.filter(F.col(sim_col) > floor)
-
-
-def subgraph_from_ids(
-    vertices: DataFrame, edges: DataFrame, ids: DataFrame, id_col: str = "id"
-) -> tuple[DataFrame, DataFrame]:
-    """Restrict a graph to a vertex-id list (SubGraphFromIds.java — the
-    reference's 80/10/10 split loader): semi-join vertices, then keep edges
-    with both endpoints inside."""
-    v = vertices.join(ids.select(id_col), id_col, "left_semi")
-    e = remove_isolated_edges(edges, v, id_col=id_col)
-    return v, e
-
-
-def source_counts(vertices: DataFrame, source_col: str = "source") -> DataFrame:
-    """Per-source vertex counts (util/Stats.java:39-185)."""
-    return vertices.groupBy(source_col).agg(F.count(F.lit(1)).alias("n_vertices"))
 
 
 def best_link_per_source(

@@ -96,13 +96,3 @@ def simsort(
         .groupBy("hash_cc")
         .applyInPandas(solve, schema=SIMSORT_SCHEMA)
     )
-
-
-def vertex_agg_sim(edges: DataFrame, sim_col: str = "agg_sim") -> DataFrame:
-    """Mean incident-edge similarity per vertex
-    (SimSortComputeFunction.java:38-52, ``vertexAggSimValue``) — the
-    distributed one-shot version used for stats/inspection."""
-    both = edges.select(F.col("src").alias("id"), F.col(sim_col)).unionByName(
-        edges.select(F.col("dst").alias("id"), F.col(sim_col))
-    )
-    return both.groupBy("id").agg(F.avg(sim_col).alias("vertex_agg_sim"))

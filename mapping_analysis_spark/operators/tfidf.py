@@ -43,32 +43,6 @@ def idf(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def tf_idf(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(doc_id, word, tf, idf, tf_idf) — tf = term count within doc."""
-    n_docs = df.count()
-    words = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("word"),
-    ).filter(F.col("word") != "")
-    tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
-    idf_df = (
-        words.dropDuplicates(["doc_id", "word"])
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("df_count"))
-        .withColumn("idf", F.log10(F.lit(float(n_docs)) / F.col("df_count")))
-    )
-    # no forced broadcast: idf_df scales with corpus VOCABULARY (10^8-10^9
-    # distinct tokens at web scale), so the hint is an OOM at 100 TB and
-    # bypasses AQE's size check. Both sides already shuffle on `word` for
-    # their aggregations; AQE converts the join to broadcast at runtime
-    # whenever the measured vocabulary fits autoBroadcastJoinThreshold —
-    # the size-gated equivalent of a counted bound with no extra pass
-    # (same rationale as blocking.idf_support_pairs).
-    return tf.join(idf_df, "word").select(
-        "doc_id", "word", "tf", "idf", (F.col("tf") * F.col("idf")).alias("tf_idf")
-    )
-
-
 def stop_words(df: DataFrame, text_col: str, id_col: str, k: int = _STOP_DEFAULT) -> DataFrame:
     """Top-k most frequent words (ascending idf) — the LSH pre-filter
     (TrigramsPerVertexCreatorWithIdfOptimization.java:43-46). The global

@@ -4,10 +4,10 @@ Spark-first re-creation of the reference's MusicbrainzBenchmark lifecycle
 (analysis-examples/.../MusicbrainzBenchmark.java:55-166) — one lazily
 planned DataFrame program instead of five Flink jobs with JSON handoffs:
 
-  prepare → blocking → candidate pairs (salted self-join) → pair similarity
-  (native trigram cosine + MFCC cosine, mean-agg) → threshold → match
-  selection (MAX_BOTH reciprocal-best) → connected components → majority
-  representatives
+  prepare (normalized transcript, blocking key, trigram set, source bit,
+  MFCC fingerprint) → clustering.cluster_rounds (candidate components over
+  blocked ∪ LSH pairs scored by trigram cosine + MFCC cosine, mean-agg,
+  then a per-component greedy merge) → majority representatives
 
 The transcript plays the reference's ``artistTitleAlbum`` role; the MFCC
 fingerprint adds the graft's audio channel, fused through the same
@@ -22,16 +22,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .functions.audio import fingerprint_cosine, mfcc_fingerprint
-from .functions.similarity import (
-    cosine_trigram_from_sets,
-    mean_agg_sim,
-    trigram_set,
-)
+from .functions.audio import mfcc_fingerprint
+from .functions.similarity import trigram_set
 from .functions.text import music_blocking_label, simplify, stable_hash64
-from .operators.blocking import block_pairs, salted_block_pairs
-from .operators.graph import connected_components
-from .operators.incremental import max_both_selection
 from .operators.representatives import create_representatives
 from .schema import SOURCE_BITS
 
@@ -45,7 +38,6 @@ class PipelineConfig:
     min_sim: float = 0.7            # merge minSim (bench uses 0.8; csimq best 0.55)
     max_sources: int = 5
     use_audio: bool = True
-    audio_weight_equal: bool = True  # mean-agg over present channels
     max_block_rows: int = 256        # salting threshold (scale knob)
     source_bits: dict = field(default_factory=lambda: dict(SOURCE_BITS))
 
@@ -90,79 +82,22 @@ def prepare(clips: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     return out.drop("bytes")
 
 
-def candidate_pairs(prepared: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """Blocked candidate pairs with the cross-source restriction
-    (CheckRestrictionsFilterFunction.java:27-50: no source overlap) and
-    skew salting for oversized blocks."""
-    cfg = cfg or PipelineConfig()
-    payload = ["trigram_set", "source_bit", "clip_id"]
-    if "fingerprint" in prepared.columns:
-        payload.append("fingerprint")
-    restrict = F.col("l.source_bit") != F.col("r.source_bit")
-    if cfg.max_block_rows:
-        return salted_block_pairs(
-            prepared,
-            key_col="blocking_key",
-            id_col="id",
-            max_block_rows=cfg.max_block_rows,
-            restrict=restrict,
-            payload_cols=payload,
-        )
-    return block_pairs(
-        prepared,
-        key_col="blocking_key",
-        id_col="id",
-        restrict=restrict,
-        payload_cols=payload,
-    )
-
-
-def pair_similarity(pairs: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """Per-pair similarity: transcript trigram cosine + (optional) MFCC
-    cosine, fused by mean over present channels, 6dp — all native Columns,
-    zero Python in this stage."""
-    cfg = cfg or PipelineConfig()
-    sim_text = cosine_trigram_from_sets(
-        F.col("src_trigram_set"), F.col("dst_trigram_set")
-    )
-    channels = [sim_text.alias("sim_text")]
-    if "src_fingerprint" in pairs.columns and cfg.use_audio:
-        channels.append(
-            fingerprint_cosine(
-                F.col("src_fingerprint"), F.col("dst_fingerprint")
-            ).alias("sim_audio")
-        )
-    out = pairs.select(
-        "src",
-        "dst",
-        "blocking_key",
-        F.col("src_clip_id"),
-        F.col("dst_clip_id"),
-        *channels,
-    )
-    sims = [F.col("sim_text")]
-    if len(channels) > 1:
-        sims.append(F.col("sim_audio"))
-    return out.withColumn("agg_sim", mean_agg_sim(*sims, scale=6))
-
-
 def run_batch(
     clips: DataFrame, cfg: PipelineConfig | None = None
 ) -> dict[str, DataFrame]:
     """Full batch pipeline; returns the intermediate DataFrames too (the
     reference materializes each stage to JSON — we expose them lazily).
 
-    Clustering = connected components over reciprocal-best matches. With
-    cross-source-only pairs and max-both selection, components stay small
-    and source-consistent — the same guarantee the reference's greedy merge
-    provides for its default MAX_BOTH incremental path
-    (SourceAdditionClustering.java:62-191)."""
+    Clustering = ``clustering.cluster_rounds``: connected components over
+    the above-threshold, link-filtered candidate pairs, then the greedy
+    merge (``merge.greedy_merge``) inside each component, which keeps every
+    cluster source-consistent (no two members from one source)."""
     from pyspark.sql import Observation
 
-    from .operators.clustering import ClusterRoundConfig, iterative_max_both_clustering
+    from .operators.clustering import ClusterRoundConfig, _cluster_state, cluster_rounds
 
     cfg = cfg or PipelineConfig()
-    # prepared is consumed by the round loop AND the final member join;
+    # prepared is consumed by clustering AND the final member join;
     # persist so the fingerprint UDF runs once per record, not per consumer.
     # df.observe rides the first action over it — per-stage row counters
     # (the reference's accumulators, Constants.java:33-87) at zero extra
@@ -177,8 +112,8 @@ def run_batch(
     if cfg.use_audio and "bytes" in clips.columns:
         in_aggs.append(F.count(F.col("fingerprint")).alias("with_fingerprint"))
     prepared = prepare(clips, cfg).observe(obs_in, *in_aggs).persist()
-    state = iterative_max_both_clustering(
-        prepared,
+    state = cluster_rounds(
+        _cluster_state(prepared, cfg.use_audio),
         ClusterRoundConfig(
             min_sim=cfg.min_sim,
             max_sources=cfg.max_sources,

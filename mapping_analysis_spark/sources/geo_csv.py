@@ -31,15 +31,52 @@ GEO_SOURCES = (
 )
 
 
+def fold_properties(vertices: DataFrame, properties: DataFrame) -> DataFrame:
+    """Fold (id, key, ptype, value) property rows onto (id, url, source)
+    vertex rows — label/lat/lon scalars, type values accumulate into a
+    sorted set (ObjectMap.addProperty set promotion); label-less vertices
+    are dropped (PropertyCoGroupFunction.java:44-58)."""
+    pivoted = properties.groupBy("id").agg(
+        F.max(
+            F.when(
+                (F.col("key") == "label") & (F.col("ptype") == "string"),
+                F.col("value"),
+            )
+        ).alias("label"),
+        F.max(
+            F.when(
+                (F.col("key") == "lat") & (F.col("ptype") == "double"),
+                F.col("value").cast("double"),
+            )
+        ).alias("lat"),
+        F.max(
+            F.when(
+                (F.col("key") == "lon") & (F.col("ptype") == "double"),
+                F.col("value").cast("double"),
+            )
+        ).alias("lon"),
+        F.sort_array(
+            F.collect_set(
+                F.when(
+                    F.col("key").isin("type", "typeIntern")
+                    & (F.col("ptype") == "string"),
+                    F.col("value"),
+                )
+            )
+        ).alias("types"),
+    )
+    return (
+        vertices.join(pivoted, "id", "left")
+        .filter(F.col("label").isNotNull())
+        .select("id", "url", "source", "label", "lat", "lon", "types")
+    )
+
+
 def read_geo_vertices(
     spark: SparkSession, vertex_file: str, property_file: str
 ) -> DataFrame:
     """(id, url, source, label, lat, lon, types) — whitelist-filtered,
-    properties pivoted on, label-less vertices dropped. The property fold
-    is shared with the JDBC source (``sources.jdbc``), which loads the same
-    relational shape."""
-    from .jdbc import fold_properties
-
+    properties pivoted on, label-less vertices dropped."""
     v = (
         spark.read.csv(vertex_file, sep=";", mode="DROPMALFORMED")
         .toDF("id", "url", "source")

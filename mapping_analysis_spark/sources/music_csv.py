@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.cleaning import fix_language, fix_song_length, fix_year
-from ..functions.text import artist_title_album, stable_hash64
+from ..functions.text import artist_title_album
 
 CSV_SCHEMA = T.StructType(
     [

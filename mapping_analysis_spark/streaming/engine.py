@@ -52,11 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline import PipelineConfig, prepare
-from ..operators.clustering import (
-    ClusterRoundConfig,
-    _cluster_state,
-    iterative_max_both_clustering,
-)
+from ..operators.clustering import ClusterRoundConfig, _cluster_state
 
 
 @dataclass
@@ -397,18 +393,6 @@ class StreamingERJob:
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.time()
-        _dbg = os.environ.get("SPARK_GRAFT_DEBUG_BATCH")
-        _tp = time.time()
-
-        def _phase(name: str) -> None:
-            nonlocal _tp
-            if _dbg:
-                print(
-                    f"[batch {batch_id}] {name}: {time.time() - _tp:.1f}s",
-                    flush=True,
-                )
-            _tp = time.time()
-
         cfg = self.cfg
         pcfg = cfg.pipeline
         # df.observe piggybacks input-row count, event-time high-water mark
@@ -447,7 +431,6 @@ class StreamingERJob:
             )
         prepared = prepare(on_time, pcfg).persist()
         prepared.count()  # one action: scan + fingerprints + observation
-        _phase("scan+fingerprint+cache")
         observed = obs.get
         n_in = int(observed["rows"] or 0)
         if n_in == 0:
@@ -517,9 +500,7 @@ class StreamingERJob:
         # converges to the batch result for the same input
         from ..operators.clustering import cluster_rounds
 
-        _phase("state-lookup+tombstone-write")
         clusters = cluster_rounds(working, rcfg)
-        _phase("cluster-rounds(decomposition)")
         clusters_with_bands = clusters.withColumn("band_keys", band_expr)
         # ---- delta state write: only this batch's updated clusters next
         # to the tombstones above — per-batch state writes scale with the
@@ -528,7 +509,6 @@ class StreamingERJob:
         new_rows, n_new, n_removed = self._write_delta(
             clusters_with_bands, removed, batch_id
         )
-        _phase("merge+delta-write")
         prev_entries = [
             (b, k) for b, k in self._state_entries() if b < batch_id
         ]
@@ -559,7 +539,6 @@ class StreamingERJob:
                 else state.join(removed, "id", "left_anti").unionByName(new_rows)
             )
             self._write_full(full, batch_id)
-            _phase("compaction-write")
         # ---- exactly-once sink: overwrite THIS batch's partition only.
         # The output rows ARE the just-written delta rows, so publishing is
         # a filesystem copy (hardlink locally, FileUtil.copy on Hadoop FS)
@@ -570,7 +549,6 @@ class StreamingERJob:
         out_path = self.fs.join(cfg.output_dir, f"batch_id={batch_id}")
         self.fs.rmtree(out_path)
         self.fs.copytree(self.fs.join(droot, "rows"), out_path)
-        _phase("output-write")
 
         # ---- state commit + watermark + lineage
         self._commit_state(batch_id, compacted, n_clusters)
@@ -590,7 +568,6 @@ class StreamingERJob:
         )
         part_counts.write.mode("overwrite").parquet(lineage_path)
         prepared.unpersist()
-        _phase("lineage+commit")
 
     # -- query lifecycle ---------------------------------------------------
 

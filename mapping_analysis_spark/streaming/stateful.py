@@ -23,7 +23,6 @@ from typing import Any, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -57,7 +56,6 @@ def _default_sim(a: dict, b: dict) -> float | None:
     return mean_agg_local(
         cosine_trigram_local(a.get("label"), b.get("label")),
         cosine_vec_local(a.get("fingerprint"), b.get("fingerprint")),
-        scale=6,
     )
 
 

@@ -164,8 +164,8 @@ def run_level(cpus: int, zip_path: str) -> dict:
         env=env,
     )
     elapsed = time.time() - t0
-    # keep the job's stdout/stderr (per-batch phase timers when
-    # SPARK_GRAFT_DEBUG_BATCH is set) for the committed raw logs
+    # keep the job's stdout/stderr for the committed raw logs (per-phase
+    # timings come from `perfbench/run.py --trace 1`, which changes no plan)
     log = os.path.join(REPO, "scripts", f"stream_level_{cpus}_last.log")
     with open(log, "w") as f:
         f.write(proc.stdout)

@@ -75,10 +75,10 @@ def test_gradoop_epgm_graph(spark, tmp_path):
 
 
 def test_jdbc_fold_properties(spark):
-    """fold_properties (shared geo-CSV/JDBC seam, JDBCDataSource.java
-    PropertyVertexCreator semantics): scalar label/lat/lon, type values
-    accumulate into a sorted set, label-less vertices dropped."""
-    from mapping_analysis_spark.sources.jdbc import fold_properties
+    """fold_properties (the geo-CSV property fold, PropertyVertexCreator
+    semantics): scalar label/lat/lon, type values accumulate into a sorted
+    set, label-less vertices dropped."""
+    from mapping_analysis_spark.sources.geo_csv import fold_properties
 
     v = spark.createDataFrame(
         [(1, "u1", "s"), (2, "u2", "s")], "id long, url string, source string"

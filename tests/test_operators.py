@@ -336,6 +336,145 @@ def test_greedy_merge_block_order_and_restrictions():
     assert rows[1]["sources_mask"] == 3
 
 
+def _greedy_merge_oracle(clusters, threshold, max_sources, sim_fn):
+    """The pre-heap fixpoint: after every merge, drop the pairs touching
+    either side, re-pair the merged cluster, and take the max of
+    (sim, -a, -b) over the live pair set."""
+    clusters = {i: dict(c) for i, c in clusters.items()}
+
+    def valid(a, b):
+        if a["sources_mask"] & b["sources_mask"]:
+            return False
+        return (
+            bin(a["sources_mask"]).count("1") + bin(b["sources_mask"]).count("1")
+            <= max_sources
+        )
+
+    pairs = {}
+    ids = sorted(clusters)
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            if valid(clusters[a], clusters[b]):
+                s = sim_fn(clusters[a], clusters[b])
+                if s is not None and s >= threshold:
+                    pairs[(a, b)] = s
+    while pairs:
+        (a, b), _s = max(pairs.items(), key=lambda kv: (kv[1], -kv[0][0], -kv[0][1]))
+        ca, cb = clusters[a], clusters[b]
+        keep, drop = (a, b) if a < b else (b, a)
+        merged = dict(clusters[keep])
+        merged["members"] = sorted(ca["members"] + cb["members"])
+        merged["sources_mask"] = ca["sources_mask"] | cb["sources_mask"]
+        la, lb = ca.get("label") or "", cb.get("label") or ""
+        merged["label"] = la if len(la) >= len(lb) else lb
+        clusters[keep] = merged
+        del clusters[drop]
+        pairs = {p: s for p, s in pairs.items() if keep not in p and drop not in p}
+        for other in clusters:
+            if other != keep and valid(merged, clusters[other]):
+                s = sim_fn(merged, clusters[other])
+                if s is not None and s >= threshold:
+                    pairs[(min(keep, other), max(keep, other))] = s
+    return clusters
+
+
+def test_greedy_merge_matches_max_scan_oracle():
+    """The shared lazy-heap kernel keeps the greedy order of the max-scan
+    fixpoint — highest sim first, ties to the smallest a then the smallest
+    b, lower id survives — on random blocks where ties are common."""
+    import random
+
+    from mapping_analysis_spark.operators.merge import greedy_merge
+
+    levels = (0.5, 0.7, 0.7, 0.8, 0.9, 0.9, 1.0)
+
+    def sim_fn(a, b):
+        sa, sb = sum(a["members"]), sum(b["members"])
+        if (sa + sb) % 11 == 0:
+            return None  # no vote
+        return levels[(sa * sb + sa + sb) % len(levels)]
+
+    merges = 0
+    for seed in range(200):
+        rng = random.Random(seed)
+        n = rng.randint(2, 12)
+        clusters = {
+            i: {
+                "id": i,
+                "members": [i],
+                "sources_mask": 1 << rng.randrange(4),
+                "label": rng.choice(["ab", "abc", "xyz", "abcd", None]),
+                "n_members": 1,
+            }
+            for i in rng.sample(range(1, 60), n)
+        }
+        max_sources = rng.choice((2, 3, 4))
+        want = _greedy_merge_oracle(clusters, 0.7, max_sources, sim_fn)
+        got = greedy_merge(
+            {i: dict(c) for i, c in clusters.items()}, 0.7, max_sources, sim_fn
+        )
+        assert list(got) == list(want), seed
+        for i, c in got.items():
+            w = want[i]
+            assert c["members"] == w["members"], seed
+            assert c["sources_mask"] == w["sources_mask"], seed
+            assert c["label"] == w["label"], seed
+        merges += n - len(got)
+    assert merges > 200  # the blocks really merge, not just pass through
+
+
+def test_geo_merge_never_pairs_type_incompatible_clusters():
+    """The geo similarity returns None for clusters whose generalized
+    types are disjoint, so such a pair never merges even when its mean
+    sim clears the threshold; a shaded pair with the same label and
+    coordinates does merge."""
+    from mapping_analysis_spark.operators.geo import _merge_geo_block
+
+    def row(i, mask, types):
+        return {"id": i, "members": [i], "sources_mask": mask, "label": "riverdale",
+                "lat": 10.0, "lon": 10.0, "types": types, "blocking_key": "k",
+                "n_members": 1}
+
+    pdf = pd.DataFrame(
+        [
+            row(1, 1, ["Mountain"]),
+            row(2, 2, ["BodyOfWater"]),  # label 1.0, geo 1.0, type 0.0 → 0.666667
+            row(3, 4, ["Settlement"]),
+            row(4, 8, ["AdministrativeRegion"]),
+        ]
+    )
+    out = _merge_geo_block(pdf, min_sim=0.5, max_sources=8)
+    rows = {r["id"]: list(r["members"]) for r in out.to_dict("records")}
+    assert rows == {1: [1], 2: [2], 3: [3, 4]}
+
+
+def test_geo_merge_keeps_a_null_coordinate_point_apart():
+    """A point with null lat/lon reaches the geo merge as NaN (pandas
+    records); its geo channel and so its mean sim are NaN, which never
+    clears the threshold — the point stays a singleton and the block
+    still merges the rest instead of failing."""
+    from mapping_analysis_spark.functions.local_sim import (
+        geo_sim_local,
+        mean_agg_local,
+    )
+    from mapping_analysis_spark.operators.geo import _merge_geo_block
+
+    def row(i, mask, lat, lon):
+        return {"id": i, "members": [i], "sources_mask": mask, "label": "null town",
+                "lat": lat, "lon": lon, "types": ["Settlement"],
+                "blocking_key": "k", "n_members": 1}
+
+    pdf = pd.DataFrame(
+        [row(1, 1, None, None), row(2, 2, 10.0, 10.0), row(3, 4, 10.0, 10.0)]
+    )
+    assert pdf["lat"].isna()[0]
+    g = geo_sim_local(float("nan"), float("nan"), 10.0, 10.0)
+    assert g != g and mean_agg_local(1.0, g, 1.0) != mean_agg_local(1.0, g, 1.0)
+    out = _merge_geo_block(pdf, min_sim=0.5, max_sources=8)
+    rows = {r["id"]: list(r["members"]) for r in out.to_dict("records")}
+    assert rows == {1: [1], 2: [2, 3]}
+
+
 def test_merge_execution_spark(spark):
     from mapping_analysis_spark.operators.merge import merge_execution
 
@@ -631,12 +770,8 @@ def test_hashed_trigram_tokens_matches_spec(spark):
         )
         .filter(F.col("doc_id") < F.col("rid"))
     )
-    from mapping_analysis_spark.functions.similarity import cosine_hashed_sets
-
     chk = pairs.select(
-        cosine_hashed_sets(
-            F.array_sort("t"), F.array_sort("rt")
-        ).alias("fast"),
+        cosine_trigram_from_sets(F.col("t"), F.col("rt")).alias("fast"),
         cosine_trigram_from_sets(F.col("s"), F.col("rs")).alias("spec"),
     ).collect()
     assert len(chk) == 435

@@ -194,38 +194,54 @@ def test_artist_title_album(spark):
     assert got[1].x == "t"
 
 
-def test_cosine_hashed_sets_matches_jvm_spec(spark):
-    """The Arrow pair-scoring kernel (cosine_hashed_sets over sorted
-    xxhash64 trigram arrays) must produce the SAME doubles as the JVM
-    cosine_trigram_from_sets over the same hashed sets — including the
-    empty/empty=1.0, one-empty=0.0, and null edge cases and HALF_UP
-    rounding — on real corpus pairs."""
-    from mapping_analysis_spark.functions.similarity import (
-        cosine_hashed_sets,
-        cosine_trigram_from_sets,
-        trigram_set,
-    )
+def _decimal_half_up6(x):
+    from decimal import ROUND_HALF_UP, Decimal
 
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").limit(80)
-    side = docs.select(
-        F.col("doc_id").alias("id"),
-        F.array_sort(
-            F.transform(trigram_set(F.col("text")), lambda t: F.xxhash64(t))
-        ).alias("tg"),
-    )
-    l, r = side.alias("l"), side.alias("r")
-    pairs = l.join(r, F.col("l.id") < F.col("r.id")).select(
-        F.col("l.tg").alias("a"), F.col("r.tg").alias("b")
-    )
-    extra = spark.createDataFrame(
-        [([], []), ([], [1, 2]), (None, [1, 2]), ([3], None)],
-        "a array<long>, b array<long>",
-    )
-    both = pairs.unionByName(extra).select(
-        cosine_hashed_sets(F.col("a"), F.col("b")).alias("fast"),
-        cosine_trigram_from_sets(F.col("a"), F.col("b")).alias("spec"),
-    )
-    rows = both.collect()
-    assert len(rows) == 80 * 79 // 2 + 4
-    for i, row in enumerate(rows):
-        assert row.fast == row.spec, (i, row.fast, row.spec)
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+
+def test_round6_is_half_up_at_6dp_midpoints():
+    """round6 / round6_vec equal the Decimal(repr(x)) HALF_UP result on
+    exact 6dp midpoints (both signs) and their nextafter neighbours — the
+    inputs where Python's half-to-even ``round(x, 6)`` disagrees."""
+    import numpy as np
+
+    from mapping_analysis_spark.functions.local_sim import round6, round6_vec
+
+    mids = [float(f"{(2 * k + 1) * 5}e-7") for k in range(0, 1_000_000, 97)]
+    xs = []
+    for m in mids:
+        for v in (m, -m):
+            xs += [v, math.nextafter(v, -math.inf), math.nextafter(v, math.inf)]
+    want = [_decimal_half_up6(x) for x in xs]
+    assert [round6(x) for x in xs] == want
+    assert round6_vec(np.array(xs)).tolist() == want
+    assert sum(round(x, 6) != w for x, w in zip(xs, want)) > 1000
+    got = round6_vec(np.array([0.1234565, np.nan]))
+    assert got[0] == 0.123457 and np.isnan(got[1])
+
+
+def test_jaro_winkler_rounds_half_up_at_the_filter_midpoints(spark, monkeypatch):
+    """Raw Jaro-Winkler scores on the 6dp midpoints either side of the
+    ``jw_sim >= 0.5`` filter (q_jaro_winkler_pairs) round HALF_UP, as
+    DuckDB's ``round`` does: 0.5000005 → 0.500001 and 0.4999995 → 0.5
+    (kept). Half-to-even ``round(x, 6)`` gives 0.5 and 0.499999 (dropped)."""
+    import pandas as pd
+
+    from mapping_analysis_spark.functions import similarity
+
+    # a real pair on the upper midpoint: 6 matches, 3 transpositions,
+    # lengths 6 and 4,000,000 → (6/6 + 6/4e6 + 3/6) / 3
+    s1, s2 = "abcdef", "badcfe" + "-" * (4_000_000 - 6)
+    assert repr(similarity.jaro_winkler_py(s1, s2)) == "0.5000005"
+    df = spark.createDataFrame([(s1, s2)], "l string, r string")
+    got = df.select(similarity.jaro_winkler(F.col("l"), F.col("r")).alias("jw"))
+    assert [r.jw for r in got.filter(F.col("jw") >= 0.5).collect()] == [0.500001]
+
+    # the lower midpoint 0.4999995 = 999999/2e6 needs 5^6 to divide a
+    # string length or the match count; no pair with fewer than 400
+    # matches reaches it, so the UDF body gets that raw score injected
+    monkeypatch.setattr(similarity, "jaro_winkler_py", lambda a, b: 0.4999995)
+    out = similarity.jaro_winkler.func(pd.Series(["x"]), pd.Series(["y"]))
+    assert out.tolist() == [0.5]
+
