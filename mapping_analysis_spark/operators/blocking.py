@@ -390,6 +390,72 @@ def lsh_band_keys(
     return F.array(*keys)
 
 
+def score_pairs(
+    ids,
+    masks,
+    toks,
+    li,
+    ri,
+    max_sources: int,
+    emit_min: float | None = None,
+    metric: str = "cosine",
+    fps=None,
+) -> dict:
+    """Score the candidate index pairs (li, ri) of one group of records —
+    the kernel of ``salted_block_pair_scores`` and of the single-pass
+    clustering lane. Returns ``{"src", "dst", "sim_text"[, "sim_audio"]}``
+    arrays over the pairs that survive, canonical src < dst.
+
+    1. Restriction (CheckRestrictionsFilterFunction.java:27-50): no
+       source-mask overlap, summed bit counts ≤ ``max_sources`` — applied
+       first, so intersections run only for surviving pairs.
+    2. ``sim_text`` over the sorted-unique int64 token arrays ``toks``:
+       set cosine |A∩B|/√(|A||B|), 6dp HALF_UP (both empty → 1.0), or with
+       ``metric="jaccard"`` |A∩B|/|A∪B| UNROUNDED (``jaccard_from_sets``
+       semantics: callers filter at full precision, round for display).
+    3. Pairs with sim_text < ``emit_min`` are dropped.
+    4. ``fps`` (fingerprint arrays, or None): ``sim_audio`` by
+       ``fp_cosine_grid`` for exactly the emitted pairs, NaN = no vote."""
+    ids = np.asarray(ids)
+    masks = np.asarray(masks).astype(np.int64)
+    toks = [np.asarray(t, dtype=np.int64) for t in toks]
+    n = len(ids)
+    lens = np.array([len(t) for t in toks], dtype=np.int64)
+    nbits = np.array([bin(int(m)).count("1") for m in masks], dtype=np.int64)
+    ok = ((masks[li] & masks[ri]) == 0) & (nbits[li] + nbits[ri] <= max_sources)
+    li, ri = li[ok], ri[ok]
+    inter = (
+        pair_intersection_counts(toks, lens, np.minimum(li, ri), np.maximum(li, ri))
+        if len(li)
+        else np.zeros(0)
+    )
+    na, nb = lens[li], lens[ri]
+    if metric == "jaccard":
+        union = (na + nb).astype(np.float64) - inter
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sim = np.where(union > 0, inter / union, 1.0)
+    else:
+        denom = np.sqrt((na * nb).astype(np.float64))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            x = np.where(denom > 0, inter / denom, 0.0)
+        x = np.where((na == 0) & (nb == 0), 1.0, x)
+        sim = round6_vec(x)
+    if emit_min is not None:
+        keep = sim >= emit_min
+        li, ri, sim = li[keep], ri[keep], sim[keep]
+    ia, ib = ids[li], ids[ri]
+    out = {
+        "src": np.minimum(ia, ib).astype(np.int64),
+        "dst": np.maximum(ia, ib).astype(np.int64),
+        "sim_text": sim.astype(np.float64),
+    }
+    if fps is not None:
+        out["sim_audio"] = (
+            fp_cosine_grid(*fp_matrix(fps, n), li, ri) if len(li) else np.zeros(0)
+        )
+    return out
+
+
 def salted_block_pair_scores(
     df: DataFrame,
     key_col: str = "blocking_key",
@@ -529,71 +595,24 @@ def salted_block_pair_scores(
     if fp_col is not None:
         fields.append(T.StructField("sim_audio", T.DoubleType(), True))
     schema = T.StructType(fields)
-    emit = emit_min
     use_fp = fp_col is not None
 
-    empty_cols = {
-        "src": pd.Series(dtype="int64"),
-        "dst": pd.Series(dtype="int64"),
-        "sim_text": pd.Series(dtype="float64"),
-    }
-    if use_fp:
-        empty_cols["sim_audio"] = pd.Series(dtype="float64")
-    _EMPTY = pd.DataFrame(empty_cols)
-
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
         gi, gj = int(pdf["_gi"].iloc[0]), int(pdf["_gj"].iloc[0])
-        ids = pdf["_id"].to_numpy()
-        masks = pdf["_mask"].to_numpy().astype(np.int64)
-        cells = pdf["_cell"].to_numpy()
-        toks = [np.asarray(t, dtype=np.int64) for t in pdf["_tok"]]
-        n = len(ids)
-        lens = np.array([len(t) for t in toks], dtype=np.int64)
-        # ---- enumerate the group's valid pair grid first (the restriction
-        # mask usually prunes hard, so intersections are only computed for
-        # surviving pairs)
-        li, ri = cell_pair_grid(cells, gi, gj)
-        if len(li) == 0:
-            return _EMPTY.copy()
-        nbits = np.array([bin(int(m)).count("1") for m in masks], dtype=np.int64)
-        ok = ((masks[li] & masks[ri]) == 0) & (nbits[li] + nbits[ri] <= max_sources)
-        li, ri = li[ok], ri[ok]
-        if len(li) == 0:
-            return _EMPTY.copy()
-        lo = np.minimum(li, ri)
-        hi = np.maximum(li, ri)
-        inter = pair_intersection_counts(toks, lens, lo, hi)
-        na, nb = lens[li], lens[ri]
-        if metric == "jaccard":
-            union = (na + nb).astype(np.float64) - inter
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sim = np.where(union > 0, inter / union, 1.0)
-            # UNROUNDED (jaccard_from_sets semantics): the emit_min filter
-            # below and any caller-side rounding then match the Column
-            # path's filter-at-full-precision / round-for-display order
-        else:
-            denom = np.sqrt((na * nb).astype(np.float64))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                x = np.where(denom > 0, inter / denom, 0.0)
-            x = np.where((na == 0) & (nb == 0), 1.0, x)
-            sim = round6_vec(x)
-        if emit is not None:
-            keep = sim >= emit
-            li, ri, sim = li[keep], ri[keep], sim[keep]
-            if len(li) == 0:
-                return _EMPTY.copy()
-        ia, ib = ids[li], ids[ri]
-        out = {
-            "src": np.minimum(ia, ib).astype(np.int64),
-            "dst": np.maximum(ia, ib).astype(np.int64),
-            "sim_text": sim.astype(np.float64),
-        }
-        if use_fp:
-            fpm, norms = fp_matrix(pdf["_fp"], n)
-            out["sim_audio"] = fp_cosine_grid(fpm, norms, li, ri)
-        return pd.DataFrame(out)
+        li, ri = cell_pair_grid(pdf["_cell"].to_numpy(), gi, gj)
+        return pd.DataFrame(
+            score_pairs(
+                pdf["_id"].to_numpy(),
+                pdf["_mask"].to_numpy(),
+                list(pdf["_tok"]),
+                li,
+                ri,
+                max_sources,
+                emit_min,
+                metric,
+                pdf["_fp"] if use_fp else None,
+            )
+        )
 
     from ..util import parallel_grouped
 
@@ -611,6 +630,10 @@ def salted_block_pair_scores(
 # engine stores it next to the state and rebuilds the index on mismatch
 # instead of silently matching zero keys.
 BAND_KEY_FORMAT = "minhash-foldmix-v1"
+
+# lsh_pairs drops band buckets larger than this (quadratic, low-information
+# signatures); clustering's single-pass lane applies the same cap
+LSH_MAX_BUCKET = 256
 
 
 def minhash_band_keys(
@@ -686,7 +709,7 @@ def lsh_pairs(
     rows_per_band: int = 2,
     seed: int = 42,
     restrict: Column | None = None,
-    max_bucket: int = 256,
+    max_bucket: int = LSH_MAX_BUCKET,
 ) -> DataFrame:
     """LSH_BLOCKING (lsh/utils/LshComputation.java:30-75): signature →
     band keys → explode → per-band-key self-join i<j → distinct pairs.

@@ -20,6 +20,20 @@ Function.java:45-163's music similarity and fusion) in two stages:
 The reference confines every superstep of its delta iteration to one
 blocking key; with bounded groups the local fixpoint gives the same greedy
 order and costs one shuffle instead of #supersteps × 4.
+
+Two lanes, one result. ``cluster_rounds`` materializes the working set and
+reads its row count from the parquet footers. A set of at most
+``2 × max_block_rows`` rows — the largest group the salted scorer ever
+builds — is clustered in one driver pass (``_cluster_small``): one collect,
+then the same stages in process (``candidate_components`` and
+``graph.connected_components`` on pandas frames, ``blocking.score_pairs``,
+``merge_group``). That is the shape of the
+reference's incremental mode (small increments against a large
+clustering, IncrementalMusicBenchmark.java:83-190), where the distributed
+plan's fixed per-job and per-Python-task costs are the whole bill. Larger
+sets take the distributed path. Salting never changes the pair set, so
+the gate adds no knob and cannot change a result; tests force the
+distributed path with a small ``max_block_rows``.
 """
 
 from __future__ import annotations
@@ -40,6 +54,8 @@ from ..functions.similarity import (
 class ClusterRoundConfig:
     min_sim: float = 0.7
     max_sources: int = 5
+    # salting bound of the block scorer (groups ≤ 2× this); a working set
+    # that fits one such group takes cluster_rounds' single-pass lane
     max_block_rows: int = 256
     use_audio: bool = True
     # round-0 LSH candidate union: catches pairs whose prefix blocking keys
@@ -150,7 +166,7 @@ def _round_pairs(
     # both channels on every pair.
     from .blocking import fp_pair_cosine, salted_block_pair_scores
 
-    text_bound = (2.0 * cfg.min_sim - 1.0 if use_audio else cfg.min_sim) - 1e-6
+    text_bound = _text_bound(cfg, use_audio)
     blocked_scored = salted_block_pair_scores(
         hashed,
         key_col="blocking_key",
@@ -317,7 +333,7 @@ def _merge_matches(clusters: DataFrame, matches: DataFrame, cfg: ClusterRoundCon
     return untouched.unionByName(merged)
 
 
-def candidate_components(state: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
+def candidate_components(state, cfg: ClusterRoundConfig):
     """Decomposition pass (the reference's DefaultPreprocessing →
     ConnectedComponentIdAdder chain, preprocessing/DefaultPreprocessing
     .java:39-60): candidate pairs = blocked pairs ∪ LSH pairs, sim ≥
@@ -326,7 +342,13 @@ def candidate_components(state: DataFrame, cfg: ClusterRoundConfig) -> DataFrame
     Components become the merge grouping — every record reachable through
     above-threshold candidates is clusterable with its peers even when
     their prefix blocking keys diverged (the recall limit of pure prefix
-    blocking)."""
+    blocking).
+
+    A pandas ``state`` is the single-pass lane's collected working set
+    (with ``_tg`` and ``_bands``): the pass then runs in process
+    (``_local_candidates``) and returns pandas (id, cc) in row order."""
+    if not isinstance(state, DataFrame):
+        return _local_candidates(state, cfg)
     extra = None
     if cfg.use_lsh_round0:
         from .blocking import lsh_pairs
@@ -365,33 +387,10 @@ def candidate_components(state: DataFrame, cfg: ClusterRoundConfig) -> DataFrame
     )
 
 
-def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
-    """One-shot merge: per component group, run ``merge.greedy_merge``
-    with the music similarity and fusion (DeltaIterateMergeMusicStep
-    Function.java:45-163: trigram + MFCC cosine, longer label, member-
-    weighted mean fingerprint).
-
-    The decomposition guardrail caps groups at max_component_rows, so the
-    local O(n²) solve is bounded; the whole merge phase costs exactly ONE
-    shuffle (groupBy blocking_key) — no driver rounds. This is the same
-    trade the reference makes: its delta iteration confines every superstep
-    to one blocking key; with bounded groups the local fixpoint is
-    semantically identical and removes #supersteps × 4 shuffles."""
-    import math
-
-    import pandas as pd
-
-    from ..functions.local_sim import (
-        _INSANE,
-        round6,
-        simplify_local,
-        trigram_set_local,
-    )
+def _merge_schema(use_audio: bool):
+    """Schema of a merged cluster row (``fingerprint`` only with audio)."""
     from pyspark.sql import types as T
 
-    from .merge import fuse_default, greedy_merge
-
-    use_audio = cfg.use_audio and "fingerprint" in clusters.columns
     fields = [
         T.StructField("id", T.LongType(), False),
         T.StructField("members", T.ArrayType(T.LongType()), False),
@@ -402,8 +401,26 @@ def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
     ]
     if use_audio:
         fields.append(T.StructField("fingerprint", T.ArrayType(T.FloatType()), True))
-    schema = T.StructType(fields)
-    threshold, max_sources = cfg.min_sim, cfg.max_sources
+    return T.StructType(fields)
+
+
+def merge_group(pdf, threshold: float, max_sources: int, use_audio: bool):
+    """``merge.greedy_merge`` over one merge group's rows with the music
+    similarity and fusion (DeltaIterateMergeMusicStepFunction.java:45-163:
+    trigram + MFCC cosine, longer label, member-weighted mean
+    fingerprint). The one solve of both clustering lanes: the grouped map
+    of ``merge_components`` and the driver pass of ``_cluster_small``."""
+    import math
+
+    import pandas as pd
+
+    from ..functions.local_sim import (
+        _INSANE,
+        round6,
+        simplify_local,
+        trigram_set_local,
+    )
+    from .merge import fuse_default, greedy_merge
 
     def _tg(label: str | None) -> frozenset | None:
         if label is None or label in _INSANE:
@@ -463,33 +480,224 @@ def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
                 merged["_fpn"] = math.sqrt(sum(x_ * x_ for x_ in fm))
         return merged
 
-    cols = [f.name for f in fields]
+    cols = _merge_schema(use_audio).fieldNames()
+    clusters_l: dict[int, dict] = {}
+    for row in pdf.to_dict("records"):
+        row["members"] = list(row["members"])
+        if use_audio:
+            fp = row.get("fingerprint")
+            if fp is not None:
+                row["fingerprint"] = list(fp)
+                row["_fpn"] = math.sqrt(sum(x_ * x_ for x_ in fp))
+            else:
+                row["_fpn"] = 0.0
+        row["_tg"] = _tg(row.get("label"))
+        clusters_l[row["id"]] = row
+    out = greedy_merge(clusters_l, threshold, max_sources, sim_fn, fuse_fn)
+    return pd.DataFrame(
+        [{c: cl.get(c) for c in cols} for cl in out.values()], columns=cols
+    )
 
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        clusters_l: dict[int, dict] = {}
-        for row in pdf.to_dict("records"):
-            row["members"] = list(row["members"])
-            if use_audio:
-                fp = row.get("fingerprint")
-                if fp is not None:
-                    row["fingerprint"] = list(fp)
-                    row["_fpn"] = math.sqrt(sum(x_ * x_ for x_ in fp))
-                else:
-                    row["_fpn"] = 0.0
-            row["_tg"] = _tg(row.get("label"))
-            clusters_l[row["id"]] = row
-        out = greedy_merge(clusters_l, threshold, max_sources, sim_fn, fuse_fn)
-        return pd.DataFrame(
-            [{c: cl.get(c) for c in cols} for cl in out.values()], columns=cols
-        )
 
+def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
+    """One-shot merge: ``merge_group`` per component group.
+
+    The decomposition guardrail caps groups at max_component_rows, so the
+    local O(n²) solve is bounded; the whole merge phase costs exactly ONE
+    shuffle (groupBy blocking_key) — no driver rounds. This is the same
+    trade the reference makes: its delta iteration confines every superstep
+    to one blocking key; with bounded groups the local fixpoint is
+    semantically identical and removes #supersteps × 4 shuffles."""
     from ..util import parallel_grouped
 
+    use_audio = cfg.use_audio and "fingerprint" in clusters.columns
+    schema = _merge_schema(use_audio)
+    threshold, max_sources = cfg.min_sim, cfg.max_sources
+
+    def solve(pdf):
+        return merge_group(pdf, threshold, max_sources, use_audio)
+
     return (
-        parallel_grouped(clusters.select(*cols), "blocking_key")
+        parallel_grouped(clusters.select(*schema.fieldNames()), "blocking_key")
         .groupBy("blocking_key")
         .applyInPandas(solve, schema=schema)
     )
+
+
+def _text_bound(cfg: ClusterRoundConfig, use_audio: bool) -> float:
+    """Lowest sim_text that can still reach ``min_sim``: with mean
+    aggregation over two channels a pair needs sim_text ≥ 2·min_sim − 1
+    even at a perfect audio sim of 1.0. The 1e-6 slack keeps the 6dp
+    HALF_UP rounding boundary on the kept side, so the survivor set is
+    identical to scoring both channels on every pair."""
+    return (2.0 * cfg.min_sim - 1.0 if use_audio else cfg.min_sim) - 1e-6
+
+
+def _local_candidates(pdf, cfg: ClusterRoundConfig):
+    """``candidate_components`` in process, over the working set ``pdf``
+    (``_merge_schema`` columns + ``_tg``, the hashed trigram array, and
+    ``_bands``, the LSH band keys — both computed in Spark SQL, as the
+    distributed path computes them):
+
+    1. candidate pairs: every pair within a non-null blocking key (one
+       unsalted group — salting never changes the pair set) ∪ every pair
+       sharing an LSH band key whose bucket holds ≤ ``LSH_MAX_BUCKET``
+       rows (``lsh_pairs``), each pair once;
+    2. ``blocking.score_pairs`` over them: the source restriction, the
+       trigram cosine, the text bound, the fingerprint cosine; the scored
+       pairs are written to parquet like the distributed scorer's output
+       (pyarrow, no Spark job), so a traced run counts them on either
+       lane;
+    3. mean-agg (``mean_agg_sim``: mean of the present channels, 6dp
+       HALF_UP) ≥ ``min_sim``;
+    4. the BasicLinkFilter: a pair survives if it is first in
+       (−agg_sim, src, dst) order among the pairs of (src, dst's mask)
+       and among those of (dst, src's mask) — ``candidate_components``'
+       two row_number windows;
+    5. ``graph.connected_components`` in process → min-id components.
+
+    Spark SQL would need a createDataFrame → window → collect round trip
+    per batch for step 4, so the filter and the band bucketing have
+    in-process twins; tests pin this lane to the distributed one."""
+    import numpy as np
+    import pandas as pd
+
+    from ..functions.local_sim import round6_vec
+    from ..util import materialize
+    from .blocking import LSH_MAX_BUCKET, score_pairs
+    from .graph import connected_components
+
+    use_audio = cfg.use_audio and "fingerprint" in pdf.columns
+    n = len(pdf)
+    ids = pdf["id"].to_numpy(dtype=np.int64)
+
+    # ---- 1. candidate index pairs, as codes lo·n + hi (lo < hi)
+    codes = [np.zeros(0, dtype=np.int64)]
+
+    def add_group(rows) -> None:
+        rows = np.asarray(rows, dtype=np.int64)
+        li, ri = np.triu_indices(len(rows), k=1)
+        codes.append(rows[li] * n + rows[ri])
+
+    for rows in pdf.groupby("blocking_key", sort=False).indices.values():
+        add_group(rows)
+    if cfg.use_lsh_round0:
+        buckets: dict[str, list[int]] = {}
+        for i, keys in enumerate(pdf["_bands"]):
+            for k in keys:
+                buckets.setdefault(k, []).append(i)
+        for rows in buckets.values():
+            if len(rows) <= LSH_MAX_BUCKET:
+                add_group(rows)
+    pair_codes = np.unique(np.concatenate(codes))
+
+    # ---- 2. scores, restriction and text bound
+    scored = pd.DataFrame(
+        score_pairs(
+            ids,
+            pdf["sources_mask"].to_numpy(),
+            list(pdf["_tg"]),
+            pair_codes // n,
+            pair_codes % n,
+            cfg.max_sources,
+            _text_bound(cfg, use_audio),
+            fps=pdf["fingerprint"] if use_audio else None,
+        )
+    )
+    materialize(scored)
+
+    # ---- 3. mean-agg threshold (NaN = no vote)
+    chans = scored[["sim_text", "sim_audio"] if use_audio else ["sim_text"]]
+    chans = chans.to_numpy(dtype=np.float64).T
+    present = ~np.isnan(chans)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        agg = round6_vec(
+            np.where(present, chans, 0.0).sum(axis=0) / present.sum(axis=0)
+        )
+    pairs = scored[["src", "dst"]].assign(agg_sim=agg)
+    pairs = pairs[pairs["agg_sim"] >= cfg.min_sim]
+
+    # ---- 4. BasicLinkFilter
+    if cfg.use_link_filter and len(pairs):
+        mask_of = pd.Series(pdf["sources_mask"].to_numpy(), index=ids)
+        pairs = pairs.assign(
+            _sm=mask_of.loc[pairs["src"]].to_numpy(),
+            _dm=mask_of.loc[pairs["dst"]].to_numpy(),
+        ).sort_values(
+            ["agg_sim", "src", "dst"], ascending=[False, True, True], kind="stable"
+        )
+        first = ~pairs.duplicated(["src", "_dm"]) & ~pairs.duplicated(["dst", "_sm"])
+        pairs = pairs[first]
+
+    # ---- 5. connected components
+    return connected_components(pairs, vertices=ids, id_col="id", cc_col="cc")
+
+
+def _cluster_small(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
+    """The single-pass lane of ``cluster_rounds``: ``candidate_components``
+    + ``merge_components`` for a working set that fits one scorer group,
+    run on the driver over ONE collect, with the same kernels and the same
+    result.
+
+    The collect query computes in Spark SQL what the distributed path
+    computes there: the hashed trigram array ``_tg`` and the LSH band
+    keys. Then, in process, ``candidate_components`` (its pandas form) and
+    ``merge_group`` per merge group (the component, or component ×
+    blocking key above ``max_component_rows``, as ``concat_ws`` builds
+    it); singletons pass through."""
+    import numpy as np
+    import pandas as pd
+
+    from .blocking import minhash_band_keys
+
+    use_audio = cfg.use_audio and "fingerprint" in clusters.columns
+    schema = _merge_schema(use_audio)
+    cols = schema.fieldNames()
+    extra = [
+        F.array_sort(
+            F.transform(F.col("trigram_set"), lambda t: F.xxhash64(t))
+        ).alias("_tg")
+    ]
+    if cfg.use_lsh_round0:
+        extra.append(
+            minhash_band_keys(
+                F.col("trigram_set"),
+                cfg.lsh_bands,
+                cfg.lsh_rows_per_band,
+                cfg.lsh_seed,
+            ).alias("_bands")
+        )
+    pdf = clusters.select(*cols, *extra).toPandas()
+    spark = clusters.sparkSession
+    if len(pdf) == 0:
+        return spark.createDataFrame([], schema)
+
+    cc = candidate_components(pdf, cfg)["cc"].to_numpy()
+    _, inverse, counts = np.unique(cc, return_inverse=True, return_counts=True)
+    size = counts[inverse]
+
+    # ---- per-group merge; singletons pass through
+    group = [
+        str(c) if s <= cfg.max_component_rows or not isinstance(k, str) else f"{c}|{k}"
+        for c, s, k in zip(cc.tolist(), size.tolist(), pdf["blocking_key"])
+    ]
+    rows = pdf[cols].assign(blocking_key=group)
+    parts = [rows[size == 1]]
+    multi = rows[size > 1]
+    for _, g in multi.groupby("blocking_key", sort=False):
+        parts.append(merge_group(g, cfg.min_sim, cfg.max_sources, use_audio))
+    out = pd.concat(parts, ignore_index=True)
+    return spark.createDataFrame(out, schema)
+
+
+def _restore_keys(merged: DataFrame) -> DataFrame:
+    """Re-key the merged state on its fused labels: the prefix blocking
+    key (so streaming re-keying stays stable) and the trigram set."""
+    from ..functions.text import music_blocking_label
+
+    return merged.withColumn(
+        "blocking_key", music_blocking_label(F.col("label"), 4)
+    ).withColumn("trigram_set", trigram_set(F.col("label")))
 
 
 def cluster_rounds(
@@ -504,11 +712,29 @@ def cluster_rounds(
     happens. Stage 2 (merge): per-component local greedy fixpoint — one
     shuffle. The returned state's ``blocking_key`` is restored to the
     prefix key of the fused label (so streaming re-keying stays stable),
-    and ``trigram_set`` is recomputed from the fused label."""
-    from ..util import materialize
+    and ``trigram_set`` is recomputed from the fused label.
+
+    Lane choice: the working set is materialized first and its row count
+    read from the parquet footers (no Spark job; on storage the driver
+    cannot read, one ``limit(2 × max_block_rows + 1).count()`` job). A
+    working set of at most ``2 × max_block_rows`` rows — the largest group
+    the salted scorer ever builds — is clustered in one driver pass
+    (``_cluster_small``) with the same kernels; anything larger takes the
+    distributed path. Salting never changes the pair set, so the gate adds
+    no knob and changes no result: a micro-batch or a small batch pays one
+    collect instead of ~30 Spark jobs, and tests force the distributed
+    path with a small ``max_block_rows``."""
+    from ..util import loop_paths, materialize, parquet_rows
 
     cfg = cfg or ClusterRoundConfig()
-    clusters = materialize(state)
+    gate = 2 * cfg.max_block_rows
+    path = loop_paths(1, "working")[0]
+    clusters = materialize(state, path)
+    n_rows = parquet_rows(path)
+    if n_rows is None:
+        n_rows = clusters.limit(gate + 1).count()
+    if n_rows <= gate:
+        return _restore_keys(_cluster_small(clusters, cfg))
     cc = candidate_components(clusters, cfg)
     sizes = cc.groupBy("cc").agg(F.count(F.lit(1)).alias("_cc_n"))
     clusters = (
@@ -542,9 +768,4 @@ def cluster_rounds(
     ]
     singletons = clusters.filter(F.col("_cc_n") == 1).select(*keep_cols)
     multi = clusters.filter(F.col("_cc_n") > 1).drop("cc", "_cc_n")
-    merged = merge_components(multi, cfg).unionByName(singletons)
-    from ..functions.text import music_blocking_label
-
-    return merged.withColumn(
-        "blocking_key", music_blocking_label(F.col("label"), 4)
-    ).withColumn("trigram_set", trigram_set(F.col("label")))
+    return _restore_keys(merge_components(multi, cfg).unionByName(singletons))

@@ -23,8 +23,8 @@ from pyspark.sql import functions as F
 
 
 def _local_union_find(
-    sym: DataFrame, id_col: str, cc_col: str, parquet_path: str | None = None
-) -> DataFrame:
+    sym, id_col: str, cc_col: str, parquet_path: str | None = None
+):
     """Driver-side exact min-id union-find over a (small) symmetric edge
     list — the adaptive fast path of ``connected_components``.
 
@@ -39,11 +39,14 @@ def _local_union_find(
     ``parquet_path``: when the caller just materialized ``sym`` to local
     parquet, the edge pull reads those files directly via pyarrow instead
     of running a Spark collect job — one fewer action on the per-batch
-    serial path (remote/URI paths fall back to the Spark pull)."""
+    serial path (remote/URI paths fall back to the Spark pull).
+
+    A pandas ``sym`` (the single-pass clustering lane's edges, already on
+    the driver) is solved as is, and its labels come back as pandas."""
     import pandas as pd
 
-    pdf = None
-    if parquet_path is not None and "://" not in parquet_path:
+    pdf = sym[sym["a"] < sym["b"]] if isinstance(sym, pd.DataFrame) else None
+    if pdf is None and parquet_path is not None and "://" not in parquet_path:
         try:
             import glob as _glob
 
@@ -77,6 +80,8 @@ def _local_union_find(
             parent[hi] = lo
     nodes = pd.unique(pd.concat([pdf["a"], pdf["b"]], ignore_index=True))
     out = pd.DataFrame({id_col: nodes, cc_col: [find(int(n)) for n in nodes]})
+    if isinstance(sym, pd.DataFrame):
+        return out
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -89,8 +94,8 @@ def _local_union_find(
 
 
 def connected_components(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
+    edges,
+    vertices=None,
     id_col: str = "id",
     cc_col: str = "cc_id",
     max_iter: int = 50,
@@ -120,9 +125,34 @@ def connected_components(
     tables and costs a driver round-trip per exchange (at this scale the
     static planner also auto-broadcasts the small label side from parquet
     stats, which AQE only discovered after extra stage barriers).
-    """
-    from ..util import loop_paths, materialize
 
+    In-process form (``clustering``'s single-pass lane): ``edges`` a
+    pandas (src, dst) frame, ``vertices`` an id array. The symmetrized
+    list is written as below (pyarrow, no Spark job), so a run's parquet
+    record of linked edges reads the same on both lanes; the union-find
+    then runs on the frame and the labels come back as pandas, one row
+    per vertex in ``vertices`` order.
+    """
+    from ..util import loop_paths, materialize, parquet_rows
+
+    if not isinstance(edges, DataFrame):
+        import numpy as np
+        import pandas as pd
+
+        src = edges["src"].to_numpy(np.int64)
+        dst = edges["dst"].to_numpy(np.int64)
+        sym = pd.DataFrame(
+            {"a": np.concatenate([src, dst]), "b": np.concatenate([dst, src])}
+        ).drop_duplicates()
+        materialize(sym, loop_paths(1, "cc_sym")[0])
+        labels = _local_union_find(sym, id_col, cc_col)
+        if vertices is None:
+            return labels
+        cc_of = dict(zip(labels[id_col].tolist(), labels[cc_col].tolist()))
+        ids = np.asarray(vertices, dtype=np.int64).tolist()
+        return pd.DataFrame(
+            {id_col: ids, cc_col: [cc_of.get(i, i) for i in ids]}, dtype="int64"
+        )
     # materialize the symmetrized edge list ONCE: the union references the
     # (possibly expensive) upstream pair plan twice, and the iteration must
     # never re-execute it. Parquet round-trips, not localCheckpoint — see
@@ -149,24 +179,7 @@ def connected_components(
     # ~2× that). The default 4M-edge threshold is therefore ~200 MB on the
     # driver — tune SPARK_GRAFT_CC_LOCAL_EDGES to driver_mem_bytes/48 when
     # changing it blind, or set it to 0 to force the distributed loop.
-    n_sym = None
-    if "://" not in sym_path:
-        try:
-            import glob as _glob
-
-            import pyarrow.parquet as _pq
-
-            _files = _glob.glob(os.path.join(sym_path, "*.parquet"))
-            # an empty glob (e.g. a schemeless shared-FS default FS where
-            # the materialize path is not on the driver's local disk) must
-            # NOT read as n_sym=0 — that would always select the
-            # driver-local path and defeat the memory safeguard
-            if _files:
-                n_sym = sum(
-                    _pq.ParquetFile(f).metadata.num_rows for f in _files
-                )
-        except Exception:
-            n_sym = None
+    n_sym = parquet_rows(sym_path)
     if n_sym is None:
         n_sym = sym.count()
     n_undirected = n_sym // 2

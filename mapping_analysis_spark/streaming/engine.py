@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from ..pipeline import PipelineConfig, prepare
 from ..operators.clustering import ClusterRoundConfig, _cluster_state
+from ..util import parquet_rows
 
 
 @dataclass
@@ -91,26 +92,6 @@ class StreamingERConfig:
     @property
     def checkpoint_dir(self) -> str:
         return _urljoin(self.work_dir, "checkpoint")
-
-
-def _parquet_footer_rows(path: str) -> int | None:
-    """Row count of a local parquet directory from file footers — a
-    driver-side metadata read replacing a Spark count job on the per-batch
-    serial path. Returns None (caller falls back to .count()) for remote
-    URIs, empty globs, or any pyarrow failure."""
-    if "://" in path:
-        return None
-    try:
-        import glob as _glob
-
-        import pyarrow.parquet as _pq
-
-        files = _glob.glob(os.path.join(path, "*.parquet"))
-        if not files:
-            return None
-        return sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:
-        return None
 
 
 def _urljoin(base: str, *parts: str) -> str:
@@ -248,8 +229,8 @@ class StreamingERJob:
         jobs."""
         droot = self.fs.join(self.cfg.state_dir, f"d={batch_id}")
         new_rows = self._write_checked(rows, self.fs.join(droot, "rows"))
-        n_new = _parquet_footer_rows(self.fs.join(droot, "rows"))
-        n_removed = _parquet_footer_rows(self.fs.join(droot, "removed"))
+        n_new = parquet_rows(self.fs.join(droot, "rows"))
+        n_removed = parquet_rows(self.fs.join(droot, "removed"))
         if n_new is None:
             n_new = new_rows.count()
         if n_removed is None:

@@ -37,14 +37,35 @@ def _base_dir() -> str:
     return _BASE
 
 
-def materialize(df: DataFrame, path: str | None = None) -> DataFrame:
+def materialize(df, path: str | None = None) -> DataFrame:
     """Write ``df`` to parquet and return a DataFrame reading it back —
     a hard lineage cut. ``path`` may be provided to reuse/alternate a
     fixed location (bounded disk in loops); otherwise a fresh temp subdir
-    is used."""
-    spark = df.sparkSession
+    is used.
+
+    ``df`` may also be a pandas frame on the driver (the single-pass
+    clustering lane's scored pairs and edges): a driver-local path is
+    written there with pyarrow — no Spark job — and read back with the
+    frame's own schema, so the result lands in the same place, in the
+    same form, as the distributed path's."""
     if path is None:
         path = os.path.join(_base_dir(), uuid.uuid4().hex)
+    if not isinstance(df, DataFrame):
+        from pyspark.sql import SparkSession
+
+        spark = SparkSession.active()
+        if "://" in path:
+            return materialize(spark.createDataFrame(df), path)
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        table = pa.Table.from_pandas(df, preserve_index=False)
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+        return spark.read.schema(from_arrow_schema(table.schema)).parquet(path)
+    spark = df.sparkSession
     # Small rowgroups (8 MB vs the 128 MB default): parquet splits only at
     # rowgroup boundaries, so a materialized table written as a few
     # AQE-coalesced partitions is otherwise re-read at ~#rowgroups-way
@@ -55,6 +76,27 @@ def materialize(df: DataFrame, path: str | None = None) -> DataFrame:
         "parquet.block.size", str(8 * 1024 * 1024)
     ).parquet(path)
     return spark.read.parquet(path)
+
+
+def parquet_rows(path: str) -> int | None:
+    """Row count of a driver-local parquet directory from its file footers
+    — a metadata read that costs no Spark job. None for remote URIs, an
+    empty glob (e.g. a schemeless shared-FS default FS where the path is
+    not on the driver's disk) or any pyarrow failure; callers then count
+    with Spark or take their general path."""
+    if "://" in path:
+        return None
+    try:
+        import glob
+
+        import pyarrow.parquet as pq
+
+        files = glob.glob(os.path.join(path, "*.parquet"))
+        if not files:
+            return None
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    except Exception:  # ArrowInvalid is a ValueError; OSError on races
+        return None
 
 
 def loop_paths(n: int = 2, tag: str = "loop") -> list[str]:

@@ -45,13 +45,13 @@ def corpus(spark, tmp_path_factory):
     return flat, df
 
 
-def _run_job(spark, source_dir, work_dir, max_files=1):
+def _run_job(spark, source_dir, work_dir, max_files=1, max_block_rows=256):
     cfg = StreamingERConfig(
         source_dir=source_dir,
         work_dir=work_dir,
         watermark_delay_sec=24 * 3600,  # generous: datagen has late rows
         max_files_per_trigger=max_files,
-        pipeline=PipelineConfig(min_sim=0.7),
+        pipeline=PipelineConfig(min_sim=0.7, max_block_rows=max_block_rows),
     )
     job = StreamingERJob(spark, cfg)
     q = job.start(available_now=True)
@@ -59,19 +59,21 @@ def _run_job(spark, source_dir, work_dir, max_files=1):
     return job
 
 
-def test_streaming_matches_batch(spark, corpus, tmp_path):
+def _check_streaming_matches_batch(spark, corpus, work, max_block_rows=256):
     """All micro-batches processed ⇒ same number of clusters and identical
     membership partition as one batch run (the reference's invariant:
-    incremental output == batch output for the same input)."""
+    incremental output == batch output for the same input). Returns the
+    stream's final state."""
     source_dir, full_df = corpus
-    job = _run_job(spark, source_dir, str(tmp_path / "work"))
+    job = _run_job(spark, source_dir, work, max_block_rows=max_block_rows)
     state = job.final_state()
     assert state is not None
     stream_members = sorted(
         tuple(sorted(r.members)) for r in state.select("members").collect()
     )
     batch = run_batch(
-        full_df.drop("gold_cluster"), PipelineConfig(min_sim=0.7)
+        full_df.drop("gold_cluster"),
+        PipelineConfig(min_sim=0.7, max_block_rows=max_block_rows),
     )["state"]
     batch_members = sorted(
         tuple(sorted(r.members)) for r in batch.select("members").collect()
@@ -85,6 +87,38 @@ def test_streaming_matches_batch(spark, corpus, tmp_path):
     sset, bset = set(stream_members), set(batch_members)
     agreement = len(sset & bset) / max(len(sset | bset), 1)
     assert agreement > 0.7, f"stream/batch cluster agreement {agreement:.2f}"
+    return state
+
+
+def _state_rows(state):
+    return sorted(
+        (
+            r.id,
+            tuple(sorted(r.members)),
+            r.sources_mask,
+            r.label,
+            r.blocking_key,
+            None if r.fingerprint is None else tuple(r.fingerprint),
+        )
+        for r in state.collect()
+    )
+
+
+def test_streaming_matches_batch(spark, corpus, tmp_path):
+    """Stream vs batch agreement with the default config: every micro-batch
+    working set fits the single-pass clustering lane."""
+    _check_streaming_matches_batch(spark, corpus, str(tmp_path / "work"))
+
+
+def test_streaming_matches_batch_distributed(spark, corpus, tmp_path):
+    """The same agreement with the distributed clustering path forced
+    (max_block_rows=2: the single-pass gate is 4 rows), and a stream state
+    identical, row for row, to the single-pass lane's."""
+    dist = _check_streaming_matches_batch(
+        spark, corpus, str(tmp_path / "dist"), max_block_rows=2
+    )
+    lane = _run_job(spark, corpus[0], str(tmp_path / "lane")).final_state()
+    assert _state_rows(dist) == _state_rows(lane)
 
 
 def test_exactly_once_replay(spark, corpus, tmp_path):
@@ -717,6 +751,68 @@ def test_truncated_snapshot_with_marker_is_recovered(spark, corpus, tmp_path):
         for r in job_r.final_state().select("members").collect()
     )
     assert state_after == state_expected
+
+
+def _refuse_without_success_markers(spark, job, batch_df, batch_id):
+    """Process one batch with the output committer's ``_SUCCESS`` markers
+    switched off (a common object-store tuning); the commit must fail
+    loudly instead of publishing a version that reads back as
+    uncommitted."""
+    key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(RuntimeError, match="_SUCCESS marker"):
+            job.process_batch(batch_df, batch_id)
+    finally:
+        spark.conf.unset(key)
+
+
+def _batch_reader(spark, source_dir):
+    from mapping_analysis_spark.schema import CLIPS_SCHEMA
+
+    files = sorted(os.listdir(source_dir))
+    return lambda b: spark.read.schema(CLIPS_SCHEMA).parquet(
+        os.path.join(source_dir, files[b])
+    )
+
+
+def test_commit_refuses_delta_without_success_markers(spark, corpus, tmp_path):
+    """Delta branch of the commit-time ``_SUCCESS`` check."""
+    source_dir, _ = corpus
+    work = str(tmp_path / "w")
+    job = StreamingERJob(
+        spark,
+        StreamingERConfig(
+            source_dir=source_dir,
+            work_dir=work,
+            watermark_delay_sec=24 * 3600,
+            pipeline=PipelineConfig(min_sim=0.7),
+        ),
+    )
+    read = _batch_reader(spark, source_dir)
+    job.process_batch(read(0), 0)
+    assert job._state_entries() == [(0, "full")]
+    _refuse_without_success_markers(spark, job, read(1), 1)
+    assert not os.path.exists(os.path.join(work, "state", "d=1", "_COMMITTED"))
+    assert job._state_entries() == [(0, "full")]
+
+
+def test_commit_refuses_snapshot_without_success_markers(spark, corpus, tmp_path):
+    """Compacted branch: the first batch writes a full snapshot."""
+    source_dir, _ = corpus
+    work = str(tmp_path / "w")
+    job = StreamingERJob(
+        spark,
+        StreamingERConfig(
+            source_dir=source_dir,
+            work_dir=work,
+            watermark_delay_sec=24 * 3600,
+            pipeline=PipelineConfig(min_sim=0.7),
+        ),
+    )
+    _refuse_without_success_markers(spark, job, _batch_reader(spark, source_dir)(0), 0)
+    assert not os.path.exists(os.path.join(work, "state", "v=0", "_COMMITTED"))
+    assert job._state_entries() == []
 
 
 def test_empty_delta_plan_reads_back(spark, tmp_path, monkeypatch):
