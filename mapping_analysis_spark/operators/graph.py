@@ -232,12 +232,9 @@ def connected_components(
 
     from pyspark.sql import Observation
 
-    import time
-
     spark = edges.sparkSession
     aqe_was = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    _t_loop = time.time()
     try:
         for _i in range(max_iter):
             nbr = (
@@ -285,13 +282,6 @@ def connected_components(
                 paths[_i % 2],
             )
             n_changed = int(obs.get["n_changed"] or 0)
-            if os.environ.get("SPARK_GRAFT_DEBUG_CC"):
-                print(
-                    f"[cc] round {_i}: n_changed={n_changed} "
-                    f"t={time.time() - _t_loop:.2f}s",
-                    flush=True,
-                )
-                _t_loop = time.time()
             if n_changed == 0:
                 break
     finally:

@@ -7,30 +7,39 @@ INITIAL_CLUSTERING / VERTEX_ADDITION) as a Structured Streaming job:
 * source: file stream over the clips table directory (on a cluster this is
   ``spark.readStream.format("iceberg")`` — the file-stream source keeps the
   sandbox dependency-free; the engine only assumes an append-only table).
-* per micro-batch (``foreachBatch``): union the state clusters of the
-  AFFECTED blocking keys with the new arrivals, re-run the bounded
-  max-both merge on those keys only, emit updated clusters + match pairs.
-  Keys without arrivals are untouched — the micro-batch cost scales with
-  the batch, not the corpus (the reference recomputes per affected key
-  group too: VERTEX_ADDITION unions representatives ∪ new vertices).
+* per micro-batch (``foreachBatch``): union the state clusters that share
+  a blocking key or an LSH band key with an arrival (the AFFECTED
+  clusters) with the new arrivals and re-cluster that working set with
+  the batch path's ``cluster_rounds`` (candidate components, then a
+  greedy merge per component); every other cluster is carried over
+  unchanged (the reference recomputes per affected key group too:
+  VERTEX_ADDITION unions representatives ∪ new vertices). Finding the
+  affected clusters reconstructs and scans the whole state, so the
+  lookup grows with the corpus, not with the batch.
 * state: log-structured parquet versions — per batch a DELTA
   ``state_dir/d=<batch_id>`` holding only the updated clusters (``rows/``)
   plus the ids consumed from prior state (``removed/`` tombstones), with a
   periodic full-snapshot compaction ``state_dir/v=<batch_id>`` every
-  ``compact_every`` batches. Per-batch state I/O therefore scales with the
-  BATCH (touched clusters), not the corpus — at 10^12 clips a full-state
-  rewrite per micro-batch would dwarf the actual work. Readers reconstruct
+  ``compact_every`` batches. Between compactions the state WRITES scale
+  with the batch (touched clusters); every READ reconstructs
   ``state = base ∘ deltas`` (anti-join tombstones, union rows; tombstone
-  sets are batch-sized → broadcast anti-joins). Every version stays
-  invisible until its commit marker lands; a replayed batch finds the
-  previous versions intact and — the pipeline being deterministic —
-  rewrites byte-identical output (exactly-once effect on the sink).
+  sets are batch-sized → broadcast anti-joins).
+* commit: a version's ``_COMMITTED`` file is its manifest, written last
+  and atomically — batch id, kind, cluster total, the cumulative max event
+  time and the band-key format. A version counts only with a manifest
+  that parses and its data ``_SUCCESS`` markers. A batch takes everything
+  it needs from the past out of the manifest of the latest committed
+  version before it, the one its state load builds on, so a replayed
+  batch reads what its first run read and — the pipeline being
+  deterministic — rewrites byte-identical output (exactly-once effect on
+  the sink).
 * sink: output partitioned by ``batch_id``; a replay overwrites its own
   partition only (idempotent commit keyed by batchId — the Iceberg
   overwrite-by-filter pattern).
-* watermark: rows older than (max event time seen − delay) are dropped and
-  counted (late-data policy of ``withWatermark`` enforced explicitly since
-  foreachBatch bypasses Spark's aggregation-level filtering).
+* watermark: rows older than (max event time of the earlier batches −
+  delay) are dropped and counted (late-data policy of ``withWatermark``
+  enforced explicitly since foreachBatch bypasses Spark's aggregation-level
+  filtering).
 * lineage/metrics: one row per (batch, input partition) — files, rows,
   late rows, clusters touched, wall time — appended under
   ``lineage_dir/batch_id=<id>`` (same idempotent scheme).
@@ -52,6 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline import PipelineConfig, prepare
+from ..operators.blocking import BAND_KEY_FORMAT, minhash_band_keys
 from ..operators.clustering import ClusterRoundConfig, _cluster_state
 from ..util import parquet_rows
 
@@ -107,8 +117,8 @@ def _urljoin(base: str, *parts: str) -> str:
 class StreamingERJob:
     """Micro-batch incremental clustering over a clips file stream.
 
-    All state-store metadata IO (listing committed versions, commit
-    markers, watermark/band-format blobs, retiring history) goes through
+    All state-store metadata IO (listing committed versions, reading and
+    writing their manifests, retiring history) goes through
     the ``fs.StateFS`` seam — ``work_dir`` may be a plain path (POSIX
     impl) or an ``hdfs://``/``s3a://`` URI (Hadoop FileSystem via the
     session JVM); Spark's own parquet reads/writes are URI-native either
@@ -126,49 +136,64 @@ class StreamingERJob:
 
     # -- state store (log-structured: deltas + periodic compaction) --------
 
+    def _version_root(self, batch_id: int, kind: str) -> str:
+        prefix = "v" if kind == "full" else "d"
+        return self.fs.join(self.cfg.state_dir, f"{prefix}={batch_id}")
+
+    def _data_dirs(self, batch_id: int, kind: str) -> list[str]:
+        """The parquet dirs of a version, each guarded by its ``_SUCCESS``."""
+        root = self._version_root(batch_id, kind)
+        if kind == "full":
+            return [root]
+        return [self.fs.join(root, "rows"), self.fs.join(root, "removed")]
+
+    def _manifest(self, batch_id: int, kind: str) -> dict | None:
+        """The version's ``_COMMITTED`` manifest, or None if it is absent or
+        does not parse (``write_text`` is atomic, so a manifest that does
+        not parse was never committed)."""
+        path = self.fs.join(self._version_root(batch_id, kind), "_COMMITTED")
+        if not self.fs.exists(path):
+            return None
+        try:
+            manifest = json.loads(self.fs.read_text(path))
+            int(manifest["n_clusters_total"])
+        except (ValueError, KeyError, TypeError):
+            return None
+        return manifest
+
     def _state_entries(self) -> list[tuple[int, str]]:
         """Committed state entries as (batch_id, kind), kind ∈ {'full',
         'delta'}, ascending by batch. A compaction batch leaves only its
         ``v=`` dir (its scratch delta is removed at commit).
 
-        A version counts as committed only if BOTH its commit marker AND
-        its data files' ``_SUCCESS`` markers are present: the marker is
+        A version counts as committed only if BOTH its manifest AND its
+        data files' ``_SUCCESS`` markers are present: the manifest is
         written strictly after the data, but a filesystem without atomic
         visibility ordering (object stores, a crash mid-rename-race) can
-        surface the marker while the parquet write is still partial —
-        requiring ``_SUCCESS`` makes a truncated version read as
-        uncommitted, so recovery rebuilds from the previous committed
-        version and the deterministic replay rewrites it (tested in
-        tests/test_streaming.py failure-injection cases)."""
+        surface it while the parquet write is still partial — requiring
+        ``_SUCCESS`` makes a truncated version read as uncommitted, so
+        recovery rebuilds from the previous committed version and the
+        deterministic replay rewrites it (tested in tests/test_streaming.py
+        failure-injection cases)."""
         out = []
         for d in self.fs.listdir(self.cfg.state_dir):
-            if not (d.startswith("v=") or d.startswith("d=")):
+            kind = {"v=": "full", "d=": "delta"}.get(d[:2])
+            if kind is None:
                 continue
-            root = self.fs.join(self.cfg.state_dir, d)
-            if not self.fs.exists(self.fs.join(root, "_COMMITTED")):
-                continue
-            if d.startswith("v="):
-                data_ok = self.fs.exists(self.fs.join(root, "_SUCCESS"))
-            else:
-                data_ok = self.fs.exists(
-                    self.fs.join(root, "rows", "_SUCCESS")
-                ) and self.fs.exists(self.fs.join(root, "removed", "_SUCCESS"))
-            if data_ok:
-                out.append((int(d[2:]), "full" if d.startswith("v=") else "delta"))
+            b = int(d[2:])
+            if self._manifest(b, kind) is not None and all(
+                self.fs.exists(self.fs.join(p, "_SUCCESS"))
+                for p in self._data_dirs(b, kind)
+            ):
+                out.append((b, kind))
         return sorted(out)
 
     def _committed_versions(self) -> list[int]:
         return [b for b, _ in self._state_entries()]
 
     def _marker_total(self, batch_id: int, kind: str) -> int | None:
-        prefix = "v" if kind == "full" else "d"
-        path = self.fs.join(
-            self.cfg.state_dir, f"{prefix}={batch_id}", "_COMMITTED"
-        )
-        try:
-            return int(json.loads(self.fs.read_text(path))["n_clusters_total"])
-        except (OSError, ValueError, KeyError, TypeError):
-            return None
+        manifest = self._manifest(batch_id, kind)
+        return None if manifest is None else int(manifest["n_clusters_total"])
 
     def _load_state(self, before_batch: int) -> DataFrame | None:
         """Reconstruct the cluster state as of just before ``before_batch``:
@@ -185,15 +210,13 @@ class StreamingERJob:
                 "retirement removed too much"
             )
         base = max(fulls)
-        state = self.spark.read.parquet(
-            self.fs.join(self.cfg.state_dir, f"v={base}")
-        )
+        state = self.spark.read.parquet(self._version_root(base, "full"))
         for b, kind in entries:
             if kind != "delta" or b <= base:
                 continue
-            droot = self.fs.join(self.cfg.state_dir, f"d={b}")
-            tomb = self.spark.read.parquet(self.fs.join(droot, "removed"))
-            rows = self.spark.read.parquet(self.fs.join(droot, "rows"))
+            rows_dir, removed_dir = self._data_dirs(b, kind)
+            tomb = self.spark.read.parquet(removed_dir)
+            rows = self.spark.read.parquet(rows_dir)
             state = state.join(tomb, "id", "left_anti").unionByName(rows)
         return state
 
@@ -227,10 +250,10 @@ class StreamingERJob:
         FOOTERS (driver-side metadata read, no Spark job) when the state dir
         is driver-local; remote/URI state falls back to two tiny count
         jobs."""
-        droot = self.fs.join(self.cfg.state_dir, f"d={batch_id}")
-        new_rows = self._write_checked(rows, self.fs.join(droot, "rows"))
-        n_new = parquet_rows(self.fs.join(droot, "rows"))
-        n_removed = parquet_rows(self.fs.join(droot, "removed"))
+        rows_dir, removed_dir = self._data_dirs(batch_id, "delta")
+        new_rows = self._write_checked(rows, rows_dir)
+        n_new = parquet_rows(rows_dir)
+        n_removed = parquet_rows(removed_dir)
         if n_new is None:
             n_new = new_rows.count()
         if n_removed is None:
@@ -239,7 +262,7 @@ class StreamingERJob:
 
     def _write_full(self, state: DataFrame, batch_id: int) -> None:
         """Compaction: write the fully reconstructed state (uncommitted)."""
-        path = self.fs.join(self.cfg.state_dir, f"v={batch_id}")
+        path = self._version_root(batch_id, "full")
         self.fs.rmtree(path)
         self._write_checked(state, path)
 
@@ -256,24 +279,11 @@ class StreamingERJob:
         completed, distinguishes them: the writes above just finished, so
         an absent marker means the committer writes none — abort before
         the version is ever published."""
-        if compacted:
-            missing = [
-                p
-                for p in (
-                    self.fs.join(self.cfg.state_dir, f"v={batch_id}", "_SUCCESS"),
-                )
-                if not self.fs.exists(p)
-            ]
-        else:
-            droot = self.fs.join(self.cfg.state_dir, f"d={batch_id}")
-            missing = [
-                p
-                for p in (
-                    self.fs.join(droot, "rows", "_SUCCESS"),
-                    self.fs.join(droot, "removed", "_SUCCESS"),
-                )
-                if not self.fs.exists(p)
-            ]
+        markers = [
+            self.fs.join(d, "_SUCCESS")
+            for d in self._data_dirs(batch_id, "full" if compacted else "delta")
+        ]
+        missing = [p for p in markers if not self.fs.exists(p)]
         if missing:
             raise RuntimeError(
                 "state commit aborted: data _SUCCESS marker(s) missing "
@@ -286,44 +296,45 @@ class StreamingERJob:
             )
 
     def _commit_state(
-        self, batch_id: int, compacted: bool, n_clusters_total: int
+        self,
+        batch_id: int,
+        compacted: bool,
+        n_clusters_total: int,
+        max_event_time: float | None = None,
     ) -> None:
+        """Publish the version by writing its manifest, last and atomically.
+        The band-key format is always the current one: a batch that found a
+        stale format rebuilt the index and compacted."""
         self._verify_success_markers(batch_id, compacted)
-        marker = json.dumps(
-            {"batch_id": batch_id, "n_clusters_total": n_clusters_total}
+        kind = "full" if compacted else "delta"
+        manifest = {
+            "batch_id": batch_id,
+            "kind": kind,
+            "n_clusters_total": n_clusters_total,
+            "max_event_time": max_event_time,
+            "band_format": BAND_KEY_FORMAT,
+        }
+        self.fs.write_text(
+            self.fs.join(self._version_root(batch_id, kind), "_COMMITTED"),
+            json.dumps(manifest),
         )
         if compacted:
-            self.fs.write_text(
-                self.fs.join(self.cfg.state_dir, f"v={batch_id}", "_COMMITTED"),
-                marker,
-            )
             # the scratch delta is folded into the snapshot
-            self.fs.rmtree(self.fs.join(self.cfg.state_dir, f"d={batch_id}"))
-        else:
-            self.fs.write_text(
-                self.fs.join(self.cfg.state_dir, f"d={batch_id}", "_COMMITTED"),
-                marker,
-            )
+            self.fs.rmtree(self._version_root(batch_id, "delta"))
         # retire superseded history: keep the last two snapshots plus every
         # delta at/after the older of them (enough to replay the last batch
         # and debug one compaction generation back)
         entries = self._state_entries()
         fulls = [b for b, k in entries if k == "full"]
         if len(fulls) >= 2:
-            keep_from = fulls[-2]
             for b, kind in entries:
-                if b < keep_from:
-                    prefix = "v" if kind == "full" else "d"
-                    self.fs.rmtree(
-                        self.fs.join(self.cfg.state_dir, f"{prefix}={b}")
-                    )
+                if b < fulls[-2]:
+                    self.fs.rmtree(self._version_root(b, kind))
 
     @staticmethod
     def _band_keys_expr(rcfg: ClusterRoundConfig):
         """LSH band keys of the cluster label's trigram set (the state's
         secondary index for affected-cluster lookup)."""
-        from ..operators.blocking import minhash_band_keys
-
         return minhash_band_keys(
             F.col("trigram_set"),
             rcfg.lsh_bands,
@@ -331,59 +342,30 @@ class StreamingERJob:
             rcfg.lsh_seed,
         )
 
-    # -- band-key index versioning ------------------------------------------
-    # band_keys are PERSISTED in state and equi-joined against freshly
-    # computed arrival keys; if the key derivation ever changes (it did in
-    # round 2: murmur → fold-mix), resuming an old checkpoint would silently
-    # match zero stored keys and degrade affected-cluster lookup to
-    # blocking-key-only. The format token is stored next to the state; on
-    # mismatch the index is rebuilt from the state's trigram sets and a
-    # compaction is forced so the rebuilt keys persist.
-
-    def _band_format_path(self) -> str:
-        return self.fs.join(self.cfg.state_dir, "_band_format.json")
-
-    def _stored_band_format(self) -> str | None:
-        try:
-            return json.loads(self.fs.read_text(self._band_format_path()))[
-                "format"
-            ]
-        except (OSError, ValueError, KeyError):
-            return None
-
-    def _save_band_format(self) -> None:
-        from ..operators.blocking import BAND_KEY_FORMAT
-
-        self.fs.write_text(
-            self._band_format_path(), json.dumps({"format": BAND_KEY_FORMAT})
-        )
-
-    # -- watermark bookkeeping --------------------------------------------
-
-    def _max_event_time(self) -> float | None:
-        path = self.fs.join(self.cfg.state_dir, "_watermark.json")
-        if not self.fs.exists(path):
-            return None
-        return json.loads(self.fs.read_text(path))["max_event_time"]
-
-    def _save_max_event_time(self, value: float) -> None:
-        path = self.fs.join(self.cfg.state_dir, "_watermark.json")
-        self.fs.write_text(path, json.dumps({"max_event_time": value}))
-
     # -- the micro-batch ---------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.time()
         cfg = self.cfg
         pcfg = cfg.pipeline
+        # Everything this batch takes from the past comes from the manifest
+        # of the latest committed version before it — the version
+        # _load_state builds on — so a replay reads what its first run read.
+        prior = [(b, k) for b, k in self._state_entries() if b < batch_id]
+        prev = self._manifest(*prior[-1]) if prior else {}
+        if prev and "max_event_time" not in prev:
+            print(
+                f"[batch {batch_id}] state manifest has no max_event_time: "
+                "running without a late-row threshold",
+                flush=True,
+            )
+        prev_max = prev.get("max_event_time")
         # df.observe piggybacks input-row count, event-time high-water mark
         # AND the late-row count onto the FIRST action (the count below) —
         # no separate agg/count jobs (SURVEY §2.4 accumulators / §2.11
-        # metrics). The watermark threshold is known before any action: it
-        # derives from the PREVIOUS batches' max event time on disk.
+        # metrics). The watermark threshold is known before any action.
         from pyspark.sql import Observation
 
-        prev_max = self._max_event_time()
         threshold = None
         if prev_max is not None:
             threshold = prev_max - cfg.watermark_delay_sec
@@ -436,26 +418,29 @@ class StreamingERJob:
         arrivals = _cluster_state(prepared, rcfg.use_audio)
         band_expr = self._band_keys_expr(rcfg)
         state = self._load_state(batch_id)
+        # The persisted band keys are equi-joined against freshly computed
+        # arrival keys, so a state written under another key derivation
+        # (round 2 changed it: murmur → fold-mix) would match none of them.
+        # On a format mismatch the index is rebuilt from the trigram sets
+        # and a compaction persists it.
         index_rebuilt = False
-        if state is not None:
-            from ..operators.blocking import BAND_KEY_FORMAT
-
-            stored_fmt = self._stored_band_format()
-            if stored_fmt != BAND_KEY_FORMAT:
-                print(
-                    f"[batch {batch_id}] band-key index format "
-                    f"{stored_fmt!r} != {BAND_KEY_FORMAT!r}: rebuilding "
-                    "state index from trigram sets",
-                    flush=True,
-                )
-                state = state.withColumn("band_keys", band_expr)
-                index_rebuilt = True
+        stored_fmt = prev.get("band_format")
+        if state is not None and stored_fmt != BAND_KEY_FORMAT:
+            print(
+                f"[batch {batch_id}] band-key index format "
+                f"{stored_fmt!r} != {BAND_KEY_FORMAT!r}: rebuilding "
+                "state index from trigram sets",
+                flush=True,
+            )
+            state = state.withColumn("band_keys", band_expr)
+            index_rebuilt = True
         # The affected ids are this delta's tombstones. Writing them once,
         # as ``removed/``, runs the state reconstruct, both semi-joins and
         # the arrivals' band-key UDF a single time; the working set then
-        # semi-joins the state against that small read-back.
-        droot = self.fs.join(self.cfg.state_dir, f"d={batch_id}")
-        self.fs.rmtree(droot)  # replay: half-written delta is discarded
+        # semi-joins the state against that small read-back. A replay
+        # discards this batch's earlier delta, half-written or committed.
+        self.fs.rmtree(self._version_root(batch_id, "delta"))
+        rows_dir, removed_dir = self._data_dirs(batch_id, "delta")
         if state is not None:
             arr_keys = arrivals.select("blocking_key").distinct()
             arr_bands = (
@@ -470,42 +455,32 @@ class StreamingERJob:
             touched_ids = by_key.unionByName(by_band).distinct()
         else:
             touched_ids = arrivals.select("id").limit(0)
-        removed = self._write_checked(touched_ids, self.fs.join(droot, "removed"))
+        removed = self._write_checked(touched_ids, removed_dir)
         working = arrivals
         if state is not None:
             touched = state.join(removed, "id", "left_semi").drop("band_keys")
             working = touched.unionByName(arrivals, allowMissingColumns=True)
 
-        # ---- cluster the working set: same decomposition + reciprocal-
-        # best rounds as batch mode (cluster_rounds), so streaming output
-        # converges to the batch result for the same input
+        # ---- cluster the working set: same candidate components and
+        # per-component greedy merge as batch mode (cluster_rounds), so
+        # streaming output converges to the batch result for the same input
         from ..operators.clustering import cluster_rounds
 
         clusters = cluster_rounds(working, rcfg)
         clusters_with_bands = clusters.withColumn("band_keys", band_expr)
         # ---- delta state write: only this batch's updated clusters next
         # to the tombstones above — per-batch state writes scale with the
-        # batch. Cluster-count bookkeeping rides the commit markers:
+        # batch. Cluster-count bookkeeping rides the manifests:
         # total' = total − |tombstones| + |new rows|.
         new_rows, n_new, n_removed = self._write_delta(
             clusters_with_bands, removed, batch_id
         )
-        prev_entries = [
-            (b, k) for b, k in self._state_entries() if b < batch_id
-        ]
-        if prev_entries:
-            prev_total = self._marker_total(*prev_entries[-1])
-            if prev_total is None and state is not None:
-                prev_total = state.count()
-            prev_total = prev_total or 0
-        else:
-            prev_total = 0
-        n_clusters = prev_total - n_removed + n_new
+        n_clusters = prev.get("n_clusters_total", 0) - n_removed + n_new
         # ---- periodic compaction: fold the delta chain into a snapshot
-        fulls_before = [b for b, k in prev_entries if k == "full"]
+        fulls_before = [b for b, k in prior if k == "full"]
         deltas_since = [
             b
-            for b, k in prev_entries
+            for b, k in prior
             if k == "delta" and (not fulls_before or b > fulls_before[-1])
         ]
         compacted = (
@@ -525,17 +500,14 @@ class StreamingERJob:
         # a filesystem copy (hardlink locally, FileUtil.copy on Hadoop FS)
         # of the delta parquet instead of a second Spark re-encode job —
         # the band_keys index column rides along and output() drops it.
-        # Visibility is still gated by the commit marker; a replayed batch
+        # Visibility is still gated by the manifest; a replayed batch
         # rmtrees its own partition first (idempotent).
         out_path = self.fs.join(cfg.output_dir, f"batch_id={batch_id}")
         self.fs.rmtree(out_path)
-        self.fs.copytree(self.fs.join(droot, "rows"), out_path)
+        self.fs.copytree(rows_dir, out_path)
 
-        # ---- state commit + watermark + lineage
-        self._commit_state(batch_id, compacted, n_clusters)
-        self._save_band_format()
-        if new_max is not None:
-            self._save_max_event_time(new_max)
+        # ---- state commit (the manifest carries the watermark) + lineage
+        self._commit_state(batch_id, compacted, n_clusters, new_max)
         lineage_path = self.fs.join(cfg.lineage_dir, f"batch_id={batch_id}")
         self.fs.rmtree(lineage_path)
         part_counts = (

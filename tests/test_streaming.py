@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -254,44 +255,98 @@ def test_lineage_written(spark, corpus, tmp_path):
     assert per_batch == spark.read.parquet(source_dir).count()
 
 
-def test_watermark_drops_late_rows(spark, tmp_path):
-    """A batch far older than the high-water mark is dropped and counted."""
+T0 = datetime(2026, 1, 1, tzinfo=timezone.utc)
+
+
+def _clips(spark, *rows):
+    """A micro-batch of audio-less clips from (clip_id, event_time) pairs."""
     import pandas as pd
-    from datetime import datetime, timezone
 
     from mapping_analysis_spark.schema import CLIPS_SCHEMA
 
-    def mk(ts, cid):
-        return {
-            "clip_id": cid, "bytes": None, "sr_hz": 8000, "dur_ms": 1000,
-            "codec": "pcm_s16le", "transcript": f"t {cid}", "source": "1",
-            "event_time": ts,
-        }
-
-    t0 = datetime(2026, 1, 1, tzinfo=timezone.utc)
-    fresh = spark.createDataFrame(
-        pd.DataFrame([mk(t0, "a1")]), CLIPS_SCHEMA
-    )
-    from datetime import timedelta
-
-    stale = spark.createDataFrame(
-        pd.DataFrame([mk(t0 - timedelta(hours=5), "b1"), mk(t0, "b2")]),
+    return spark.createDataFrame(
+        pd.DataFrame(
+            [
+                {
+                    "clip_id": cid, "bytes": None, "sr_hz": 8000, "dur_ms": 1000,
+                    "codec": "pcm_s16le", "transcript": f"t {cid}", "source": "1",
+                    "event_time": ts,
+                }
+                for cid, ts in rows
+            ]
+        ),
         CLIPS_SCHEMA,
     )
-    cfg = StreamingERConfig(
-        source_dir=str(tmp_path / "src"),
-        work_dir=str(tmp_path / "work"),
-        watermark_delay_sec=3600,
-        pipeline=PipelineConfig(min_sim=0.7, use_audio=False),
+
+
+def _small_job(spark, tmp_path):
+    return StreamingERJob(
+        spark,
+        StreamingERConfig(
+            source_dir=str(tmp_path / "src"),
+            work_dir=str(tmp_path / "work"),
+            watermark_delay_sec=3600,
+            pipeline=PipelineConfig(min_sim=0.7, use_audio=False),
+        ),
     )
-    job = StreamingERJob(spark, cfg)
-    job.process_batch(fresh, 0)
-    job.process_batch(stale, 1)
-    lin = job.lineage().filter(F.col("batch_id") == 1).select("n_late_dropped")
-    assert lin.first()[0] == 1
-    state = job.final_state()
-    members = {m for r in state.select("members").collect() for m in r.members}
-    assert len(members) == 2  # a1 + b2; b1 dropped
+
+
+def _members(job):
+    return sorted(
+        m for r in job.final_state().select("members").collect() for m in r.members
+    )
+
+
+def _late_dropped(job, batch_id):
+    lin = job.lineage().filter(F.col("batch_id") == batch_id)
+    return lin.select("n_late_dropped").first()[0]
+
+
+def test_watermark_drops_late_rows(spark, tmp_path):
+    """A batch far older than the high-water mark is dropped and counted."""
+    job = _small_job(spark, tmp_path)
+    job.process_batch(_clips(spark, ("a1", T0)), 0)
+    job.process_batch(_clips(spark, ("b1", T0 - timedelta(hours=5)), ("b2", T0)), 1)
+    assert _late_dropped(job, 1) == 1
+    assert len(_members(job)) == 2  # a1 + b2; b1 dropped
+
+
+def test_replay_reads_the_watermark_its_first_run_read(spark, tmp_path):
+    """A replayed batch takes its late-row threshold from the manifest of
+    the version before it, not from the event times it wrote itself: batch
+    1's own t0+2h must not make its t0−30min row late on the replay."""
+    job = _small_job(spark, tmp_path)
+    b1 = _clips(
+        spark, ("b1", T0 - timedelta(minutes=30)), ("b2", T0 + timedelta(hours=2))
+    )
+    job.process_batch(_clips(spark, ("a1", T0)), 0)
+    job.process_batch(b1, 1)
+    first = (_members(job), _late_dropped(job, 1))
+    job.process_batch(b1, 1)
+    assert (len(first[0]), first[1]) == (3, 0)
+    assert (_members(job), _late_dropped(job, 1)) == first
+
+
+def test_unparseable_manifest_reads_as_uncommitted(spark, tmp_path):
+    """A version whose ``_COMMITTED`` is not a JSON manifest is left out of
+    the committed entries, and replaying its batch rebuilds it."""
+    job = _small_job(spark, tmp_path)
+    batches = [
+        _clips(spark, ("a1", T0)),
+        _clips(spark, ("b1", T0 + timedelta(minutes=1))),
+        _clips(spark, ("c1", T0 + timedelta(minutes=2))),
+    ]
+    for b, df in enumerate(batches):
+        job.process_batch(df, b)
+    entries = job._state_entries()
+    members = _members(job)
+    assert entries == [(0, "full"), (1, "delta"), (2, "delta")]
+    with open(os.path.join(job.cfg.state_dir, "d=2", "_COMMITTED"), "w") as f:
+        f.write('{"batch_id": 2, "n_clus')
+    assert job._state_entries() == entries[:-1]
+    job.process_batch(batches[2], 2)
+    assert job._state_entries() == entries
+    assert _members(job) == members
 
 
 def test_native_window_ops_stream(spark, corpus, tmp_path):
@@ -462,9 +517,17 @@ def test_band_key_index_rebuild_on_format_change(spark, corpus, tmp_path):
     q.awaitTermination(60)
     entries_before = job._state_entries()
     assert len(entries_before) >= 2
-    # simulate a checkpoint written by an older engine: stale format token
-    with open(job._band_format_path(), "w") as f:
-        json.dump({"format": "murmur-v0"}, f)
+    # simulate a state store written by an older engine: a stale format
+    # token in the manifests (in every one, so a replay of an interrupted
+    # batch reads it too)
+    for b, k in entries_before:
+        prefix = "v" if k == "full" else "d"
+        path = os.path.join(work, "state", f"{prefix}={b}", "_COMMITTED")
+        with open(path) as f:
+            manifest = json.load(f)
+        manifest["band_format"] = "murmur-v0"
+        with open(path, "w") as f:
+            json.dump(manifest, f)
     # resume: the first batch must detect the mismatch, rebuild, and force a
     # full snapshot (compact_every=8 would otherwise leave it a delta)
     job2 = StreamingERJob(spark, cfg)
@@ -474,7 +537,7 @@ def test_band_key_index_rebuild_on_format_change(spark, corpus, tmp_path):
     resumed = [e for e in entries_after if e not in entries_before]
     assert resumed, "resume processed no batches"
     assert resumed[0][1] == "full", "format mismatch must force compaction"
-    assert job2._stored_band_format() == BAND_KEY_FORMAT
+    assert job2._manifest(*entries_after[-1])["band_format"] == BAND_KEY_FORMAT
     # every persisted band_keys row equals a fresh recomputation from its
     # trigram set (i.e. the index is in the CURRENT format everywhere)
     rcfg = ClusterRoundConfig(min_sim=0.7)
@@ -589,9 +652,9 @@ def test_soak_50_batches_bounded_state_and_midstream_restart(
 ):
     """100-TB operation is a months-long stream: drive 50 micro-batches
     through the engine and assert (a) the state directory stays bounded by
-    the compaction/retirement policy, (b) watermark metadata does not
-    grow, (c) a kill at ~batch 40 + restart replays to the IDENTICAL final
-    state as an uninterrupted run."""
+    the compaction/retirement policy, (b) version manifests stay small and
+    fixed-shape, with no global metadata blob, (c) a kill at ~batch 40 +
+    restart replays to the IDENTICAL final state as an uninterrupted run."""
     import json as _json
     import time as _time
 
@@ -631,10 +694,21 @@ def test_soak_50_batches_bounded_state_and_midstream_restart(
     assert len(fulls) <= 2
     assert len(deltas) <= 2 * 8
     assert size < 200 * 1024 * 1024
-    # watermark metadata is one fixed-size blob, not a growing log
-    wm = os.path.join(ref_work, "state", "_watermark.json")
-    assert os.path.getsize(wm) < 1024
-    assert set(_json.loads(open(wm).read())) == {"max_event_time"}
+    # the watermark and band format live in the version manifests: no
+    # global blob, and every live manifest is small with one key set
+    state_dir = os.path.join(ref_work, "state")
+    assert not {"_watermark.json", "_band_format.json"} & set(os.listdir(state_dir))
+    key_sets = set()
+    for d in fulls + deltas:
+        manifest = os.path.join(state_dir, d, "_COMMITTED")
+        assert os.path.getsize(manifest) < 1024
+        with open(manifest) as f:
+            key_sets.add(frozenset(_json.load(f)))
+    assert key_sets == {
+        frozenset(
+            {"batch_id", "kind", "n_clusters_total", "max_event_time", "band_format"}
+        )
+    }
 
     # --- soak with mid-stream kill at ~batch 40 + restart
     work = str(tmp_path / "soak")
