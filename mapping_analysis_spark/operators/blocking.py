@@ -631,9 +631,18 @@ def salted_block_pair_scores(
 # instead of silently matching zero keys.
 BAND_KEY_FORMAT = "minhash-foldmix-v1"
 
-# lsh_pairs drops band buckets larger than this (quadratic, low-information
+# band_pairs drops band buckets larger than this (quadratic, low-information
 # signatures); clustering's single-pass lane applies the same cap
 LSH_MAX_BUCKET = 256
+
+# Parameters of the cluster-state band index (``band_keys``): 12 bands × 4
+# rows puts the banding s-curve midpoint at (1/12)^(1/4) ≈ 0.54 Jaccard —
+# generous recall for true pairs whose prefix blocking key diverged (a
+# dropped first token leaves J ≈ 0.6-0.8). Keys derived under these values
+# are persisted, so changing any of them must bump BAND_KEY_FORMAT.
+LSH_BANDS = 12
+LSH_ROWS_PER_BAND = 4
+LSH_SEED = 42
 
 
 def minhash_band_keys(
@@ -701,6 +710,51 @@ def minhash_band_keys(
     return _bands(F.transform(token_col, lambda t: F.xxhash64(t)))
 
 
+def band_keys(trigram_col: Column) -> Column:
+    """The cluster-state band index: ``minhash_band_keys`` of a trigram set
+    with ``LSH_BANDS`` × ``LSH_ROWS_PER_BAND`` and ``LSH_SEED``. The one
+    derivation of the ``band_keys`` column that ``pipeline.prepare``,
+    ``clustering._restore_keys`` and the streaming index rebuild emit and
+    both clustering lanes read."""
+    return minhash_band_keys(trigram_col, LSH_BANDS, LSH_ROWS_PER_BAND, LSH_SEED)
+
+
+def band_pairs(
+    banded: DataFrame,
+    id_col: str,
+    max_bucket: int = LSH_MAX_BUCKET,
+    restrict: Column | None = None,
+) -> DataFrame:
+    """Canonical (src, dst) pairs of the (``id_col``, ``_band``) rows
+    ``banded`` that share a band key: per-band self-join on ``l.id <
+    r.id`` (``restrict`` over the ``l.``/``r.`` aliases is ANDed in), then
+    distinct. Buckets larger than ``max_bucket`` are dropped first — they
+    come from low-information signatures (near-constant trigram profiles)
+    and would go quadratic; the reference prunes the same way by dropping
+    frequent bits (lsh/utils/BitFrequencyCounter.java:31-49). Every
+    reference re-reads ``banded``, so a caller that derives the keys with a
+    UDF materializes it first."""
+    if max_bucket:
+        bucket_sizes = banded.groupBy("_band").agg(F.count(F.lit(1)).alias("_bn"))
+        banded = banded.join(
+            bucket_sizes.filter(F.col("_bn") <= max_bucket), "_band", "left_semi"
+        )
+    cond = (F.col("l._band") == F.col("r._band")) & (
+        F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
+    )
+    if restrict is not None:
+        cond = cond & restrict
+    return (
+        banded.alias("l")
+        .join(banded.alias("r"), cond, "inner")
+        .select(
+            F.col(f"l.{id_col}").alias("src"),
+            F.col(f"r.{id_col}").alias("dst"),
+        )
+        .dropDuplicates(["src", "dst"])
+    )
+
+
 def lsh_pairs(
     df: DataFrame,
     trigram_col: str = "trigram_set",
@@ -712,20 +766,14 @@ def lsh_pairs(
     max_bucket: int = LSH_MAX_BUCKET,
 ) -> DataFrame:
     """LSH_BLOCKING (lsh/utils/LshComputation.java:30-75): signature →
-    band keys → explode → per-band-key self-join i<j → distinct pairs.
-
-    Default 15 bands mirrors the reference's 15 hash families
-    (LshCandidateCreator.java:23-29). Band buckets larger than
-    ``max_bucket`` are dropped — they come from low-information signatures
-    (near-constant trigram profiles) and would go quadratic; the reference
-    prunes the same way by dropping frequent bits
-    (lsh/utils/BitFrequencyCounter.java:31-49). Returns canonical
-    (src, dst).
+    band keys → explode → ``band_pairs``. Default 15 bands mirrors the
+    reference's 15 hash families (LshCandidateCreator.java:23-29). Returns
+    canonical (src, dst).
     """
     from ..util import materialize
 
-    # materialize (id, band): the self-join + bucket-size agg below would
-    # otherwise re-evaluate the minhash UDF once per reference
+    # materialize (id, band): band_pairs reads it three times, and each read
+    # would otherwise re-evaluate the minhash UDF
     banded = materialize(
         df.select(
             F.col(id_col),
@@ -734,30 +782,7 @@ def lsh_pairs(
             ).alias("_band"),
         )
     )
-    if max_bucket:
-        bucket_sizes = banded.groupBy("_band").agg(
-            F.count(F.lit(1)).alias("_bn")
-        )
-        banded = (
-            banded.join(
-                bucket_sizes.filter(F.col("_bn") <= max_bucket), "_band", "left_semi"
-            )
-        )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cond = (F.col("l._band") == F.col("r._band")) & (
-        F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
-    )
-    if restrict is not None:
-        cond = cond & restrict
-    return (
-        left.join(right, cond, "inner")
-        .select(
-            F.col(f"l.{id_col}").alias("src"),
-            F.col(f"r.{id_col}").alias("dst"),
-        )
-        .dropDuplicates(["src", "dst"])
-    )
+    return band_pairs(banded, id_col, max_bucket, restrict)
 
 
 # ---------------------------------------------------------------------------

@@ -24,7 +24,9 @@ order and costs one shuffle instead of #supersteps × 4.
 Two lanes, one result. ``cluster_rounds`` materializes the working set and
 reads its row count from the parquet footers. A set of at most
 ``2 × max_block_rows`` rows — the largest group the salted scorer ever
-builds — is clustered in one driver pass (``_cluster_small``): one collect,
+builds — is clustered in one driver pass (``_cluster_small``): one collect
+that runs no Python UDF (both lanes read the LSH band index from the
+state's ``band_keys`` column, derived once per row by ``blocking.band_keys``),
 then the same stages in process (``candidate_components`` and
 ``graph.connected_components`` on pandas frames, ``blocking.score_pairs``,
 ``merge_group``). That is the shape of the
@@ -58,36 +60,16 @@ class ClusterRoundConfig:
     # that fits one such group takes cluster_rounds' single-pass lane
     max_block_rows: int = 256
     use_audio: bool = True
-    # round-0 LSH candidate union: catches pairs whose prefix blocking keys
-    # diverged (typo in the first chars, dropped first token — the recall
-    # gap of pure prefix blocking; the reference offers LSH_BLOCKING as an
-    # alternative strategy, we run it as a complement). 12 bands × 4 rows
-    # puts the banding s-curve midpoint at (1/12)^(1/4) ≈ 0.54 Jaccard —
-    # generous recall for true pairs whose blocking prefix diverged (a
-    # dropped first token leaves J ≈ 0.6-0.8); the extra low-J candidates
-    # are cheap because pair scoring is a single narrow materialized pass
-    use_lsh_round0: bool = True
-    lsh_bands: int = 12
-    lsh_rows_per_band: int = 4
-    lsh_seed: int = 42
     # guardrail: candidate components larger than this fall back to
     # (component × prefix-blocking-key) sub-grouping — a chain of borderline
     # candidate edges (e.g. spuriously-similar fingerprints) must never
     # produce an unbounded quadratic merge group
     max_component_rows: int = 512
-    # best-link selection BEFORE connected components (the reference's
-    # BasicLinkFilter, BasicLinkFilterFunction.java:46-79): keep only the
-    # max-sim link per (cluster, neighbor-source-set). Without it, hot
-    # artists chain thousands of above-threshold borderline pairs into one
-    # giant component (measured: 16k rows of a 35k corpus in ONE cc) whose
-    # CC convergence and merge grouping serialize; with it, components are
-    # bounded near the true cluster size
-    use_link_filter: bool = True
 
 
 def _cluster_state(prepared: DataFrame, use_audio: bool) -> DataFrame:
     """Singleton cluster per record: (id, members, sources_mask, label,
-    blocking_key, trigram_set, n_members[, fingerprint])."""
+    blocking_key, trigram_set, band_keys, n_members[, fingerprint])."""
     cols = [
         F.col("id"),
         F.array(F.col("id")).alias("members"),
@@ -95,6 +77,7 @@ def _cluster_state(prepared: DataFrame, use_audio: bool) -> DataFrame:
         F.col("transcript_norm").alias("label"),
         F.col("blocking_key"),
         F.col("trigram_set"),
+        F.col("band_keys"),
         F.lit(1).alias("n_members"),
     ]
     if use_audio and "fingerprint" in prepared.columns:
@@ -286,11 +269,17 @@ def _merge_matches(clusters: DataFrame, matches: DataFrame, cfg: ClusterRoundCon
 
     ``matches`` carries both sides' payloads (src_* / dst_*) from the pair
     join, so the merge is a pure projection — no join back to state needed
-    for the merged rows; untouched rows survive via anti-join.
+    for the merged rows; untouched rows survive via anti-join. Merged rows
+    get the band keys of their fused label; untouched rows keep theirs
+    (derived from their trigram set if ``clusters`` has none).
     """
+    from .blocking import band_keys
+
     touched = matches.select(F.col("src").alias("id")).unionByName(
         matches.select(F.col("dst").alias("id"))
     )
+    if "band_keys" not in clusters.columns:
+        clusters = clusters.withColumn("band_keys", band_keys(F.col("trigram_set")))
     untouched = clusters.join(touched, "id", "left_anti")
     longer = F.length(F.col("src_label")) >= F.length(F.col("dst_label"))
     fused_label = F.when(longer, F.col("src_label")).otherwise(F.col("dst_label"))
@@ -306,6 +295,7 @@ def _merge_matches(clusters: DataFrame, matches: DataFrame, cfg: ClusterRoundCon
         fused_label.alias("label"),
         F.col("blocking_key"),
         trigram_set(fused_label).alias("trigram_set"),
+        band_keys(trigram_set(fused_label)).alias("band_keys"),
         (F.col("src_n_members") + F.col("dst_n_members")).alias("n_members"),
     ]
     if cfg.use_audio and "src_fingerprint" in matches.columns:
@@ -341,42 +331,40 @@ def candidate_components(state, cfg: ClusterRoundConfig):
 
     Components become the merge grouping — every record reachable through
     above-threshold candidates is clusterable with its peers even when
-    their prefix blocking keys diverged (the recall limit of pure prefix
-    blocking).
+    their prefix blocking keys diverged (a typo in the first chars, a
+    dropped first token: the recall limit of pure prefix blocking; the
+    reference offers LSH_BLOCKING as an alternative strategy, we run it as
+    a complement). The LSH pairs share a key of the ``band_keys`` column
+    (``blocking.band_keys``) in a bucket of at most ``LSH_MAX_BUCKET`` rows
+    (``blocking.band_pairs``).
 
     A pandas ``state`` is the single-pass lane's collected working set
-    (with ``_tg`` and ``_bands``): the pass then runs in process
-    (``_local_candidates``) and returns pandas (id, cc) in row order."""
+    (with ``_tg``): the pass then runs in process (``_local_candidates``)
+    and returns pandas (id, cc) in row order."""
     if not isinstance(state, DataFrame):
         return _local_candidates(state, cfg)
-    extra = None
-    if cfg.use_lsh_round0:
-        from .blocking import lsh_pairs
+    from .blocking import band_pairs
 
-        extra = lsh_pairs(
-            state,
-            trigram_col="trigram_set",
-            id_col="id",
-            bands=cfg.lsh_bands,
-            rows_per_band=cfg.lsh_rows_per_band,
-            seed=cfg.lsh_seed,
-        )
+    extra = band_pairs(
+        state.select("id", F.explode("band_keys").alias("_band")), "id"
+    )
     pairs = _round_pairs(state, cfg, extra_pair_ids=extra)
-    if cfg.use_link_filter:
-        # BasicLinkFilter (BasicLinkFilterFunction.java:46-79): an edge
-        # survives only if it is the max-sim link of its src towards dst's
-        # source set AND of its dst towards src's source set; ties by
-        # (src asc, dst asc). Keeps every true-duplicate link (a record's
-        # best match per source IS its duplicate) while cutting the
-        # borderline cross-cluster edges that chain components together.
-        order = [F.desc("agg_sim"), F.asc("src"), F.asc("dst")]
-        w_src = Window.partitionBy("src", "dst_sources_mask").orderBy(*order)
-        w_dst = Window.partitionBy("dst", "src_sources_mask").orderBy(*order)
-        pairs = (
-            pairs.withColumn("_r1", F.row_number().over(w_src))
-            .withColumn("_r2", F.row_number().over(w_dst))
-            .filter((F.col("_r1") == 1) & (F.col("_r2") == 1))
-        )
+    # BasicLinkFilter (BasicLinkFilterFunction.java:46-79): an edge
+    # survives only if it is the max-sim link of its src towards dst's
+    # source set AND of its dst towards src's source set; ties by (src asc,
+    # dst asc). Keeps every true-duplicate link (a record's best match per
+    # source IS its duplicate) while cutting the borderline cross-cluster
+    # edges that chain components together: without it, hot artists chained
+    # 16k rows of a 35k corpus into ONE component whose CC convergence and
+    # merge grouping serialize.
+    order = [F.desc("agg_sim"), F.asc("src"), F.asc("dst")]
+    w_src = Window.partitionBy("src", "dst_sources_mask").orderBy(*order)
+    w_dst = Window.partitionBy("dst", "src_sources_mask").orderBy(*order)
+    pairs = (
+        pairs.withColumn("_r1", F.row_number().over(w_src))
+        .withColumn("_r2", F.row_number().over(w_dst))
+        .filter((F.col("_r1") == 1) & (F.col("_r2") == 1))
+    )
     from .graph import connected_components
 
     return connected_components(
@@ -535,14 +523,14 @@ def _text_bound(cfg: ClusterRoundConfig, use_audio: bool) -> float:
 
 def _local_candidates(pdf, cfg: ClusterRoundConfig):
     """``candidate_components`` in process, over the working set ``pdf``
-    (``_merge_schema`` columns + ``_tg``, the hashed trigram array, and
-    ``_bands``, the LSH band keys — both computed in Spark SQL, as the
-    distributed path computes them):
+    (``_merge_schema`` columns + ``band_keys``, the state's LSH band index,
+    and ``_tg``, the hashed trigram array computed in Spark SQL as the
+    distributed path computes it):
 
     1. candidate pairs: every pair within a non-null blocking key (one
        unsalted group — salting never changes the pair set) ∪ every pair
-       sharing an LSH band key whose bucket holds ≤ ``LSH_MAX_BUCKET``
-       rows (``lsh_pairs``), each pair once;
+       sharing a ``band_keys`` key whose bucket holds ≤ ``LSH_MAX_BUCKET``
+       rows (``band_pairs``), each pair once;
     2. ``blocking.score_pairs`` over them: the source restriction, the
        trigram cosine, the text bound, the fingerprint cosine; the scored
        pairs are written to parquet like the distributed scorer's output
@@ -581,14 +569,13 @@ def _local_candidates(pdf, cfg: ClusterRoundConfig):
 
     for rows in pdf.groupby("blocking_key", sort=False).indices.values():
         add_group(rows)
-    if cfg.use_lsh_round0:
-        buckets: dict[str, list[int]] = {}
-        for i, keys in enumerate(pdf["_bands"]):
-            for k in keys:
-                buckets.setdefault(k, []).append(i)
-        for rows in buckets.values():
-            if len(rows) <= LSH_MAX_BUCKET:
-                add_group(rows)
+    buckets: dict[str, list[int]] = {}
+    for i, keys in enumerate(pdf["band_keys"]):
+        for k in keys:
+            buckets.setdefault(k, []).append(i)
+    for rows in buckets.values():
+        if len(rows) <= LSH_MAX_BUCKET:
+            add_group(rows)
     pair_codes = np.unique(np.concatenate(codes))
 
     # ---- 2. scores, restriction and text bound
@@ -618,7 +605,7 @@ def _local_candidates(pdf, cfg: ClusterRoundConfig):
     pairs = pairs[pairs["agg_sim"] >= cfg.min_sim]
 
     # ---- 4. BasicLinkFilter
-    if cfg.use_link_filter and len(pairs):
+    if len(pairs):
         mask_of = pd.Series(pdf["sources_mask"].to_numpy(), index=ids)
         pairs = pairs.assign(
             _sm=mask_of.loc[pairs["src"]].to_numpy(),
@@ -639,35 +626,21 @@ def _cluster_small(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
     run on the driver over ONE collect, with the same kernels and the same
     result.
 
-    The collect query computes in Spark SQL what the distributed path
-    computes there: the hashed trigram array ``_tg`` and the LSH band
-    keys. Then, in process, ``candidate_components`` (its pandas form) and
+    The collect reads the working set's ``band_keys`` and computes in Spark
+    SQL what the distributed path computes there, the hashed trigram array
+    ``_tg``; it runs no Python UDF. Then, in process,
+    ``candidate_components`` (its pandas form) and
     ``merge_group`` per merge group (the component, or component ×
     blocking key above ``max_component_rows``, as ``concat_ws`` builds
     it); singletons pass through."""
     import numpy as np
     import pandas as pd
 
-    from .blocking import minhash_band_keys
-
     use_audio = cfg.use_audio and "fingerprint" in clusters.columns
     schema = _merge_schema(use_audio)
     cols = schema.fieldNames()
-    extra = [
-        F.array_sort(
-            F.transform(F.col("trigram_set"), lambda t: F.xxhash64(t))
-        ).alias("_tg")
-    ]
-    if cfg.use_lsh_round0:
-        extra.append(
-            minhash_band_keys(
-                F.col("trigram_set"),
-                cfg.lsh_bands,
-                cfg.lsh_rows_per_band,
-                cfg.lsh_seed,
-            ).alias("_bands")
-        )
-    pdf = clusters.select(*cols, *extra).toPandas()
+    tg = F.array_sort(F.transform(F.col("trigram_set"), lambda t: F.xxhash64(t)))
+    pdf = clusters.select(*cols, "band_keys", tg.alias("_tg")).toPandas()
     spark = clusters.sparkSession
     if len(pdf) == 0:
         return spark.createDataFrame([], schema)
@@ -692,19 +665,24 @@ def _cluster_small(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
 
 def _restore_keys(merged: DataFrame) -> DataFrame:
     """Re-key the merged state on its fused labels: the prefix blocking
-    key (so streaming re-keying stays stable) and the trigram set."""
+    key (so streaming re-keying stays stable), the trigram set and its band
+    keys. The band keys stay lazy: a consumer that never reads them prunes
+    the UDF."""
     from ..functions.text import music_blocking_label
+    from .blocking import band_keys
 
-    return merged.withColumn(
-        "blocking_key", music_blocking_label(F.col("label"), 4)
-    ).withColumn("trigram_set", trigram_set(F.col("label")))
+    return (
+        merged.withColumn("blocking_key", music_blocking_label(F.col("label"), 4))
+        .withColumn("trigram_set", trigram_set(F.col("label")))
+        .withColumn("band_keys", band_keys(F.col("trigram_set")))
+    )
 
 
 def cluster_rounds(
     state: DataFrame, cfg: ClusterRoundConfig | None = None
 ) -> DataFrame:
     """Cluster an existing cluster-state DataFrame (id, members,
-    sources_mask, label, blocking_key, trigram_set, n_members
+    sources_mask, label, blocking_key, trigram_set, band_keys, n_members
     [, fingerprint]).
 
     Stage 1 (decomposition): candidate components over blocked ∪ LSH
@@ -712,7 +690,8 @@ def cluster_rounds(
     happens. Stage 2 (merge): per-component local greedy fixpoint — one
     shuffle. The returned state's ``blocking_key`` is restored to the
     prefix key of the fused label (so streaming re-keying stays stable),
-    and ``trigram_set`` is recomputed from the fused label.
+    and ``trigram_set`` and ``band_keys`` are recomputed from the fused
+    label.
 
     Lane choice: the working set is materialized first and its row count
     read from the parquet footers (no Spark job; on storage the driver

@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.similarity import cosine_trigram_from_sets  # noqa: F401 (API surface)
-from .blocking import minhash_band_keys
+from .blocking import band_pairs, minhash_band_keys
 from .graph import connected_components
 
 
@@ -138,7 +138,7 @@ def minhash_lsh_candidates(
     buckets larger than ``max_bucket`` are dropped before the self-join
     (degenerate near-constant signatures would go quadratic; a true
     near-dup pair collides in ~every band, so it still surfaces through a
-    non-degenerate one — same pruning as blocking.lsh_pairs)."""
+    non-degenerate one — ``blocking.band_pairs``)."""
     sh = df.select(
         F.col(id_col).alias("_id"),
         word_shingles(F.col(text_col), shingle_n).alias("_sh"),
@@ -156,21 +156,7 @@ def minhash_lsh_candidates(
             ).alias("_band"),
         )
     )
-    if max_bucket:
-        bucket_sizes = banded.groupBy("_band").agg(F.count(F.lit(1)).alias("_bn"))
-        banded = banded.join(
-            bucket_sizes.filter(F.col("_bn") <= max_bucket), "_band", "left_semi"
-        )
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l._band") == F.col("r._band"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(F.col("l._id").alias("src"), F.col("r._id").alias("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
+    cand = band_pairs(banded, "_id", max_bucket)
     verified = cand.join(
         sh.select(F.col("_id").alias("src"), F.col("_sh").alias("_sh_l")), "src"
     ).join(sh.select(F.col("_id").alias("dst"), F.col("_sh").alias("_sh_r")), "dst")

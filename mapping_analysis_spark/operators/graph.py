@@ -1,13 +1,13 @@
 """Graph operators: connected components + intra-component edge creation.
 
 Re-creates the reference's Gelly ``GSAConnectedComponents`` usage
-(graph/utils/ConnectedComponentIdAdder.java:33-43) with the
-large-star/small-star alternating algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SOCC'14) as a driver loop over
-DataFrames — O(log n) rounds, each round two shuffles, lineage cut with
-localCheckpoint so plans don't grow unboundedly. Semantics identical to the
+(graph/utils/ConnectedComponentIdAdder.java:33-43) as min-label
+propagation plus pointer jumping in a driver loop over DataFrames —
+O(log n) rounds, each round's labels written to parquet with
+``util.materialize`` so plans don't grow unboundedly — with a driver-side
+union-find when the edge list is small. Semantics identical to the
 reference: every vertex is labeled with the minimum vertex id of its
-component (min-id label propagation).
+component.
 
 ``intra_component_edges`` re-creates
 graph/utils/EdgeComputationOnVerticesForKeySelector.java:78-93 (ALL /

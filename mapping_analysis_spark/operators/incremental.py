@@ -149,7 +149,8 @@ def source_addition_clustering(
 
     ``state``/``arrivals`` are cluster-state rows (id, members,
     sources_mask, label, blocking_key, trigram_set, n_members
-    [, fingerprint]); arrivals are typically singletons of one new source.
+    [, band_keys][, fingerprint]); arrivals are typically singletons of one
+    new source. The result carries ``band_keys`` either way.
     Candidates are cross-side only (DataSourceOverlapCheckFilterFunction —
     here: the pair must span state × arrivals), restricted by source
     overlap/count; selection = 'max_both' (reciprocal best) or 'hungarian'

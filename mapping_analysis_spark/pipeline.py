@@ -4,8 +4,8 @@ Spark-first re-creation of the reference's MusicbrainzBenchmark lifecycle
 (analysis-examples/.../MusicbrainzBenchmark.java:55-166) — one lazily
 planned DataFrame program instead of five Flink jobs with JSON handoffs:
 
-  prepare (normalized transcript, blocking key, trigram set, source bit,
-  MFCC fingerprint) → clustering.cluster_rounds (candidate components over
+  prepare (normalized transcript, blocking key, trigram set, LSH band keys,
+  source bit, MFCC fingerprint) → clustering.cluster_rounds (candidate components over
   blocked ∪ LSH pairs scored by trigram cosine + MFCC cosine, mean-agg,
   then a per-component greedy merge) → majority representatives
 
@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from .functions.audio import mfcc_fingerprint
 from .functions.similarity import trigram_set
 from .functions.text import music_blocking_label, simplify, stable_hash64
+from .operators.blocking import band_keys
 from .operators.representatives import create_representatives
 from .schema import SOURCE_BITS
 
@@ -44,13 +45,14 @@ class PipelineConfig:
 
 def prepare(clips: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """Derive engine columns: id (stable 64-bit from clip_id), normalized
-    transcript, blocking key, trigram set, source bit, MFCC fingerprint.
+    transcript, blocking key, trigram set, LSH band keys, source bit, MFCC
+    fingerprint.
 
-    All but the fingerprint are native Columns (whole-stage codegen); the
-    fingerprint is one Arrow-batched pandas UDF per clip — computed ONCE
-    here, before any pair join, so the quadratic pair stage reuses the
-    per-record arrays (the reference recomputes string sims per pair,
-    row-at-a-time)."""
+    All but the band keys and the fingerprint are native Columns
+    (whole-stage codegen); those two are Arrow-batched pandas UDFs —
+    computed ONCE per clip here, in the same stage, before any pair join,
+    so the pair stage and the streaming lookup reuse the per-record arrays
+    (the reference recomputes string sims per pair, row-at-a-time)."""
     cfg = cfg or PipelineConfig()
     out = (
         clips.withColumn("id", stable_hash64(F.col("clip_id")))
@@ -60,6 +62,7 @@ def prepare(clips: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
             music_blocking_label(F.col("transcript"), cfg.blocking_length),
         )
         .withColumn("trigram_set", trigram_set(F.col("transcript")))
+        .withColumn("band_keys", band_keys(F.col("trigram_set")))
         .withColumn(
             "source_bit",
             F.coalesce(

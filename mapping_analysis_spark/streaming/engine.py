@@ -61,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline import PipelineConfig, prepare
-from ..operators.blocking import BAND_KEY_FORMAT, minhash_band_keys
+from ..operators.blocking import BAND_KEY_FORMAT, band_keys
 from ..operators.clustering import ClusterRoundConfig, _cluster_state
 from ..util import parquet_rows
 
@@ -331,17 +331,6 @@ class StreamingERJob:
                 if b < fulls[-2]:
                     self.fs.rmtree(self._version_root(b, kind))
 
-    @staticmethod
-    def _band_keys_expr(rcfg: ClusterRoundConfig):
-        """LSH band keys of the cluster label's trigram set (the state's
-        secondary index for affected-cluster lookup)."""
-        return minhash_band_keys(
-            F.col("trigram_set"),
-            rcfg.lsh_bands,
-            rcfg.lsh_rows_per_band,
-            rcfg.lsh_seed,
-        )
-
     # -- the micro-batch ---------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -415,11 +404,11 @@ class StreamingERJob:
             max_block_rows=pcfg.max_block_rows,
             use_audio=pcfg.use_audio,
         )
+        # the arrivals' band keys were computed once, in prepare
         arrivals = _cluster_state(prepared, rcfg.use_audio)
-        band_expr = self._band_keys_expr(rcfg)
         state = self._load_state(batch_id)
-        # The persisted band keys are equi-joined against freshly computed
-        # arrival keys, so a state written under another key derivation
+        # The persisted band keys are equi-joined against the arrivals'
+        # keys, so a state written under another key derivation
         # (round 2 changed it: murmur → fold-mix) would match none of them.
         # On a format mismatch the index is rebuilt from the trigram sets
         # and a compaction persists it.
@@ -432,19 +421,20 @@ class StreamingERJob:
                 "state index from trigram sets",
                 flush=True,
             )
-            state = state.withColumn("band_keys", band_expr)
+            state = state.withColumn("band_keys", band_keys(F.col("trigram_set")))
             index_rebuilt = True
         # The affected ids are this delta's tombstones. Writing them once,
-        # as ``removed/``, runs the state reconstruct, both semi-joins and
-        # the arrivals' band-key UDF a single time; the working set then
-        # semi-joins the state against that small read-back. A replay
-        # discards this batch's earlier delta, half-written or committed.
+        # as ``removed/``, runs the state reconstruct and both semi-joins a
+        # single time; the working set then semi-joins the state against
+        # that small read-back, keeping each touched row's stored band keys.
+        # A replay discards this batch's earlier delta, half-written or
+        # committed.
         self.fs.rmtree(self._version_root(batch_id, "delta"))
         rows_dir, removed_dir = self._data_dirs(batch_id, "delta")
         if state is not None:
             arr_keys = arrivals.select("blocking_key").distinct()
             arr_bands = (
-                arrivals.select(F.explode(band_expr).alias("_bk")).distinct()
+                arrivals.select(F.explode("band_keys").alias("_bk")).distinct()
             )
             by_key = state.join(arr_keys, "blocking_key", "left_semi").select("id")
             by_band = (
@@ -458,7 +448,7 @@ class StreamingERJob:
         removed = self._write_checked(touched_ids, removed_dir)
         working = arrivals
         if state is not None:
-            touched = state.join(removed, "id", "left_semi").drop("band_keys")
+            touched = state.join(removed, "id", "left_semi")
             working = touched.unionByName(arrivals, allowMissingColumns=True)
 
         # ---- cluster the working set: same candidate components and
@@ -467,14 +457,12 @@ class StreamingERJob:
         from ..operators.clustering import cluster_rounds
 
         clusters = cluster_rounds(working, rcfg)
-        clusters_with_bands = clusters.withColumn("band_keys", band_expr)
-        # ---- delta state write: only this batch's updated clusters next
-        # to the tombstones above — per-batch state writes scale with the
-        # batch. Cluster-count bookkeeping rides the manifests:
+        # ---- delta state write: only this batch's updated clusters (with
+        # the band keys of their fused labels) next to the tombstones above
+        # — per-batch state writes scale with the batch. Cluster-count
+        # bookkeeping rides the manifests:
         # total' = total − |tombstones| + |new rows|.
-        new_rows, n_new, n_removed = self._write_delta(
-            clusters_with_bands, removed, batch_id
-        )
+        new_rows, n_new, n_removed = self._write_delta(clusters, removed, batch_id)
         n_clusters = prev.get("n_clusters_total", 0) - n_removed + n_new
         # ---- periodic compaction: fold the delta chain into a snapshot
         fulls_before = [b for b, k in prior if k == "full"]

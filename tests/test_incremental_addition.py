@@ -42,6 +42,11 @@ def test_source_addition_max_both(spark):
     assert rows[1].sources_mask == 5
     # unmatched on both sides survive untouched
     assert rows[2].members == [2] and rows[11].members == [11]
+    # every row, merged or not, carries the band keys of its trigram set
+    from mapping_analysis_spark.operators.blocking import band_keys
+
+    fresh = out.withColumn("_fresh", band_keys(F.col("trigram_set")))
+    assert fresh.filter(F.col("band_keys") != F.col("_fresh")).count() == 0
 
 
 def test_source_addition_hungarian(spark):

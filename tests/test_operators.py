@@ -1357,6 +1357,7 @@ def _lane_corpus(spark):
 
     from mapping_analysis_spark.functions.similarity import trigram_set
     from mapping_analysis_spark.functions.text import music_blocking_label
+    from mapping_analysis_spark.operators.blocking import band_keys
 
     rng = np.random.default_rng(11)
     song = {s: rng.normal(0, 1, 13) for s in ("city", "ocean", "rain", "misc")}
@@ -1397,6 +1398,7 @@ def _lane_corpus(spark):
             ),
         )
         .withColumn("trigram_set", trigram_set(F.col("label")))
+        .withColumn("band_keys", band_keys(F.col("trigram_set")))
     )
 
 
@@ -1472,6 +1474,39 @@ def test_single_pass_lane_matches_distributed_path(spark, monkeypatch):
     assert (20, 21) in members and (22,) in members  # tie: lower dst wins
     sizes = candidate_components(state, off).groupBy("cc").count()
     assert sizes.agg(F.max("count")).first()[0] > 4
+    state.unpersist()
+
+
+def test_both_lanes_take_lsh_candidates_from_band_keys(spark):
+    """Both clustering lanes read LSH candidates from the state's
+    ``band_keys`` column, never from ``trigram_set``: with the band keys
+    of 12 (the LSH-only bridge 10 ↔ 12) emptied, 12 stays a singleton on
+    the single-pass lane and on the distributed path, while 13 (null
+    blocking key, own band keys kept) still joins through LSH."""
+    from mapping_analysis_spark.operators.clustering import (
+        ClusterRoundConfig,
+        cluster_rounds,
+    )
+
+    state = (
+        _lane_corpus(spark)
+        .withColumn(
+            "band_keys",
+            F.when(F.col("id") == 12, F.array().cast("array<string>")).otherwise(
+                F.col("band_keys")
+            ),
+        )
+        .persist()
+    )
+    lane = _cluster_rows(cluster_rounds(state, ClusterRoundConfig(max_component_rows=4)))
+    dist = _cluster_rows(
+        cluster_rounds(state, ClusterRoundConfig(max_component_rows=4, max_block_rows=2))
+    )
+    for rows in (lane, dist):
+        members = {r[1] for r in rows}
+        assert (12,) in members
+        assert any(13 in m and len(m) > 1 for m in members)
+    assert lane == dist
     state.unpersist()
 
 

@@ -491,11 +491,7 @@ def test_band_key_index_rebuild_on_format_change(spark, corpus, tmp_path):
     import json
     import time
 
-    from mapping_analysis_spark.operators.blocking import (
-        BAND_KEY_FORMAT,
-        minhash_band_keys,
-    )
-    from mapping_analysis_spark.operators.clustering import ClusterRoundConfig
+    from mapping_analysis_spark.operators.blocking import BAND_KEY_FORMAT, band_keys
 
     source_dir, _ = corpus
     work = str(tmp_path / "w")
@@ -540,14 +536,8 @@ def test_band_key_index_rebuild_on_format_change(spark, corpus, tmp_path):
     assert job2._manifest(*entries_after[-1])["band_format"] == BAND_KEY_FORMAT
     # every persisted band_keys row equals a fresh recomputation from its
     # trigram set (i.e. the index is in the CURRENT format everywhere)
-    rcfg = ClusterRoundConfig(min_sim=0.7)
     state = job2.final_state()
-    recomputed = state.withColumn(
-        "_fresh",
-        minhash_band_keys(
-            F.col("trigram_set"), rcfg.lsh_bands, rcfg.lsh_rows_per_band, rcfg.lsh_seed
-        ),
-    )
+    recomputed = state.withColumn("_fresh", band_keys(F.col("trigram_set")))
     bad = recomputed.filter(F.col("band_keys") != F.col("_fresh")).count()
     assert bad == 0
     # and membership still covers every clip exactly once
