@@ -19,8 +19,10 @@ Re-creates (behaviorally) the reference's blocking strategies
   positions per hash family (structure/HashFamily.java:84-100, seeded).
   We use the standard minhash formulation ((a*h+b) mod p, seeded) over
   hashed trigrams — same guarantee (Jaccard-sensitive collisions),
-  deterministic under a fixed seed, and fully expressible with native
-  array Columns + explode + groupBy (no Python in the hot path).
+  deterministic under a fixed seed. The band keys come from one Arrow
+  pandas UDF (``minhash_band_keys``: the trigrams are hashed JVM-side,
+  the signature and keys in one numpy pass per batch); buckets are formed
+  with explode + groupBy.
 
 All pair outputs are canonical: src < dst (the reference's i<j enumeration,
 merge/MergeMusicTripletCreator.java:26-49).
@@ -192,9 +194,8 @@ def _counts_buffer(nn: int):
 def cell_pair_grid(cells, gi: int, gj: int):
     """Candidate index pairs (li, ri) for one salt-cell pair (gi, gj) of a
     block-local scoring group: the full cross grid between the two cells,
-    or the strict upper triangle when gi == gj. Shared by every grouped-map
-    enumerate-and-score kernel (music text scorer, geo 3-channel scorer).
-    int32 indices (group rows ≤ 2·max_block_rows ≪ 2³¹) — halves the
+    or the strict upper triangle when gi == gj (``_salted_groups`` hands
+    them to its kernel). int32 indices (group rows ≤ 2·max_block_rows ≪ 2³¹) — halves the
     bytes/element of every downstream per-pair array."""
     import numpy as np
 
@@ -281,12 +282,11 @@ def pair_intersection_counts(toks, lens, lo, hi):
 def fp_matrix(values, n: int):
     """(n, N_MFCC) float64 fingerprint matrix + per-row norms from an
     iterable of array<float> values (None / empty / any length other than
-    the fixed MFCC dim → zero row, norm 0 = invalid). Shared by the
-    block-local scorer and the LSH-extras pair UDF so both paths compute
-    BIT-IDENTICAL sims (same float64 cast, same einsum reduction order,
-    same rows classified invalid whatever batch they arrive in) — required
-    for the deterministic dropDuplicates over their union. Returns
-    (None, None) when no row is valid."""
+    the fixed MFCC dim → zero row, norm 0 = invalid). A row's validity and
+    norm depend on that row alone, so ``score_pairs`` gives a pair the
+    same ``sim_audio`` whichever group scores it — the distributed
+    clustering lane deduplicates pairs scored in several groups on that.
+    Returns (None, None) when no row is valid."""
     fpm = np.zeros((n, N_MFCC), dtype=np.float64)
     valid = False
     for i, f in enumerate(values):
@@ -316,29 +316,6 @@ def fp_cosine_grid(fpm, norms, li, ri):
     with np.errstate(invalid="ignore", divide="ignore"):
         sim = np.where(denom > 0, dot / denom, np.nan)
     return round6_vec(sim)
-
-
-def fp_pair_cosine(left: Column, right: Column) -> Column:
-    """Pair-wise fingerprint cosine as an Arrow pandas UDF — the LSH-extras
-    twin of the in-group audio channel. MUST stay value-identical to
-    ``fp_cosine_grid`` (it delegates to it), because a pair surfacing both
-    via blocking and via LSH is deduplicated on the full row. NaN marks
-    'no vote'; callers normalize NaN → null before the union."""
-    import numpy as np
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.DoubleType())
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        n = len(a)
-        if n == 0:
-            return pd.Series(dtype="float64")
-        both = list(a) + list(b)
-        fpm, norms = fp_matrix(both, 2 * n)
-        idx = np.arange(n, dtype=np.int64)
-        return pd.Series(fp_cosine_grid(fpm, norms, idx, idx + n))
-
-    return _cos(left, right)
 
 
 def minhash_signature(
@@ -456,6 +433,73 @@ def score_pairs(
     return out
 
 
+def _salted_groups(narrow: DataFrame, max_block_rows: int, kernel, schema) -> DataFrame:
+    """The salt-cell plumbing of the block-local scorers
+    (``salted_block_pair_scores``, ``geo.geo_block_pair_scores``).
+
+    ``narrow`` holds one row per record with ``_id``, a non-null group key
+    ``_key`` and the kernel's payload columns. A group larger than
+    ``max_block_rows`` is split into s = ceil(n/max_block_rows) cells by id
+    hash (the assignment of ``salted_block_pairs``); a record in cell c is
+    replicated to every unordered cell-pair group (i, j), i ≤ j, that
+    contains c, so each cross-cell pair is scored exactly once and no
+    group holds more than 2·max_block_rows rows. ``kernel(pdf, li, ri)``
+    scores one such group's candidate index pairs (``cell_pair_grid``) and
+    returns a pandas frame of ``schema``."""
+    sizes = narrow.groupBy("_key").agg(F.count(F.lit(1)).alias("_block_n"))
+    with_cell = (
+        narrow.join(
+            F.broadcast(sizes.filter(F.col("_block_n") > max_block_rows)),
+            "_key",
+            "left",
+        )
+        .withColumn(
+            "_n_cells",
+            F.coalesce(
+                F.ceil(F.col("_block_n") / F.lit(max_block_rows)).cast("int"),
+                F.lit(1),
+            ),
+        )
+        .withColumn(
+            "_cell", F.pmod(F.xxhash64(F.col("_id")), F.col("_n_cells")).cast("int")
+        )
+    )
+    # every unordered cell pair (i,j), i<=j, that contains this row's cell:
+    # (cell, j) for j in [cell, s) plus (i, cell) for i in [0, cell)
+    pairs_of_cell = F.concat(
+        F.transform(
+            F.sequence(F.col("_cell"), F.col("_n_cells") - 1),
+            lambda j: F.struct(F.col("_cell").alias("i"), j.alias("j")),
+        ),
+        F.when(
+            F.col("_cell") > 0,
+            F.transform(
+                F.sequence(F.lit(0), F.col("_cell") - 1),
+                lambda i: F.struct(i.alias("i"), F.col("_cell").alias("j")),
+            ),
+        ).otherwise(F.expr("array()").cast("array<struct<i:int,j:int>>")),
+    )
+    grouped = with_cell.withColumn("_g", F.explode(pairs_of_cell)).select(
+        *narrow.columns,
+        "_cell",
+        F.col("_g.i").alias("_gi"),
+        F.col("_g.j").alias("_gj"),
+    )
+
+    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+        gi, gj = int(pdf["_gi"].iloc[0]), int(pdf["_gj"].iloc[0])
+        li, ri = cell_pair_grid(pdf["_cell"].to_numpy(), gi, gj)
+        return kernel(pdf, li, ri)
+
+    from ..util import parallel_grouped
+
+    return (
+        parallel_grouped(grouped, "_key", "_gi", "_gj")
+        .groupBy("_key", "_gi", "_gj")
+        .applyInPandas(solve, schema=schema)
+    )
+
+
 def salted_block_pair_scores(
     df: DataFrame,
     key_col: str = "blocking_key",
@@ -492,15 +536,15 @@ def salted_block_pair_scores(
     with task slots while collection shares one heap, which measured as
     the non-scaling term in the N-vs-4N bench. Here each record's payload
     travels once per salt cell (~KB × records, not pairs), pairs are
-    enumerated AND scored inside one vectorized grouped-map pass
-    (numpy binary search, allocation-free), and only pairs with
-    sim ≥ ``emit_min`` leave the stage.
+    enumerated AND scored inside one vectorized grouped-map pass (the
+    ``score_pairs`` kernel: intersection counts from one sort of the
+    group's tokens and a bincount over pair codes,
+    ``pair_intersection_counts``), and only pairs with sim ≥ ``emit_min``
+    leave the stage.
 
-    Salting: blocks larger than ``max_block_rows`` split into s cells by
-    id hash (same assignment as salted_block_pairs); a record in cell c
-    is replicated to every unordered cell-pair group (i,j) containing c,
-    so each cross-cell pair is scored exactly once and any single group
-    holds ≤ 2·max_block_rows rows.
+    Salting (``_salted_groups``): a block larger than ``max_block_rows``
+    is split into salt cells, so any single group holds ≤ 2·max_block_rows
+    rows and each pair is scored exactly once.
 
     Restrictions applied in-group (CheckRestrictionsFilterFunction
     .java:27-50): no source-mask overlap, summed bit counts ≤
@@ -513,19 +557,13 @@ def salted_block_pair_scores(
     and, because the salting size-join can't match null, all of them would
     land in a single O(n²) task.
 
-    ``fp_col`` (round 5): an array<float> fingerprint column scored
-    IN-GROUP as a second channel — output gains ``sim_audio`` (null =
-    no vote), computed by ``fp_cosine_grid`` for exactly the pairs that
-    pass the ``emit_min`` text bound. The fingerprints ride the salt-cell
-    explode (13 floats ≈ 52 B/record — nothing next to the token arrays)
-    and the whole per-group audio working set is ≤ 512 × 13 float64 ≈
-    53 KB, cache-resident; this replaces the former downstream shape (two
-    hash joins attaching both 13-float arrays to every surviving PAIR row
-    + an interpreted JVM fold), which materialized per-pair arrays and was
-    one of the DRAM-bound python/JVM stages behind the N-vs-4N scaling
-    gap.
+    ``fp_col``: an array<float> fingerprint column scored IN-GROUP as a
+    second channel — output gains ``sim_audio`` (NaN = no vote),
+    computed by ``fp_cosine_grid`` for exactly the pairs that pass the
+    ``emit_min`` text bound. The fingerprints ride the salt-cell explode
+    (13 floats ≈ 52 B/record) and the per-group audio working set is
+    ≤ 512 × 13 float64 ≈ 53 KB, cache-resident.
     """
-    import pandas as pd
     from pyspark.sql import types as T
 
     if metric not in ("cosine", "jaccard"):
@@ -535,58 +573,15 @@ def salted_block_pair_scores(
         # ((0 & 0) == 0 and popcount sum 0 ≤ max_sources) for every pair
         df = df.withColumn("_no_mask", F.lit(0).cast("long"))
         mask_col = "_no_mask"
-    df = df.filter(F.col(key_col).isNotNull())
-    sizes = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("_block_n"))
-    sel_cols = [id_col, key_col, mask_col, tokens_col]
-    if fp_col is not None:
-        sel_cols.append(fp_col)
-    with_cell = (
-        df.select(*sel_cols)
-        .join(
-            F.broadcast(sizes.filter(F.col("_block_n") > max_block_rows)),
-            key_col,
-            "left",
-        )
-        .withColumn(
-            "_n_cells",
-            F.coalesce(
-                F.ceil(F.col("_block_n") / F.lit(max_block_rows)).cast("int"),
-                F.lit(1),
-            ),
-        )
-        .withColumn(
-            "_cell", F.pmod(F.xxhash64(F.col(id_col)), F.col("_n_cells")).cast("int")
-        )
-    )
-    # every unordered cell pair (i,j), i<=j, that contains this row's cell:
-    # (cell, j) for j in [cell, s) plus (i, cell) for i in [0, cell)
-    pairs_of_cell = F.concat(
-        F.transform(
-            F.sequence(F.col("_cell"), F.col("_n_cells") - 1),
-            lambda j: F.struct(F.col("_cell").alias("i"), j.alias("j")),
-        ),
-        F.when(
-            F.col("_cell") > 0,
-            F.transform(
-                F.sequence(F.lit(0), F.col("_cell") - 1),
-                lambda i: F.struct(i.alias("i"), F.col("_cell").alias("j")),
-            ),
-        ).otherwise(F.expr("array()").cast("array<struct<i:int,j:int>>")),
-    )
-    group_cols = [
+    cols = [
         F.col(id_col).alias("_id"),
         F.col(key_col).alias("_key"),
         F.col(mask_col).alias("_mask"),
         F.col(tokens_col).alias("_tok"),
-        F.col("_cell"),
-        F.col("_g.i").alias("_gi"),
-        F.col("_g.j").alias("_gj"),
     ]
     if fp_col is not None:
-        group_cols.append(F.col(fp_col).alias("_fp"))
-    grouped = with_cell.withColumn("_g", F.explode(pairs_of_cell)).select(
-        *group_cols
-    )
+        cols.append(F.col(fp_col).alias("_fp"))
+    narrow = df.filter(F.col(key_col).isNotNull()).select(*cols)
     fields = [
         T.StructField("src", T.LongType(), False),
         T.StructField("dst", T.LongType(), False),
@@ -594,12 +589,9 @@ def salted_block_pair_scores(
     ]
     if fp_col is not None:
         fields.append(T.StructField("sim_audio", T.DoubleType(), True))
-    schema = T.StructType(fields)
     use_fp = fp_col is not None
 
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        gi, gj = int(pdf["_gi"].iloc[0]), int(pdf["_gj"].iloc[0])
-        li, ri = cell_pair_grid(pdf["_cell"].to_numpy(), gi, gj)
+    def kernel(pdf: pd.DataFrame, li, ri) -> pd.DataFrame:
         return pd.DataFrame(
             score_pairs(
                 pdf["_id"].to_numpy(),
@@ -614,13 +606,7 @@ def salted_block_pair_scores(
             )
         )
 
-    from ..util import parallel_grouped
-
-    return (
-        parallel_grouped(grouped, "_key", "_gi", "_gj")
-        .groupBy("_key", "_gi", "_gj")
-        .applyInPandas(solve, schema=schema)
-    )
+    return _salted_groups(narrow, max_block_rows, kernel, T.StructType(fields))
 
 
 # Opaque band-key string format produced by minhash_band_keys. Band keys are

@@ -5,11 +5,12 @@ Re-creates the reference's agglomerative clustering (the delta-iteration
 merge, merge/MergeExecution.java:139-297, with DeltaIterateMergeMusicStep
 Function.java:45-163's music similarity and fusion) in two stages:
 
-  1. decomposition (``candidate_components``): blocked pairs ∪ LSH pairs,
-     scored block-locally (trigram cosine + optional MFCC cosine,
-     mean-agg), source-overlap + max-source restrictions
-     (CheckRestrictionsFilterFunction.java:27-50), threshold ≥ min_sim,
-     the BasicLinkFilter best-link selection, then connected components;
+  1. decomposition (``candidate_components``): the candidate groups —
+     blocking keys and LSH band buckets — scored by one kernel,
+     ``blocking.score_pairs`` (source-overlap + max-source restrictions,
+     CheckRestrictionsFilterFunction.java:27-50; trigram cosine +
+     optional MFCC cosine), mean-agg ≥ min_sim, the BasicLinkFilter
+     best-link selection, then connected components;
   2. merge (``merge_components``): per component (size-capped at
      ``max_component_rows``, larger ones sub-grouped by blocking key), the
      exact greedy fixpoint of ``merge.greedy_merge`` — max-sim pair first,
@@ -45,11 +46,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.similarity import (
-    cosine_trigram_from_sets,
-    mean_agg_sim,
-    trigram_set,
-)
+from ..functions.similarity import mean_agg_sim, trigram_set
 
 
 @dataclass
@@ -85,183 +82,93 @@ def _cluster_state(prepared: DataFrame, use_audio: bool) -> DataFrame:
     return prepared.select(*cols)
 
 
-def _round_pairs(
-    clusters: DataFrame,
-    cfg: ClusterRoundConfig,
-    extra_pair_ids: DataFrame | None = None,
-) -> DataFrame:
-    """Candidate pairs between current clusters with restrictions.
-    ``extra_pair_ids`` (src, dst) — e.g. LSH candidates — are unioned in,
-    then the pair set is deduplicated.
+def _round_pairs(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
+    """Scored candidate pairs of the distributed lane: (src, dst, agg_sim,
+    src_sources_mask, dst_sources_mask) for every pair whose mean-agg sim
+    reaches ``min_sim``.
 
-    Scale shape (each step measured on a 35k-clip / 13.9M-candidate run):
+    The reference's two blocking strategies side by side
+    (BlockingStrategy.java:6-12), as the single-pass lane forms them: a
+    candidate group is a blocking key (every row with a non-null key) or a
+    band bucket (the ``band_keys`` rows of a bucket of 2 to
+    ``LSH_MAX_BUCKET`` rows). A bucket whose rows all share one non-null
+    blocking key adds no pair its key's group lacks, so it is left out.
+    Group keys are tagged ``k``/``b``: a blocking key can never meet a band
+    key. One ``salted_block_pair_scores`` call scores every group with the
+    ``score_pairs`` kernel (source restriction, trigram cosine, the text
+    bound, fingerprint cosine). A pair found in several groups gets the
+    same sims from each — its scores depend on its own two rows only — so
+    dropping duplicates on (src, dst) keeps one of identical rows.
 
-    1. Only (id, sources_mask) ride the salted self-join; the mask
-       restriction prunes pairs inside the join.
-    2. The similarity arrays (xxhash64-hashed trigram sets — long
-       intersects, no per-probe UTF8 hashing — and fingerprints) are
-       equi-joined onto the pair ids and consumed IN the same stage; the
-       wide rows are never shuffled.
-    3. Scores are written to a NARROW (src, dst, sims) parquet before the
-       threshold filter: Spark's higher-order array functions are not
-       codegen'd and every downstream reference re-evaluates them, so
-       without the materialize boundary the sims were computed ~3× per
-       candidate (this was the single hottest spot of the whole pipeline).
-    4. Payloads are joined back only for the ~1% surviving pairs.
-    """
+    Scale shape: each record's hashed trigram array (and fingerprint)
+    travels once per group it sits in, times the salt cells — never per
+    pair; the narrow scored pairs are written once (``materialize``) and
+    everything downstream reads that parquet; the two source masks the
+    link filter needs reach the survivors through narrow (id, mask)
+    joins."""
     from ..util import materialize
+    from .blocking import LSH_MAX_BUCKET, salted_block_pair_scores
 
-    payload = ["members", "sources_mask", "label", "trigram_set", "n_members"]
     use_audio = cfg.use_audio and "fingerprint" in clusters.columns
-    if use_audio:
-        payload.append("fingerprint")
-    # Blocked pairs are enumerated, mask-restricted, AND scored inside one
-    # block-local grouped-map pass (salted_block_pair_scores): each
-    # record's hashed trigram array travels once per salt cell — never
-    # per pair. The previous shape (id-only pair materialize, then two
-    # equi-joins attaching the arrays per pair) was only cheap while the
-    # sim side auto-broadcast; past the 64 MB broadcast threshold (~150k
-    # records) it silently became two sort-merge joins shuffling the array
-    # payload once per PAIR (~50 GB at 300k clips / 120M candidates — the
-    # dominant non-scaling term in the N-vs-4N bench).
-    hashed_cols = [
-        "id",
-        "blocking_key",
-        "sources_mask",
-        F.array_sort(
-            F.transform(F.col("trigram_set"), lambda t: F.xxhash64(t))
-        ).alias("_tg"),
-    ]
-    if use_audio:
-        hashed_cols.append("fingerprint")
-    hashed = clusters.select(*hashed_cols)
-    # One block-local pass scores BOTH channels (round 5): the trigram
-    # cosine is the cheap channel and bounds the reachable agg_sim — with
-    # mean aggregation over two channels, a pair needs sim_text ≥
-    # 2·min_sim − 1 to pass the threshold even at a perfect audio sim of
-    # 1.0, so the audio dot runs only on pairs that clear the bound — and
-    # it runs INSIDE the same grouped-map kernel over a ≤ 53 KB per-group
-    # fingerprint matrix (fp_col), so no per-pair float arrays are ever
-    # materialized or joined (the former two hash joins + interpreted JVM
-    # fold were one of the non-scaling DRAM-bound stages in the N-vs-4N
-    # bench). The 1e-6 slack keeps the 6dp HALF_UP rounding boundary on
-    # the kept side, so the survivor set is provably identical to scoring
-    # both channels on every pair.
-    from .blocking import fp_pair_cosine, salted_block_pair_scores
-
-    text_bound = _text_bound(cfg, use_audio)
-    blocked_scored = salted_block_pair_scores(
-        hashed,
-        key_col="blocking_key",
+    payload = ["id", "sources_mask", "_tg"] + (["fingerprint"] if use_audio else [])
+    tg = F.array_sort(F.transform(F.col("trigram_set"), lambda t: F.xxhash64(t)))
+    hashed = clusters.withColumn("_tg", tg).select("blocking_key", "band_keys", *payload)
+    keyed = hashed.filter(F.col("blocking_key").isNotNull()).select(
+        F.concat(F.lit("k"), F.col("blocking_key")).alias("_group"), *payload
+    )
+    banded = hashed.select(
+        "blocking_key", F.explode("band_keys").alias("_band"), *payload
+    )
+    buckets = (
+        banded.groupBy("_band")
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.count("blocking_key").alias("_nk"),
+            F.min("blocking_key").alias("_kmin"),
+            F.max("blocking_key").alias("_kmax"),
+        )
+        .filter(
+            F.col("_n").between(2, LSH_MAX_BUCKET)
+            & ((F.col("_nk") < F.col("_n")) | (F.col("_kmin") != F.col("_kmax")))
+        )
+    )
+    bucketed = banded.join(buckets.select("_band"), "_band", "left_semi").select(
+        F.concat(F.lit("b"), F.col("_band")).alias("_group"), *payload
+    )
+    scored = salted_block_pair_scores(
+        keyed.unionByName(bucketed),
+        key_col="_group",
         id_col="id",
         tokens_col="_tg",
         mask_col="sources_mask",
         max_block_rows=cfg.max_block_rows,
         max_sources=cfg.max_sources,
-        emit_min=text_bound,
+        emit_min=_text_bound(cfg, use_audio),
         fp_col="fingerprint" if use_audio else None,
-    )
+    ).dropDuplicates(["src", "dst"])
+    sim_cols = [F.col("sim_text")]
     if use_audio:
-        # grouped-map float columns carry NaN for 'no vote' (Arrow has no
-        # null-in-float64-from-numpy); normalize to proper nulls so
-        # mean_agg_sim's absent-channel semantics apply and the union
-        # below dedupes on identical rows
-        blocked_scored = blocked_scored.withColumn(
-            "sim_audio",
-            F.when(F.isnan("sim_audio"), F.lit(None)).otherwise(
-                F.col("sim_audio")
-            ),
+        # grouped-map float columns carry NaN for 'no vote'; as nulls they
+        # are the absent channel of mean_agg_sim
+        scored = scored.withColumn(
+            "sim_audio", F.when(~F.isnan("sim_audio"), F.col("sim_audio"))
         )
-    if extra_pair_ids is not None:
-        # LSH extras are few (≈ one per banded record); join the arrays
-        # back by id for them only, then dedupe on the NARROW rows (a pair
-        # can surface both blocked and via LSH; sims are BIT-identical —
-        # the text twin is pinned by test, the audio twin delegates to the
-        # same fp_cosine_grid kernel — so dropDuplicates is deterministic).
-        side_cols = ["id", "_tg"] + (["fingerprint"] if use_audio else [])
-        tg_side = hashed.select(*side_cols)
-        lsh_scored = (
-            extra_pair_ids.select("src", "dst")
-            .join(
-                tg_side.select(
-                    F.col("id").alias("src"),
-                    F.col("_tg").alias("_stg"),
-                    *([F.col("fingerprint").alias("_sfp")] if use_audio else []),
-                ),
-                "src",
-            )
-            .join(
-                tg_side.select(
-                    F.col("id").alias("dst"),
-                    F.col("_tg").alias("_dtg"),
-                    *([F.col("fingerprint").alias("_dfp")] if use_audio else []),
-                ),
-                "dst",
-            )
-            .select(
-                "src",
-                "dst",
-                cosine_trigram_from_sets(F.col("_stg"), F.col("_dtg")).alias(
-                    "sim_text"
-                ),
-                *(
-                    [fp_pair_cosine(F.col("_sfp"), F.col("_dfp")).alias("sim_audio")]
-                    if use_audio
-                    else []
-                ),
-            )
-        )
-        if use_audio:
-            lsh_scored = lsh_scored.withColumn(
-                "sim_audio",
-                F.when(F.isnan("sim_audio"), F.lit(None)).otherwise(
-                    F.col("sim_audio")
-                ),
-            )
-        blocked_scored = blocked_scored.unionByName(lsh_scored).dropDuplicates(
-            ["src", "dst"]
-        )
-    narrow = materialize(blocked_scored)
-    if use_audio:
-        # LSH extras skipped the emit_min bound — apply it here (blocked
-        # rows already cleared it; null sim_text = no-vote passes through)
-        scored_full = narrow.filter(
-            F.col("sim_text").isNull() | (F.col("sim_text") >= text_bound)
-        )
-    else:
-        scored_full = narrow
-    sim_cols = [F.col("sim_text")] + ([F.col("sim_audio")] if use_audio else [])
-    survivors = scored_full.withColumn(
-        "agg_sim", mean_agg_sim(*sim_cols, scale=6)
-    ).filter(F.col("agg_sim") >= cfg.min_sim)
-    side = clusters.select("id", "blocking_key", *[F.col(c) for c in payload])
-    return (
-        survivors.join(
-            side.select(
-                F.col("id").alias("src"),
-                F.col("blocking_key"),
-                *[F.col(c).alias(f"src_{c}") for c in payload],
-            ),
-            "src",
-        )
-        .join(
-            side.select(
-                F.col("id").alias("dst"),
-                *[F.col(c).alias(f"dst_{c}") for c in payload],
-            ),
-            "dst",
-        )
-        # LSH extras skipped the in-join mask restriction — re-check on the
-        # (tiny) surviving set (CheckRestrictionsFilterFunction.java:27-50)
-        .filter(
-            (F.col("src_sources_mask").bitwiseAND(F.col("dst_sources_mask")) == 0)
-            & (
-                F.bit_count(F.col("src_sources_mask"))
-                + F.bit_count(F.col("dst_sources_mask"))
-                <= cfg.max_sources
-            )
-        )
+        sim_cols.append(F.col("sim_audio"))
+    survivors = (
+        materialize(scored)
+        .withColumn("agg_sim", mean_agg_sim(*sim_cols, scale=6))
+        .filter(F.col("agg_sim") >= cfg.min_sim)
     )
+    masks = clusters.select("id", "sources_mask")
+    for side in ("src", "dst"):
+        survivors = survivors.join(
+            masks.select(
+                F.col("id").alias(side),
+                F.col("sources_mask").alias(f"{side}_sources_mask"),
+            ),
+            side,
+        )
+    return survivors
 
 
 def _merge_matches(clusters: DataFrame, matches: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
@@ -328,6 +235,9 @@ def candidate_components(state, cfg: ClusterRoundConfig):
     ConnectedComponentIdAdder chain, preprocessing/DefaultPreprocessing
     .java:39-60): candidate pairs = blocked pairs ∪ LSH pairs, sim ≥
     threshold, then connected components over them. Returns (id, cc).
+    Both lanes score every candidate pair with ``blocking.score_pairs``;
+    the distributed lane runs it in the salted grouped-map scorer over
+    blocking-key groups and band buckets (``_round_pairs``).
 
     Components become the merge grouping — every record reachable through
     above-threshold candidates is clusterable with its peers even when
@@ -335,20 +245,14 @@ def candidate_components(state, cfg: ClusterRoundConfig):
     dropped first token: the recall limit of pure prefix blocking; the
     reference offers LSH_BLOCKING as an alternative strategy, we run it as
     a complement). The LSH pairs share a key of the ``band_keys`` column
-    (``blocking.band_keys``) in a bucket of at most ``LSH_MAX_BUCKET`` rows
-    (``blocking.band_pairs``).
+    (``blocking.band_keys``) in a bucket of at most ``LSH_MAX_BUCKET`` rows.
 
     A pandas ``state`` is the single-pass lane's collected working set
     (with ``_tg``): the pass then runs in process (``_local_candidates``)
     and returns pandas (id, cc) in row order."""
     if not isinstance(state, DataFrame):
         return _local_candidates(state, cfg)
-    from .blocking import band_pairs
-
-    extra = band_pairs(
-        state.select("id", F.explode("band_keys").alias("_band")), "id"
-    )
-    pairs = _round_pairs(state, cfg, extra_pair_ids=extra)
+    pairs = _round_pairs(state, cfg)
     # BasicLinkFilter (BasicLinkFilterFunction.java:46-79): an edge
     # survives only if it is the max-sim link of its src towards dst's
     # source set AND of its dst towards src's source set; ties by (src asc,
@@ -530,12 +434,11 @@ def _local_candidates(pdf, cfg: ClusterRoundConfig):
     1. candidate pairs: every pair within a non-null blocking key (one
        unsalted group — salting never changes the pair set) ∪ every pair
        sharing a ``band_keys`` key whose bucket holds ≤ ``LSH_MAX_BUCKET``
-       rows (``band_pairs``), each pair once;
+       rows, each pair once;
     2. ``blocking.score_pairs`` over them: the source restriction, the
        trigram cosine, the text bound, the fingerprint cosine; the scored
-       pairs are written to parquet like the distributed scorer's output
-       (pyarrow, no Spark job), so a traced run counts them on either
-       lane;
+       pairs are written to parquet (pyarrow, no Spark job) — the same
+       rows the distributed lane's scorer writes;
     3. mean-agg (``mean_agg_sim``: mean of the present channels, 6dp
        HALF_UP) ≥ ``min_sim``;
     4. the BasicLinkFilter: a pair survives if it is first in

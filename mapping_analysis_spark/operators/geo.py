@@ -191,7 +191,7 @@ def geo_block_pair_scores(state: DataFrame, cfg: GeoConfig) -> DataFrame:
     from ..functions.local_sim import round6_vec
     from ..functions.similarity import hashed_trigram_tokens
     from ..functions.types import NO_TYPE, _shaded, shading_generalize
-    from .blocking import cell_pair_grid, pair_intersection_counts
+    from .blocking import _salted_groups, pair_intersection_counts
 
     def _hset(col):
         return F.array_sort(
@@ -218,43 +218,6 @@ def geo_block_pair_scores(state: DataFrame, cfg: GeoConfig) -> DataFrame:
         _hset(shading_generalize(F.col("types"))).alias("_tg2"),
         untyped.alias("_untyped"),
     )
-    sizes = narrow.groupBy("_key").agg(F.count(F.lit(1)).alias("_block_n"))
-    with_cell = (
-        narrow.join(
-            F.broadcast(sizes.filter(F.col("_block_n") > cfg.max_block_rows)),
-            "_key",
-            "left",
-        )
-        .withColumn(
-            "_n_cells",
-            F.coalesce(
-                F.ceil(F.col("_block_n") / F.lit(cfg.max_block_rows)).cast("int"),
-                F.lit(1),
-            ),
-        )
-        .withColumn(
-            "_cell", F.pmod(F.xxhash64(F.col("_id")), F.col("_n_cells")).cast("int")
-        )
-    )
-    pairs_of_cell = F.concat(
-        F.transform(
-            F.sequence(F.col("_cell"), F.col("_n_cells") - 1),
-            lambda j: F.struct(F.col("_cell").alias("i"), j.alias("j")),
-        ),
-        F.when(
-            F.col("_cell") > 0,
-            F.transform(
-                F.sequence(F.lit(0), F.col("_cell") - 1),
-                lambda i: F.struct(i.alias("i"), F.col("_cell").alias("j")),
-            ),
-        ).otherwise(F.expr("array()").cast("array<struct<i:int,j:int>>")),
-    )
-    grouped = with_cell.withColumn("_g", F.explode(pairs_of_cell)).select(
-        "_id", "_key", "_mask", "_tok", "_lat", "_lon", "_tc", "_ts", "_tg2",
-        "_untyped", "_cell",
-        F.col("_g.i").alias("_gi"),
-        F.col("_g.j").alias("_gj"),
-    )
     schema = T.StructType(
         [
             T.StructField("src", T.LongType(), False),
@@ -268,13 +231,9 @@ def geo_block_pair_scores(state: DataFrame, cfg: GeoConfig) -> DataFrame:
          "agg_sim": pd.Series(dtype="float64")}
     )
 
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        gi, gj = int(pdf["_gi"].iloc[0]), int(pdf["_gj"].iloc[0])
+    def kernel(pdf: pd.DataFrame, li, ri) -> pd.DataFrame:
         ids = pdf["_id"].to_numpy()
         masks = pdf["_mask"].to_numpy().astype(np.int64)
-        cells = pdf["_cell"].to_numpy()
-        n = len(ids)
-        li, ri = cell_pair_grid(cells, gi, gj)
         if len(li) == 0:
             return _EMPTY.copy()
         # restriction 1: source masks
@@ -359,13 +318,7 @@ def geo_block_pair_scores(state: DataFrame, cfg: GeoConfig) -> DataFrame:
             }
         )
 
-    from ..util import parallel_grouped
-
-    return (
-        parallel_grouped(grouped, "_key", "_gi", "_gj")
-        .groupBy("_key", "_gi", "_gj")
-        .applyInPandas(solve, schema=schema)
-    )
+    return _salted_groups(narrow, cfg.max_block_rows, kernel, schema)
 
 
 def _merge_geo_block(pdf: pd.DataFrame, min_sim: float, max_sources: int) -> pd.DataFrame:

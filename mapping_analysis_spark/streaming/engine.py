@@ -63,7 +63,7 @@ from pyspark.sql import functions as F
 from ..pipeline import PipelineConfig, prepare
 from ..operators.blocking import BAND_KEY_FORMAT, band_keys
 from ..operators.clustering import ClusterRoundConfig, _cluster_state
-from ..util import parquet_rows
+from ..util import parquet_rows, scratch_scope
 
 
 @dataclass
@@ -334,6 +334,13 @@ class StreamingERJob:
     # -- the micro-batch ---------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        """One micro-batch. Its scratch — the clustering's working set,
+        scored pairs and edge lists — is deleted when it returns or
+        fails, so a long-running job holds one batch's scratch at most."""
+        with scratch_scope():
+            self._process_batch(batch_df, batch_id)
+
+    def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.time()
         cfg = self.cfg
         pcfg = cfg.pipeline

@@ -17,11 +17,14 @@ import atexit
 import os
 import shutil
 import tempfile
+import threading
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
 _BASE: str | None = None
+_SCOPE = threading.local()
 
 
 def _base_dir() -> str:
@@ -37,6 +40,31 @@ def _base_dir() -> str:
     return _BASE
 
 
+def _scratch_dir() -> str:
+    """Where the calling thread's ``materialize`` and ``loop_paths``
+    paths go: its open ``scratch_scope``, else the process-wide base."""
+    return getattr(_SCOPE, "path", None) or _base_dir()
+
+
+@contextmanager
+def scratch_scope():
+    """Scratch that lives as long as a unit of work (a streaming
+    micro-batch): every ``materialize`` / ``loop_paths`` path made on this
+    thread inside the block goes to a fresh directory, deleted when the
+    block exits, on failure as well. The scope belongs to the thread, so
+    two streaming queries of one process — ``foreachBatch`` calls each on
+    its query's own thread — never delete each other's scratch. Nothing
+    used after the block may read from it."""
+    outer = getattr(_SCOPE, "path", None)
+    path = tempfile.mkdtemp(prefix="scope_", dir=_base_dir())
+    _SCOPE.path = path
+    try:
+        yield path
+    finally:
+        _SCOPE.path = outer
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def materialize(df, path: str | None = None) -> DataFrame:
     """Write ``df`` to parquet and return a DataFrame reading it back —
     a hard lineage cut. ``path`` may be provided to reuse/alternate a
@@ -49,7 +77,7 @@ def materialize(df, path: str | None = None) -> DataFrame:
     frame's own schema, so the result lands in the same place, in the
     same form, as the distributed path's."""
     if path is None:
-        path = os.path.join(_base_dir(), uuid.uuid4().hex)
+        path = os.path.join(_scratch_dir(), uuid.uuid4().hex)
     if not isinstance(df, DataFrame):
         from pyspark.sql import SparkSession
 
@@ -103,7 +131,7 @@ def loop_paths(n: int = 2, tag: str = "loop") -> list[str]:
     """n alternating materialization paths for a driver loop (iteration i
     writes paths[i % n], so disk stays bounded while the previous
     iteration's data remains readable)."""
-    base = os.path.join(_base_dir(), f"{tag}_{uuid.uuid4().hex[:8]}")
+    base = os.path.join(_scratch_dir(), f"{tag}_{uuid.uuid4().hex[:8]}")
     return [f"{base}_{i}" for i in range(n)]
 
 

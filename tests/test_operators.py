@@ -1188,11 +1188,14 @@ def test_python_stages_run_one_wave_on_the_slots(spark):
 
 
 def test_mixed_length_fingerprints_score_identically_on_both_audio_paths(spark):
-    """A fingerprint whose length is not the MFCC dim is invalid (no vote)
-    on BOTH audio paths, whichever row a group or an Arrow batch happens
-    to start with: the in-group channel (``fp_col``) and the pair UDF
-    (``fp_pair_cosine``) give bit-identical ``sim_audio`` for every pair,
-    which the deterministic dropDuplicates over blocked ∪ LSH requires."""
+    """A pair's sims do not depend on the group that scores it: the
+    kernel's two callers — the salted grouped map
+    (``salted_block_pair_scores(fp_col=…)``, rows split over salt-cell
+    groups) and ``score_pairs(…, fps=…)`` in process over the whole frame
+    — give bit-identical ``sim_text`` and ``sim_audio`` for every pair,
+    which the distributed clustering lane's dedupe over blocking-key
+    groups and band buckets relies on. A fingerprint whose length is not
+    the MFCC dim is invalid (no vote) whichever row a group starts with."""
     import math
 
     import numpy as np
@@ -1200,9 +1203,8 @@ def test_mixed_length_fingerprints_score_identically_on_both_audio_paths(spark):
     from mapping_analysis_spark.functions.audio import N_MFCC
     from mapping_analysis_spark.functions.similarity import trigram_set
     from mapping_analysis_spark.operators.blocking import (
-        fp_pair_cosine,
         salted_block_pair_scores,
-        salted_block_pairs,
+        score_pairs,
     )
 
     rng = np.random.default_rng(5)
@@ -1224,44 +1226,42 @@ def test_mixed_length_fingerprints_score_identically_on_both_audio_paths(spark):
         return None if v is None or (isinstance(v, float) and math.isnan(v)) else v
 
     got = {
-        (r.src, r.dst): norm(r.sim_audio)
+        (r.src, r.dst): (r.sim_text, norm(r.sim_audio))
         for r in salted_block_pair_scores(
-            df, max_block_rows=64, max_sources=3, emit_min=None, fp_col="fp"
+            df, max_block_rows=8, max_sources=3, emit_min=None, fp_col="fp"
         ).collect()
     }
-    restrict = (
-        (F.col("l.sources_mask").bitwiseAND(F.col("r.sources_mask")) == 0)
-        & (
-            F.bit_count(F.col("l.sources_mask")) + F.bit_count(F.col("r.sources_mask"))
-            <= 3
-        )
+    pdf = df.select("id", "blocking_key", "sources_mask", "_tg", "fp").toPandas()
+    li, ri = np.triu_indices(len(pdf), k=1)
+    keys = pdf["blocking_key"].to_numpy()
+    same = keys[li] == keys[ri]
+    whole = score_pairs(
+        pdf["id"].to_numpy(),
+        pdf["sources_mask"].to_numpy(),
+        list(pdf["_tg"]),
+        li[same],
+        ri[same],
+        3,
+        fps=pdf["fp"],
     )
-    udf = {
-        (r.src, r.dst): norm(r.udf)
-        for r in salted_block_pairs(
-            df, max_block_rows=64, restrict=restrict, payload_cols=["sources_mask", "fp"]
+    ref = {
+        (int(a), int(b)): (float(t), norm(float(u)))
+        for a, b, t, u in zip(
+            whole["src"], whole["dst"], whole["sim_text"], whole["sim_audio"]
         )
-        .select(
-            "src",
-            "dst",
-            fp_pair_cosine(F.col("src_fp"), F.col("dst_fp")).alias("udf"),
-        )
-        .collect()
     }
-    assert set(got) == set(udf) and len(got) > 100
+    assert set(got) == set(ref) and len(got) > 100
     for (a, b), v in got.items():
-        assert v == udf[(a, b)], ((a, b), v, udf[(a, b)])
+        assert v == ref[(a, b)], ((a, b), v, ref[(a, b)])
         valid = a % 3 != 0 and b % 3 != 0
-        assert (v is not None) == valid, ((a, b), v)
+        assert (v[1] is not None) == valid, ((a, b), v)
 
 
 def test_block_local_audio_channel_matches_column_path(spark):
-    """The in-group audio channel (``fp_col``) and the LSH-extras pair UDF
-    (``fp_pair_cosine``) must both reproduce the ``fingerprint_cosine``
-    Column spec at 6dp on the same pairs — and must equal EACH OTHER
-    (they share ``fp_cosine_grid``), which the deterministic
-    dropDuplicates over the blocked ∪ LSH union requires. Covers null
-    fingerprints (no vote) and a zero-norm fingerprint (silent decode)."""
+    """The in-group audio channel (``fp_col``) must reproduce the
+    ``fingerprint_cosine`` Column spec at 6dp on the same pairs. Covers
+    null fingerprints (no vote) and a zero-norm fingerprint (silent
+    decode)."""
     import math
 
     import numpy as np
@@ -1269,7 +1269,6 @@ def test_block_local_audio_channel_matches_column_path(spark):
     from mapping_analysis_spark.functions.audio import fingerprint_cosine
     from mapping_analysis_spark.functions.similarity import trigram_set
     from mapping_analysis_spark.operators.blocking import (
-        fp_pair_cosine,
         salted_block_pair_scores,
         salted_block_pairs,
     )
@@ -1320,16 +1319,10 @@ def test_block_local_audio_channel_matches_column_path(spark):
         "src",
         "dst",
         fingerprint_cosine(F.col("src_fp"), F.col("dst_fp")).alias("spec"),
-        fp_pair_cosine(F.col("src_fp"), F.col("dst_fp")).alias("udf"),
     )
-    spec = {}
-    udf = {}
-    for r in spec_pairs.collect():
-        spec[(r.src, r.dst)] = norm(r.spec)
-        udf[(r.src, r.dst)] = norm(r.udf)
+    spec = {(r.src, r.dst): norm(r.spec) for r in spec_pairs.collect()}
     assert set(got) == set(spec) and len(got) > 100
     for p in spec:
-        assert got[p] == udf[p], (p, got[p], udf[p])  # shared kernel: exact
         if spec[p] is None:
             assert got[p] is None, p
         else:
@@ -1424,8 +1417,9 @@ def test_single_pass_lane_matches_distributed_path(spark, monkeypatch):
     state takes the distributed path. Both must give identical ids,
     members, masks, labels, keys and fingerprints — across an LSH-only
     bridge, a null blocking key, a link-filter tie and a component above
-    max_component_rows. Both lanes write the same linked-edge parquet, and
-    the gate holds where the footers cannot be read."""
+    max_component_rows. Both lanes write the same scored pairs — each
+    (src, dst) once, with the same sims — and the same linked-edge
+    parquet, and the gate holds where the footers cannot be read."""
     from mapping_analysis_spark import util
     from mapping_analysis_spark.operators import clustering
     from mapping_analysis_spark.operators.clustering import (
@@ -1443,12 +1437,20 @@ def test_single_pass_lane_matches_distributed_path(spark, monkeypatch):
         lambda *a: lane_calls.append(1) or orig(*a),
     )
     sym_rows = []
+    scored = []
     orig_mat = util.materialize
 
     def spy(df, path=None):
         out = orig_mat(df, path)
         if path is not None and "cc_sym" in path:
             sym_rows.append(out.count())
+        if "sim_text" in out.columns:
+            scored.append(
+                sorted(
+                    (r.src, r.dst, r.sim_text, r.sim_audio)
+                    for r in out.select("src", "dst", "sim_text", "sim_audio").collect()
+                )
+            )
         return out
 
     monkeypatch.setattr(util, "materialize", spy)
@@ -1461,6 +1463,9 @@ def test_single_pass_lane_matches_distributed_path(spark, monkeypatch):
     assert lane == dist
     # the linked edges, two rows each, written once per lane
     assert len(sym_rows) == 2 and sym_rows[0] == sym_rows[1] > 0
+    # the scored pairs, written once per lane: the same rows, each pair once
+    assert len(scored) == 2 and scored[0] == scored[1]
+    assert len({(r[0], r[1]) for r in scored[0]}) == len(scored[0]) > 0
     # storage whose footers the driver cannot read: the gate counts instead
     monkeypatch.setattr(util, "parquet_rows", lambda path: None)
     assert _cluster_rows(cluster_rounds(state, on)) == lane

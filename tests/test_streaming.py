@@ -643,7 +643,8 @@ def test_soak_50_batches_bounded_state_and_midstream_restart(
     """100-TB operation is a months-long stream: drive 50 micro-batches
     through the engine and assert (a) the state directory stays bounded by
     the compaction/retirement policy, (b) version manifests stay small and
-    fixed-shape, with no global metadata blob, (c) a kill at ~batch 40 +
+    fixed-shape, with no global metadata blob, (c) the process's scratch
+    does not grow with batches, (d) a kill at ~batch 40 +
     restart replays to the IDENTICAL final state as an uninterrupted run."""
     import json as _json
     import time as _time
@@ -663,10 +664,17 @@ def test_soak_50_batches_bounded_state_and_midstream_restart(
         )
 
     # --- uninterrupted reference run over all 50 batches
+    from mapping_analysis_spark import util
+
+    scratch = util._base_dir()
+    scratch_before = set(os.listdir(scratch))
     ref_work = str(tmp_path / "ref")
     ref_job = StreamingERJob(spark, cfg_for(ref_work))
     q = ref_job.start(available_now=True)
     q.awaitTermination(1200)
+    # every micro-batch deletes its own scratch (working set, scored pairs,
+    # edge lists): the process's scratch dir does not grow with batches
+    assert set(os.listdir(scratch)) - scratch_before == set()
     # "all batches processed" is read off the PERSISTENT output partitions
     # (one per micro-batch) — _committed_versions() intentionally shrinks
     # as retirement prunes superseded state history
@@ -727,6 +735,54 @@ def test_soak_50_batches_bounded_state_and_midstream_restart(
     assert got_members == ref_members
     fulls, deltas, _size = _state_dir_stats(work)
     assert len(fulls) <= 2 and len(deltas) <= 2 * 8
+
+
+def test_scratch_scope_is_per_thread():
+    """``util.scratch_scope`` belongs to its thread: with eight batches
+    open at once (``foreachBatch`` calls each query on its own thread),
+    the half that exit — by failing — delete only their own scratch, the
+    other half still read theirs, and every scope is gone afterwards."""
+    import sys
+    import threading
+
+    from mapping_analysis_spark import util
+
+    n = 8
+    opened, exited = threading.Barrier(n, timeout=30), threading.Barrier(n, timeout=30)
+    roots, kept, errors = [None] * n, [False] * n, []
+
+    def batch(i):
+        try:
+            with util.scratch_scope() as root:
+                roots[i] = root
+                paths = util.loop_paths(2, f"t{i}")
+                for p in paths:
+                    assert os.path.dirname(p) == root
+                    os.makedirs(p)
+                opened.wait()
+                if i % 2:
+                    raise RuntimeError("batch failed")
+                exited.wait()
+                kept[i] = all(os.path.isdir(p) for p in paths)
+        except RuntimeError:
+            exited.wait()
+        except Exception as e:  # noqa: BLE001 — reported by the main thread
+            errors.append(e)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=batch, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads) and errors == []
+    assert kept == [i % 2 == 0 for i in range(n)]
+    assert len(set(roots)) == n and not any(os.path.exists(r) for r in roots)
+    assert util._scratch_dir() == util._base_dir()
 
 
 def test_truncated_delta_with_marker_is_recovered(spark, corpus, tmp_path):
