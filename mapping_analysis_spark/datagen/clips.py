@@ -40,10 +40,12 @@ _LAST = [
     "nunes", "khan", "cachaito", "cline", "bembeya", "toure", "segovia",
     "baez",
 ]
-# 32×32 = 1024 distinct artists: keeps the blocking-key cardinality
-# realistic (the 16-artist v0 vocabulary made 4-char prefix blocks
-# degenerate-quadratic at ≥10^4 clips, which benchmarks the corpus, not
-# the engine)
+# 32×32 = 1024 distinct artists, but the 4-char music blocking key
+# (functions/text.py::music_blocking_label, "the " stripped) sees only the
+# first name: 32 values, each first name with its own 4-char prefix (plus
+# the variants a corrupted transcript makes — a dropped first token, a
+# 0/1 typo in the prefix). The key cardinality is fixed at any corpus
+# size, so every key group grows linearly with the corpus.
 _ARTISTS = [f"{a} {b}" for a in _FIRST for b in _LAST]
 _TITLE_WORDS = [
     "love", "night", "river", "dance", "blue", "light", "heart", "dream",

@@ -79,6 +79,34 @@ def block_pairs(
     return out.select(*select)
 
 
+def _salt_cells(df: DataFrame, key_col: str, id_col: str, max_block_rows: int) -> DataFrame:
+    """``df`` plus its salt cell: ``_n_cells`` = ceil(n/max_block_rows) for
+    a block of n > max_block_rows rows (1 otherwise) and ``_cell`` =
+    pmod(xxhash64(id), _n_cells) — a deterministic assignment by a stable
+    hash of the id, not row_number (no window over the hot key, the thing
+    being salted away). Shared by ``salted_block_pairs`` and the
+    block-local scorers (``_salted_groups``)."""
+    sizes = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("_block_n"))
+    return (
+        df.join(
+            F.broadcast(sizes.filter(F.col("_block_n") > max_block_rows)),
+            key_col,
+            "left",
+        )
+        .withColumn(
+            "_n_cells",
+            F.coalesce(
+                F.ceil(F.col("_block_n") / F.lit(max_block_rows)).cast("int"),
+                F.lit(1),
+            ),
+        )
+        .withColumn(
+            "_cell", F.pmod(F.xxhash64(F.col(id_col)), F.col("_n_cells")).cast("int")
+        )
+        .drop("_block_n")
+    )
+
+
 def salted_block_pairs(
     df: DataFrame,
     key_col: str = "blocking_key",
@@ -91,10 +119,11 @@ def salted_block_pairs(
     blocking/blocksplit/ReplicateAndAssignReducerId.java:27-66).
 
     Blocks larger than ``max_block_rows`` are split into ``s =
-    ceil(n/max_block_rows)`` salt cells by ``row_number % s``. Pairs are
-    enumerated per unordered cell pair (i<=j): the left side replicated to
-    cells (i,i..s-1) joined on (key, cell_i, cell_j) — triangle enumeration,
-    each cross-cell pair produced exactly once, intra-cell pairs via i==j.
+    ceil(n/max_block_rows)`` salt cells by id hash (``_salt_cells``).
+    Pairs are enumerated per unordered cell pair (i<=j): the left side
+    replicated to cells (i,i..s-1) joined on (key, cell_i, cell_j) —
+    triangle enumeration, each cross-cell pair produced exactly once,
+    intra-cell pairs via i==j.
     This bounds any single join-partition's work to ~max_block_rows², the
     same guarantee the reference's custom partitioner provides, but as a
     plain shuffle join that AQE can still re-balance.
@@ -103,23 +132,7 @@ def salted_block_pairs(
     hot key's n² pairs and the work spreading over s·(s+1)/2 tasks.
     """
     cols = [id_col, key_col] + (payload_cols or [])
-    sizes = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("_block_n"))
-    with_cell = (
-        df.select(*cols)
-        .join(F.broadcast(sizes.filter(F.col("_block_n") > max_block_rows)),
-              key_col, "left")
-        .withColumn(
-            "_n_cells",
-            F.coalesce(
-                F.ceil(F.col("_block_n") / F.lit(max_block_rows)).cast("int"),
-                F.lit(1),
-            ),
-        )
-        # deterministic cell assignment: stable hash of id, not row_number
-        # (avoids a window over the hot key — the thing we are salting away)
-        .withColumn("_cell", F.pmod(F.xxhash64(F.col(id_col)), F.col("_n_cells")).cast("int"))
-        .drop("_block_n")
-    )
+    with_cell = _salt_cells(df.select(*cols), key_col, id_col, max_block_rows)
     # Triangle enumeration: the left row in cell c is replicated to every
     # target cell j in [c, n_cells); an unordered cross-cell pair (cell a,
     # cell b, a<b) is produced exactly once — by the left row that lives in
@@ -440,30 +453,13 @@ def _salted_groups(narrow: DataFrame, max_block_rows: int, kernel, schema) -> Da
     ``narrow`` holds one row per record with ``_id``, a non-null group key
     ``_key`` and the kernel's payload columns. A group larger than
     ``max_block_rows`` is split into s = ceil(n/max_block_rows) cells by id
-    hash (the assignment of ``salted_block_pairs``); a record in cell c is
-    replicated to every unordered cell-pair group (i, j), i ≤ j, that
-    contains c, so each cross-cell pair is scored exactly once and no
-    group holds more than 2·max_block_rows rows. ``kernel(pdf, li, ri)``
+    hash (``_salt_cells``); a record in cell c is replicated to every
+    unordered cell-pair group (i, j), i ≤ j, that contains c, so each
+    cross-cell pair is scored exactly once and no group holds more than
+    2·max_block_rows rows. ``kernel(pdf, li, ri)``
     scores one such group's candidate index pairs (``cell_pair_grid``) and
     returns a pandas frame of ``schema``."""
-    sizes = narrow.groupBy("_key").agg(F.count(F.lit(1)).alias("_block_n"))
-    with_cell = (
-        narrow.join(
-            F.broadcast(sizes.filter(F.col("_block_n") > max_block_rows)),
-            "_key",
-            "left",
-        )
-        .withColumn(
-            "_n_cells",
-            F.coalesce(
-                F.ceil(F.col("_block_n") / F.lit(max_block_rows)).cast("int"),
-                F.lit(1),
-            ),
-        )
-        .withColumn(
-            "_cell", F.pmod(F.xxhash64(F.col("_id")), F.col("_n_cells")).cast("int")
-        )
-    )
+    with_cell = _salt_cells(narrow, "_key", "_id", max_block_rows)
     # every unordered cell pair (i,j), i<=j, that contains this row's cell:
     # (cell, j) for j in [cell, s) plus (i, cell) for i in [0, cell)
     pairs_of_cell = F.concat(

@@ -23,10 +23,11 @@ combined source count exceeds the limit (CheckRestrictionsFilterFunction
 .java:27-50); recompute sims of surviving neighbor pairs against the merged
 cluster; repeat until no pair ≥ threshold remains.
 
-``greedy_merge`` is the engine's one copy of this fixpoint. The music
-merge (clustering.merge_components), the geo merge (geo._merge_geo_block)
-and the keyed-state stream (via ``greedy_merge_block``) plug in only their
-own similarity and fusion, as the reference's domains do.
+``greedy_merge`` is the engine's one copy of this fixpoint, with two
+callers that plug in only their own similarity and fusion, as the
+reference's domains do: the music merge (``clustering.merge_group``, the
+solve of both clustering lanes, of ``merge_execution`` and of the
+keyed-state stream) and the geo merge (``geo._merge_geo_block``).
 """
 
 from __future__ import annotations
@@ -34,19 +35,8 @@ from __future__ import annotations
 import heapq
 from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-
-MERGE_RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("members", T.ArrayType(T.LongType()), False),
-        T.StructField("sources_mask", T.LongType(), False),
-        T.StructField("label", T.StringType(), True),
-        T.StructField("blocking_key", T.StringType(), True),
-    ]
-)
+from pyspark.sql import functions as F
 
 
 def fuse_default(keep: int, a: dict, b: dict) -> dict:
@@ -121,64 +111,20 @@ def greedy_merge(
     return clusters
 
 
-def greedy_merge_block(
-    pdf: pd.DataFrame,
-    threshold: float,
-    max_sources: int,
-    sim_fn: Callable[[dict, dict], float | None],
-) -> pd.DataFrame:
-    """``greedy_merge`` over one blocking key's rows (id, members,
-    sources_mask, label, blocking_key and any attribute columns ``sim_fn``
-    consumes) with the default fusion; candidate pairs are re-derived
-    locally (the block is small)."""
-    clusters: dict[int, dict] = {}
-    for row in pdf.to_dict("records"):
-        row["members"] = list(row["members"])
-        row.setdefault("n_members", len(row["members"]))
-        clusters[row["id"]] = row
-    cols = ["id", "members", "sources_mask", "label", "blocking_key"]
-    return pd.DataFrame(
-        [
-            {c: cl.get(c) for c in cols}
-            for cl in greedy_merge(clusters, threshold, max_sources, sim_fn).values()
-        ],
-        columns=cols,
-    )
-
-
 def merge_execution(
-    representatives: DataFrame,
-    threshold: float,
-    max_sources: int,
-    sim_fn: Callable[[dict, dict], float | None] | None = None,
-    block_col: str = "blocking_key",
-    extra_cols: list[str] | None = None,
+    representatives: DataFrame, threshold: float, max_sources: int
 ) -> DataFrame:
     """MergeExecution (MergeExecution.java:139-297): greedy agglomerative
-    merge of cluster representatives within each blocking key.
+    merge of cluster representatives within each blocking key — the music
+    merge of ``clustering.merge_components`` on the label channel alone
+    (trigram cosine, the reference's "ct" metric).
 
     ``representatives`` needs: id(long), members(array<long>),
-    sources_mask(long), label(string), blocking_key(string) [+ extra_cols
-    consumed by ``sim_fn``]. Default ``sim_fn`` = cosine over padded
-    character trigram sets of the label (the reference's "ct" metric).
-    """
-    if sim_fn is None:
-        from ..functions.local_sim import cosine_trigram_local
+    sources_mask(long), label(string), blocking_key(string). Returns the
+    merged clusters with ``n_members`` = the member count."""
+    from .clustering import ClusterRoundConfig, merge_components
 
-        def sim_fn(a, b):  # noqa: F811
-            return cosine_trigram_local(a.get("label"), b.get("label"))
-
-    cols = ["id", "members", "sources_mask", "label", block_col] + (extra_cols or [])
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        return greedy_merge_block(pdf, threshold, max_sources, sim_fn)
-
-    from ..util import parallel_grouped
-
-    return (
-        # factor=4: narrow rows, python-CPU-heavy heavy-tailed groups —
-        # finer partitions isolate the big components (see parallel_grouped)
-        parallel_grouped(representatives.select(*cols), block_col, factor=4)
-        .groupBy(block_col)
-        .applyInPandas(solve, schema=MERGE_RESULT_SCHEMA)
+    return merge_components(
+        representatives.withColumn("n_members", F.size("members")),
+        ClusterRoundConfig(min_sim=threshold, max_sources=max_sources, use_audio=False),
     )

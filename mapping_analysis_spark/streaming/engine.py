@@ -52,9 +52,12 @@ tests/test_streaming.py).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import tempfile
 import time
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -523,23 +526,21 @@ class StreamingERJob:
         from ..schema import CLIPS_SCHEMA
         from .metrics import ProgressLogListener
 
-        # engine-level rate/duration log, one JSON line per micro-batch.
-        # The listener appends line-by-line — a driver-LOCAL file by design
-        # (it is diagnostics, not state); with a remote work_dir it lands
-        # under the driver's tmp instead.
+        # engine-level rate/duration log, one JSON line per micro-batch of
+        # this job's query, which the listener picks out by its name (a
+        # fresh one per start, so a restarted job's old listener stays
+        # quiet). The listener appends line-by-line — a driver-LOCAL file by
+        # design (it is diagnostics, not state); with a remote work_dir it
+        # lands under the driver's tmp instead.
+        tag = hashlib.md5(self.cfg.work_dir.encode()).hexdigest()[:8]
+        query_name = f"streaming_er_{tag}_{uuid.uuid4().hex[:8]}"
         if "://" in self.cfg.work_dir:
-            import hashlib
-            import tempfile
-
             log_path = os.path.join(
-                tempfile.gettempdir(),
-                "spark_graft_progress_"
-                + hashlib.md5(self.cfg.work_dir.encode()).hexdigest()[:8]
-                + ".jsonl",
+                tempfile.gettempdir(), f"spark_graft_progress_{tag}.jsonl"
             )
         else:
             log_path = os.path.join(self.cfg.work_dir, "progress.jsonl")
-        self._listener = ProgressLogListener(log_path)
+        self._listener = ProgressLogListener(log_path, query_name)
         self.spark.streams.addListener(self._listener)
         if self.cfg.source_format == "parquet":
             reader = self.spark.readStream.schema(CLIPS_SCHEMA).option(
@@ -561,6 +562,7 @@ class StreamingERJob:
         )
         writer = (
             stream.writeStream.foreachBatch(self.process_batch)
+            .queryName(query_name)
             .option("checkpointLocation", self.cfg.checkpoint_dir)
             .outputMode("update")
         )

@@ -4,15 +4,20 @@ The pure-streaming counterpart of engine.py's foreachBatch driver: cluster
 state lives in Spark's own state store, keyed by blocking key
 (north rule: "incremental connected-components / star-clustering pass
 maintained in a keyed state store"). Per micro-batch and per key, the
-grouped-map function unions the key's stored representatives with the new
-arrivals and re-runs the local greedy merge (merge.greedy_merge_block — the
-exact per-block fixpoint of DeltaIterateMergeMusicStepFunction.java:45-163),
-emitting the key's updated clusters.
+grouped-map function unions the key's stored clusters with the new
+arrivals and re-runs the music merge of both clustering lanes,
+``clustering.merge_group`` (the exact per-block fixpoint of
+DeltaIterateMergeMusicStepFunction.java:45-163: trigram + MFCC cosine,
+longer label, member-weighted mean fingerprint), emitting the key's
+updated clusters. The audio channel votes when the prepared stream
+carries a ``fingerprint`` column; the state then keeps each cluster's
+fused fingerprint.
 
 Blocks are small (bounded by blocking), so the per-key local fixpoint is
 exact and cheap; the shuffle is one exchange on blocking_key per batch —
 identical partitioning every batch, so the state store never re-shuffles.
 
+State per key: one ``array<struct>`` of ``clustering._merge_schema`` rows.
 Output rows: (blocking_key, cluster_id, members, sources_mask, label,
 n_members) for every updated key group.
 """
@@ -21,13 +26,13 @@ from __future__ import annotations
 
 from typing import Any, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..functions.local_sim import cosine_trigram_local, cosine_vec_local, mean_agg_local
-from ..operators.merge import greedy_merge_block
+from ..operators.clustering import _merge_schema, merge_group
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -40,28 +45,21 @@ OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-# state = one row per cluster, members/label flattened to json-ish arrays
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ids", T.ArrayType(T.LongType()), True),
-        T.StructField("members_flat", T.ArrayType(T.LongType()), True),
-        T.StructField("members_len", T.ArrayType(T.IntegerType()), True),
-        T.StructField("masks", T.ArrayType(T.LongType()), True),
-        T.StructField("labels", T.ArrayType(T.StringType()), True),
-    ]
-)
+
+def _plain(v):
+    """A state value as plain Python (the JVM unpickler rejects numpy
+    scalars and arrays)."""
+    if isinstance(v, np.generic):
+        return v.item()
+    if isinstance(v, (list, np.ndarray)):
+        return [_plain(x) for x in v]
+    return v
 
 
-def _default_sim(a: dict, b: dict) -> float | None:
-    return mean_agg_local(
-        cosine_trigram_local(a.get("label"), b.get("label")),
-        cosine_vec_local(a.get("fingerprint"), b.get("fingerprint")),
-    )
-
-
-def make_cluster_fn(threshold: float, max_sources: int):
+def make_cluster_fn(threshold: float, max_sources: int, use_audio: bool):
     """Build the (key, pdfs, state) → pdf iterator for
     ``applyInPandasWithState``."""
+    cols = _merge_schema(use_audio).fieldNames()
 
     def fn(
         key: tuple[Any, ...],
@@ -69,62 +67,30 @@ def make_cluster_fn(threshold: float, max_sources: int):
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         blocking_key = key[0]
-        # restore prior clusters for this key
-        clusters: list[dict] = []
+        frames = []
         if state.exists:
-            ids, members_flat, members_len, masks, labels = state.get
-            pos = 0
-            for i, cid in enumerate(ids):
-                ln = members_len[i]
-                clusters.append(
-                    {
-                        "id": cid,
-                        "members": list(members_flat[pos : pos + ln]),
-                        "sources_mask": masks[i],
-                        "label": labels[i],
-                        "blocking_key": blocking_key,
-                    }
-                )
-                pos += ln
+            frames.append(pd.DataFrame([tuple(r) for r in state.get[0]], columns=cols))
         for pdf in pdfs:
-            for row in pdf.to_dict("records"):
-                clusters.append(
-                    {
-                        "id": row["id"],
-                        "members": [row["id"]],
-                        "sources_mask": row["source_bit"],
-                        "label": row["transcript_norm"],
-                        "blocking_key": blocking_key,
-                    }
-                )
-        if not clusters:
-            return
-        merged = greedy_merge_block(
-            pd.DataFrame(clusters),
-            threshold=threshold,
-            max_sources=max_sources,
-            sim_fn=_default_sim,
-        )
-        recs = merged.to_dict("records")
-        state.update(
-            (
-                [int(r["id"]) for r in recs],
-                [int(m) for r in recs for m in r["members"]],
-                [len(r["members"]) for r in recs],
-                [int(r["sources_mask"]) for r in recs],
-                [r["label"] for r in recs],
+            arrivals = pd.DataFrame(
+                {
+                    "id": pdf["id"],
+                    "members": [[i] for i in pdf["id"]],
+                    "sources_mask": pdf["source_bit"],
+                    "label": pdf["transcript_norm"],
+                    "blocking_key": blocking_key,
+                    "n_members": 1,
+                }
             )
+            if use_audio:
+                arrivals["fingerprint"] = pdf["fingerprint"]
+            frames.append(arrivals)
+        merged = merge_group(
+            pd.concat(frames, ignore_index=True), threshold, max_sources, use_audio
         )
-        yield pd.DataFrame(
-            {
-                "blocking_key": [blocking_key] * len(recs),
-                "cluster_id": [int(r["id"]) for r in recs],
-                "members": [list(r["members"]) for r in recs],
-                "sources_mask": [int(r["sources_mask"]) for r in recs],
-                "label": [r["label"] for r in recs],
-                "n_members": [len(r["members"]) for r in recs],
-            }
+        state.update(
+            ([tuple(_plain(v) for v in r) for r in merged.itertuples(index=False)],)
         )
+        yield merged.rename(columns={"id": "cluster_id"})[OUTPUT_SCHEMA.fieldNames()]
 
     return fn
 
@@ -137,14 +103,20 @@ def stateful_cluster_stream(
 ) -> DataFrame:
     """Attach the keyed-state clustering to a *prepared* streaming
     DataFrame (must carry id, transcript_norm, blocking_key, source_bit,
-    event_time)."""
+    event_time; a ``fingerprint`` column turns the audio channel on)."""
+    use_audio = "fingerprint" in prepared_stream.columns
+    state_schema = T.StructType(
+        [T.StructField("clusters", T.ArrayType(_merge_schema(use_audio)), False)]
+    )
+    cols = ["id", "transcript_norm", "blocking_key", "source_bit", "event_time"]
     return (
         prepared_stream.withWatermark("event_time", watermark)
+        .select(*cols + (["fingerprint"] if use_audio else []))
         .groupBy("blocking_key")
         .applyInPandasWithState(
-            make_cluster_fn(threshold, max_sources),
+            make_cluster_fn(threshold, max_sources, use_audio),
             outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
+            stateStructType=state_schema,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )

@@ -308,27 +308,22 @@ def test_hungarian_selection_spark(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_greedy_merge_block_order_and_restrictions():
-    from mapping_analysis_spark.operators.merge import greedy_merge_block
+def test_merge_group_order_and_restrictions():
+    from mapping_analysis_spark.operators.clustering import merge_group
 
     pdf = pd.DataFrame(
         [
             {"id": 1, "members": [1], "sources_mask": 1, "label": "alpha beta",
-             "blocking_key": "alph"},
+             "blocking_key": "alph", "n_members": 1},
             {"id": 2, "members": [2], "sources_mask": 2, "label": "alpha beta",
-             "blocking_key": "alph"},
+             "blocking_key": "alph", "n_members": 1},
             {"id": 3, "members": [3], "sources_mask": 1, "label": "alpha beta",
-             "blocking_key": "alph"},  # same source as 1 → can't join 1
+             "blocking_key": "alph", "n_members": 1},  # same source as 1 → can't join 1
             {"id": 4, "members": [4], "sources_mask": 4, "label": "unrelated",
-             "blocking_key": "alph"},
+             "blocking_key": "alph", "n_members": 1},
         ]
     )
-    from mapping_analysis_spark.functions.local_sim import cosine_trigram_local
-
-    out = greedy_merge_block(
-        pdf, threshold=0.8, max_sources=5,
-        sim_fn=lambda a, b: cosine_trigram_local(a["label"], b["label"]),
-    )
+    out = merge_group(pdf, threshold=0.8, max_sources=5, use_audio=False)
     rows = {r["id"]: r for r in out.to_dict("records")}
     # 1+2 merge first (min ids); 3 can't join (source overlap with 1)
     assert sorted(rows) == [1, 3, 4]

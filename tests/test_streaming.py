@@ -387,10 +387,10 @@ def test_native_window_ops_stream(spark, corpus, tmp_path):
     assert all(r.src_clip_id < r.dst_clip_id for r in src_dst)
 
 
-def test_stateful_cluster_stream(spark, corpus, tmp_path):
-    """applyInPandasWithState keyed clustering over micro-batches."""
-    source_dir, full_df = corpus
-    from mapping_analysis_spark.pipeline import PipelineConfig, prepare
+def _run_stateful(spark, source_dir, path, cfg):
+    """Run ``stateful_cluster_stream`` over ``source_dir`` one file per
+    micro-batch; returns its update-mode output, stamped with batch_id."""
+    from mapping_analysis_spark.pipeline import prepare
     from mapping_analysis_spark.schema import CLIPS_SCHEMA
     from mapping_analysis_spark.streaming.stateful import stateful_cluster_stream
 
@@ -399,9 +399,7 @@ def test_stateful_cluster_stream(spark, corpus, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
     )
-    prepared = prepare(stream, PipelineConfig(min_sim=0.7, use_audio=False))
-    clustered = stateful_cluster_stream(prepared, threshold=0.7)
-    path = str(tmp_path / "out")
+    clustered = stateful_cluster_stream(prepare(stream, cfg), threshold=cfg.min_sim)
     # update-mode stateful output → parquet via foreachBatch (append files,
     # stamped with batch id so the final state is reconstructible)
     q = (
@@ -416,7 +414,16 @@ def test_stateful_cluster_stream(spark, corpus, tmp_path):
         .start()
     )
     q.awaitTermination(600)
-    out = spark.read.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_stateful_cluster_stream(spark, corpus, tmp_path):
+    """applyInPandasWithState keyed clustering over micro-batches."""
+    source_dir, full_df = corpus
+    out = _run_stateful(
+        spark, source_dir, str(tmp_path / "out"),
+        PipelineConfig(min_sim=0.7, use_audio=False),
+    )
     assert out.count() > 0
     # each batch's emission for a key REPLACES that key's clusters, so the
     # final state = rows of the latest batch per blocking_key; every clip
@@ -432,6 +439,77 @@ def test_stateful_cluster_stream(spark, corpus, tmp_path):
     assert len(flat) == len(set(flat))
     total = spark.read.parquet(source_dir).count()
     assert len(flat) == total
+
+
+def test_stateful_stream_is_merge_group_per_key(spark, corpus, tmp_path):
+    """With the audio channel on, every key's emission in every micro-batch
+    equals ``clustering.merge_group`` over that key's previous emission
+    (fingerprints as the state stores them, float32) plus its arrivals —
+    the keyed-state stream runs the engine's own merge, batch by batch."""
+    import numpy as np
+    import pandas as pd
+
+    from mapping_analysis_spark.operators.clustering import merge_group
+    from mapping_analysis_spark.pipeline import prepare
+    from mapping_analysis_spark.schema import CLIPS_SCHEMA
+
+    source_dir, _ = corpus
+    cfg = PipelineConfig(min_sim=0.7)
+    out = _run_stateful(spark, source_dir, str(tmp_path / "out"), cfg).toPandas()
+    rows = (
+        prepare(spark.read.schema(CLIPS_SCHEMA).parquet(source_dir), cfg)
+        .select("id", "source_bit", "transcript_norm", "fingerprint")
+        .toPandas()
+        .set_index("id")
+    )
+
+    def clusters(pdf, id_col):
+        return {
+            int(r[id_col]): (
+                sorted(int(m) for m in r["members"]),
+                int(r["sources_mask"]),
+                r["label"],
+                int(r["n_members"]),
+            )
+            for r in pdf.to_dict("records")
+        }
+
+    prev: dict = {}
+    audio_moved = 0
+    for (_bid, key), got in out.groupby(["batch_id", "blocking_key"], dropna=False):
+        before = prev.get(key)
+        seen = set() if before is None else {m for ms in before["members"] for m in ms}
+        new = sorted({int(m) for ms in got["members"] for m in ms} - seen)
+        assert new, (key, "emitted without arrivals")
+        arrivals = pd.DataFrame(
+            {
+                "id": new,
+                "members": [[i] for i in new],
+                "sources_mask": [int(rows.at[i, "source_bit"]) for i in new],
+                "label": [rows.at[i, "transcript_norm"] for i in new],
+                "blocking_key": key,
+                "n_members": 1,
+                "fingerprint": [
+                    None if rows.at[i, "fingerprint"] is None
+                    else np.asarray(rows.at[i, "fingerprint"], dtype=np.float32)
+                    for i in new
+                ],
+            }
+        )
+        group = arrivals if before is None else pd.concat([before, arrivals], ignore_index=True)
+        want = merge_group(group, 0.7, 5, True)
+        assert clusters(got, "cluster_id") == clusters(want, "id"), key
+        audio_moved += clusters(want, "id") != clusters(
+            merge_group(group.drop(columns="fingerprint"), 0.7, 5, False), "id"
+        )
+        want["fingerprint"] = [
+            None if fp is None else [float(np.float32(x)) for x in fp]
+            for fp in want["fingerprint"]
+        ]
+        prev[key] = want
+    assert len(prev) > 1
+    # the audio channel decides at least one key's clusters on this corpus
+    assert audio_moved > 0
 
 
 def test_observe_metrics_and_progress_log(spark, corpus, tmp_path):
@@ -464,6 +542,44 @@ def test_observe_metrics_and_progress_log(spark, corpus, tmp_path):
         _time.sleep(0.5)
     assert progress and all("numInputRows" in p for p in progress)
     assert sum(p["numInputRows"] for p in progress) >= expected
+
+
+def test_progress_log_holds_only_its_own_query(spark, corpus, tmp_path):
+    """Two jobs in one session: each job's progress.jsonl holds the events
+    of its own query only, although every listener of the session hears
+    both queries."""
+    import json
+    import time as _time
+
+    source_dir, _ = corpus
+    jobs = [
+        _run_job(spark, source_dir, str(tmp_path / name), max_files=4)
+        for name in ("a", "b")
+    ]
+    try:
+        logs = [os.path.join(job.cfg.work_dir, "progress.jsonl") for job in jobs]
+        events = [[], []]
+        deadline = _time.time() + 60
+        while _time.time() < deadline:
+            events = [
+                [json.loads(l) for l in open(p)] if os.path.exists(p) else []
+                for p in logs
+            ]
+            if all(any(e["event"] == "terminated" for e in ev) for ev in events):
+                break
+            _time.sleep(0.5)
+        _time.sleep(1.0)  # the bus delivers each event to every listener
+        events = [[json.loads(l) for l in open(p)] for p in logs]
+        ids = [{e["id"] for e in ev} for ev in events]
+        assert all(len(i) == 1 for i in ids), ids
+        assert ids[0] != ids[1]
+        for ev in events:
+            kinds = [e["event"] for e in ev]
+            assert kinds[0] == "started" and kinds[-1] == "terminated"
+            assert kinds.count("progress") >= 1
+    finally:
+        for job in jobs:
+            spark.streams.removeListener(job._listener)
 
 
 def test_batch_observations(spark):
